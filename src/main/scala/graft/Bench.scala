@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Perf protocol (SURVEY §6): run every registered query on
   * SPARK_GRAFT_SF_DIR (default sf0.1), force full execution through the
   * noop sink (real compute, no output IO — count() would let column
@@ -74,14 +72,7 @@ object Bench {
       sys.exit(pb.start().waitFor())
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.Session.local(graft.core.Session.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // per-query stage attribution, collected as ready-made JSON fragments
@@ -307,7 +298,7 @@ object Bench {
       // explicit empty, not remove: UNSET now means "fork the default
       // set" — an inherited default would make the child re-fork forever
       pb.environment().put("SPARK_GRAFT_FORK_HEAVY", "")
-      // child stderr (failure notes, [graft-cc] attribution) stays visible
+      // child stderr (failure notes, Spark errors) stays visible
       pb.redirectError(ProcessBuilder.Redirect.INHERIT)
       val probePre = probeMops() // parent-side, warm JIT: brackets the child
       val membwPre = probeMembw()

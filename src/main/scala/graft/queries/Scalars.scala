@@ -59,7 +59,8 @@ object Scalars extends QueryPack {
     // keys; (b) the range exchange carries the (much wider) derived row.
     // Rows, values and order are identical: the projection neither adds,
     // drops nor reorders rows, and the keys are tie-free. Measured at
-    // sf0.1 (Lab, warm): b6 2.4→0.7 s, i4 2.9→1.1 s.
+    // sf0.1, warm, one JVM (OPTIMIZATION_r21.md, change 2): b6 2.4→0.7 s,
+    // i4 2.9→1.1 s.
     Tables.customer(spark, dir)
       .select(col("c_custkey"), col("c_mktsegment"), col("c_name"))
       .orderBy(col("c_custkey"))

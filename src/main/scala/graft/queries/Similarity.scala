@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Checkpoints, Tables}
+import graft.core.{Attribution, Checkpoints, Tables}
 import graft.core.Det._
 
 /** SURVEY.md §2.K — dedup + similarity search over `embeddings`
@@ -204,7 +204,6 @@ object Similarity extends QueryPack {
     // re-verification against brute-force ground truth at three scale
     // factors (see k12b's doc), not by construction.
     graft.ext.GraftFunctions.register(docs.sparkSession)
-    val tBands = System.nanoTime()
     // set size rides the banding as one extra int per row: the verify
     // stage's Jaccard size bound (J ≥ τ ⇒ |A|,|B| within a factor τ) can
     // then prune pairs from the two-long pair set BEFORE any token array
@@ -214,11 +213,11 @@ object Similarity extends QueryPack {
     val sigs = docs.select(
       col("doc_id"), size(col("ts")).as("__sz"),
       expr(s"graft_minhash_sig(ts, $nHashes)").as("sig"))
-    val bands = Checkpoints.eager(sigs.select(col("doc_id"), col("__sz"),
+    val bands = Attribution.timed("cand_bands")(Checkpoints.eager(sigs.select(
+      col("doc_id"), col("__sz"),
       posexplode(expr(s"transform(sequence(0, ${nHashes / rowsPerBand - 1}), " +
         s"b -> slice(sig, b * $rowsPerBand + 1, $rowsPerBand))")))
-      .toDF("doc_id", "__sz", "band_id", "band_sig"))
-    ccStage("cand_bands", tBands)
+      .toDF("doc_id", "__sz", "band_id", "band_sig")))
     // ^ eager-checkpointed: four consumers below (stats, both self-join
     // sides, star pairs) — without it the 12-minhash signature computation
     // re-runs per branch (measured ~4x the banding cost at sf0.1). On a
@@ -260,16 +259,57 @@ object Similarity extends QueryPack {
     // caller (lshClusters releases it once connectedComponents has
     // materialized the edge set; for k6 the Bench/Verify harness releases
     // all per-query storage between queries)
-    val tPairs = System.nanoTime()
-    val out = Checkpoints.materializeThenRelease(
-      fullPairs.union(starPairs).distinct(), bands)
-    ccStage("cand_pairs", tPairs)
-    out
+    Attribution.timed("cand_pairs")(Checkpoints.materializeThenRelease(
+      fullPairs.union(starPairs).distinct(), bands))
   }
 
   val k6: QueryDef = x("k6_minhash_lsh") { (spark, dir) =>
     lshCandidates(spark, dir,
       sys.env.getOrElse("SPARK_GRAFT_LSH_BUCKET_CAP", "1024").toInt)
+  }
+
+  /** Dictionary-encode `(doc_id, ts ARRAY<STRING>)` to
+    * `(doc_id, ts ARRAY<INT>)` — an EXACT bijection on the corpus
+    * vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are preserved
+    * element for element:
+    *  - non-null tokens get dense ids 0..V−1 via a distributed sort +
+    *    zipWithIndex (fails loud past Int.MaxValue ids rather than
+    *    silently wrapping);
+    *  - a NULL ELEMENT encodes to the reserved id −1 (no real token maps
+    *    there), so null-vs-null still counts as an intersecting element —
+    *    the same semantics the string intersect lane gives sorted arrays
+    *    with nulls, position notwithstanding (−1 sorts first, nulls last;
+    *    intersection size doesn't care);
+    *  - null token SETS stay null and empty stay empty (size(null) must
+    *    stay −1 downstream — HardeningSpec's null-text doc rides this).
+    * Used by the verify join in [[lshClusters]]; the OPTIMIZATION_r22.md
+    * (change 1) A/B measured this same encode, so the measured shape IS
+    * the shipped shape. Caller owns checkpointing. */
+  private[graft] def dictEncodePlan(repDocs: DataFrame): DataFrame = {
+    val spark = repDocs.sparkSession
+    val sortedVocab = repDocs.select(explode(col("ts")).as("tok"))
+      .where(col("tok").isNotNull).distinct().orderBy("tok")
+    val vocab = spark.createDataFrame(
+      sortedVocab.rdd.zipWithIndex.map { case (r, i) =>
+        if (i > Int.MaxValue) throw new IllegalStateException(
+          "dictEncodePlan: vocabulary exceeds Int.MaxValue distinct " +
+            "tokens — int ids would wrap; widen the encoding to the " +
+            "long intersect lane")
+        org.apache.spark.sql.Row(r.getString(0), i.toInt) },
+      StructType(Seq(StructField("tok", StringType),
+        StructField("tid", IntegerType))))
+    val encRows = repDocs.select(col("doc_id"), explode(col("ts")).as("tok"))
+      .join(vocab, Seq("tok"), "left")
+      .groupBy("doc_id").agg(array_sort(collect_list(
+        coalesce(col("tid"), lit(-1)))).as("tsi"))
+    // explode drops null/empty token SETS — restore them with the exact
+    // null/empty split. (collect_list would drop a null tid, which is
+    // why the null ELEMENT is folded to -1 BEFORE the aggregate.)
+    repDocs
+      .join(encRows, Seq("doc_id"), "left")
+      .select(col("doc_id"), when(col("ts").isNotNull,
+        coalesce(col("tsi"), array().cast(ArrayType(IntegerType))))
+        .as("ts"))
   }
 
   /** CLUSTERING-path candidate generator: same banding as
@@ -311,104 +351,46 @@ object Similarity extends QueryPack {
     *     and the verify join (lshClusters previously filtered after the
     *     distinct; same predicate, same surviving set, applied earlier).
     *
-    * Measured at sf0.1 (Lab, one JVM, back-to-back): current shape
-    * 10.6-11.9 s → 3.5 s for a set-identical pair output (3,392,061
-    * pairs). Returns (id_a, id_b), unique EXCEPT that a star pair from an
-    * over-cap band which also co-buckets at an in-cap band arrives once
-    * through each union side (downstream is duplicate-tolerant: verify
-    * re-checks, CC is groupBy-min); already size-filtered; `tau` is the
-    * scaled-integer Jaccard bound from lshClusters. */
+    * Measured at sf0.1 (one JVM, back-to-back; OPTIMIZATION_r21.md,
+    * change 1): previous shape 10.6-11.9 s → 3.5 s for a set-identical
+    * pair output (3,392,061 pairs). Returns (id_a, id_b), unique EXCEPT
+    * that a star pair from an over-cap band which also co-buckets at an
+    * in-cap band arrives once through each union side (downstream is
+    * duplicate-tolerant: verify re-checks, CC is groupBy-min); already
+    * size-filtered; `tau` is the scaled-integer Jaccard bound from
+    * lshClusters. */
   private[graft] def fbwCandidates(docs: DataFrame, bucketCap: Int, tau: Long,
       nHashes: Int = 24, rowsPerBand: Int = 3): DataFrame = {
-    val (pairs, bands, flagged) =
-      fbwCandidatesPlan(docs, bucketCap, tau, nHashes, rowsPerBand)
-    val tPairs = System.nanoTime()
-    val out = Checkpoints.materializeThenRelease(pairs, bands, flagged)
-    ccStage("cand_pairs", tPairs)
-    out
-  }
-
-  /** Plan-only twin for explain dumps (Lab/PlanDump evidence): same plan,
-    * nothing materialized — the intermediate eager checkpoints still run
-    * when the plan is built, so only use this for explain, not timing. */
-  private[graft] def fbwCandidatesPlanOnly(docs: DataFrame, bucketCap: Int,
-      tau: Long): DataFrame = fbwCandidatesPlan(docs, bucketCap, tau, 24, 3)._1
-
-  /** Dictionary-encode `(doc_id, ts ARRAY<STRING>)` to
-    * `(doc_id, ts ARRAY<INT>)` — an EXACT bijection on the corpus
-    * vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are preserved
-    * element for element:
-    *  - non-null tokens get dense ids 0..V−1 via a distributed sort +
-    *    zipWithIndex (fails loud past Int.MaxValue ids rather than
-    *    silently wrapping);
-    *  - a NULL ELEMENT encodes to the reserved id −1 (no real token maps
-    *    there), so null-vs-null still counts as an intersecting element —
-    *    the same semantics the string intersect lane gives sorted arrays
-    *    with nulls, position notwithstanding (−1 sorts first, nulls last;
-    *    intersection size doesn't care);
-    *  - null token SETS stay null and empty stay empty (size(null) must
-    *    stay −1 downstream — HardeningSpec's null-text doc rides this).
-    * Shared by the verify join in [[lshClusters]] and the Lab evidence
-    * experiments so the measured shape IS the shipped shape. Caller owns
-    * checkpointing. */
-  private[graft] def dictEncodePlan(repDocs: DataFrame): DataFrame = {
-    val spark = repDocs.sparkSession
-    val sortedVocab = repDocs.select(explode(col("ts")).as("tok"))
-      .where(col("tok").isNotNull).distinct().orderBy("tok")
-    val vocab = spark.createDataFrame(
-      sortedVocab.rdd.zipWithIndex.map { case (r, i) =>
-        if (i > Int.MaxValue) throw new IllegalStateException(
-          "dictEncodePlan: vocabulary exceeds Int.MaxValue distinct " +
-            "tokens — int ids would wrap; widen the encoding to the " +
-            "long intersect lane")
-        org.apache.spark.sql.Row(r.getString(0), i.toInt) },
-      StructType(Seq(StructField("tok", StringType),
-        StructField("tid", IntegerType))))
-    val encRows = repDocs.select(col("doc_id"), explode(col("ts")).as("tok"))
-      .join(vocab, Seq("tok"), "left")
-      .groupBy("doc_id").agg(array_sort(collect_list(
-        coalesce(col("tid"), lit(-1)))).as("tsi"))
-    // explode drops null/empty token SETS — restore them with the exact
-    // null/empty split. (collect_list would drop a null tid, which is
-    // why the null ELEMENT is folded to -1 BEFORE the aggregate.)
-    repDocs
-      .join(encRows, Seq("doc_id"), "left")
-      .select(col("doc_id"), when(col("ts").isNotNull,
-        coalesce(col("tsi"), array().cast(ArrayType(IntegerType))))
-        .as("ts"))
-  }
-
-  private def fbwCandidatesPlan(docs: DataFrame, bucketCap: Int, tau: Long,
-      nHashes: Int, rowsPerBand: Int): (DataFrame, DataFrame, DataFrame) = {
     graft.ext.GraftFunctions.register(docs.sparkSession)
     val nBands = nHashes / rowsPerBand
-    val tBands = System.nanoTime()
     val sigs = docs.select(
       col("doc_id"), size(col("ts")).as("__sz"),
       expr(s"transform(sequence(0, ${nBands - 1}), b -> xxhash64(b, " +
         s"slice(graft_minhash_sig(ts, $nHashes), b * $rowsPerBand + 1, " +
         s"$rowsPerBand)))").as("bks"))
-    // per-band rows for the bucket stats + the join (same explode shape
-    // as lshCandidatesOf, one long key instead of int+array)
-    val bands = Checkpoints.eager(sigs
-      .select(col("doc_id"), col("__sz"), col("bks"), posexplode(col("bks")))
-      .toDF("doc_id", "__sz", "bks", "band_id", "bk"))
-    val stats = bands.groupBy(col("bk"))
-      .agg(count(lit(1)).as("__n"), min(col("doc_id")).as("__anchor"),
-        min_by(col("__sz"), col("doc_id")).as("__anchor_sz"))
-      .where(col("__n") >= 2)
-    val sized = bands.join(stats, Seq("bk"))
-    // per-doc emittability flags: ems[b] ⇔ the doc's band-b bucket has
-    // occupancy 2..cap (exactly the rows the pairwise join below emits
-    // from). Built once per doc — the HOFs here run over docs, not pairs.
-    val okBands = sized.where(col("__n") <= bucketCap)
-      .groupBy(col("doc_id")).agg(collect_set(col("band_id")).as("__okb"))
-    val flagged = Checkpoints.eager(sigs
-      .join(okBands, Seq("doc_id"), "left")
-      .withColumn("ems", expr(s"transform(sequence(0, ${nBands - 1}), " +
-        "b -> coalesce(array_contains(__okb, b), false))"))
-      .select(col("doc_id"), col("__sz"), col("bks"), col("ems")))
-    ccStage("cand_bands", tBands)
+    val (bands, sized, flagged) = Attribution.timed("cand_bands") {
+      // per-band rows for the bucket stats + the join (same explode shape
+      // as lshCandidatesOf, one long key instead of int+array)
+      val bands = Checkpoints.eager(sigs
+        .select(col("doc_id"), col("__sz"), col("bks"), posexplode(col("bks")))
+        .toDF("doc_id", "__sz", "bks", "band_id", "bk"))
+      val stats = bands.groupBy(col("bk"))
+        .agg(count(lit(1)).as("__n"), min(col("doc_id")).as("__anchor"),
+          min_by(col("__sz"), col("doc_id")).as("__anchor_sz"))
+        .where(col("__n") >= 2)
+      val sized = bands.join(stats, Seq("bk"))
+      // per-doc emittability flags: ems[b] ⇔ the doc's band-b bucket has
+      // occupancy 2..cap (exactly the rows the pairwise join below emits
+      // from). Built once per doc — the HOFs here run over docs, not pairs.
+      val okBands = sized.where(col("__n") <= bucketCap)
+        .groupBy(col("doc_id")).agg(collect_set(col("band_id")).as("__okb"))
+      val flagged = Checkpoints.eager(sigs
+        .join(okBands, Seq("doc_id"), "left")
+        .withColumn("ems", expr(s"transform(sequence(0, ${nBands - 1}), " +
+          "b -> coalesce(array_contains(__okb, b), false))"))
+        .select(col("doc_id"), col("__sz"), col("bks"), col("ems")))
+      (bands, sized, flagged)
+    }
     val exploded = flagged
       .select(col("doc_id"), col("__sz"), col("bks"), col("ems"),
         posexplode(col("bks")))
@@ -447,7 +429,8 @@ object Similarity extends QueryPack {
         col("__sz").cast("long") * 1000000L >= col("__anchor_sz") * tau)
       .select(col("__anchor").as("id_a"), col("doc_id").as("id_b"))
       .distinct()
-    (fullPairs.union(starPairs), bands, flagged)
+    Attribution.timed("cand_pairs")(Checkpoints.materializeThenRelease(
+      fullPairs.union(starPairs), bands, flagged))
   }
 
   /** IVF coarse quantizer: every vector's nearest-centroid cell id.
@@ -614,31 +597,6 @@ object Similarity extends QueryPack {
     semDedupClusters(spark, dir, nCentroids = 16, threshold = 0.35)
   }
 
-  /** Per-stage/per-round progress lines for the clustering paths. They go
-    * to stderr because the bench/verify harnesses run Spark at log level
-    * ERROR; the driver captures stderr, so a slow k12b run attributes its
-    * own wall time (the round-8 bench anomaly was unattributable exactly
-    * because the loop was silent). A clustering call emits O(diameter)
-    * short lines — noise-free in tests, decisive in a post-mortem. */
-  private def ccLog(msg: String): Unit = System.err.println(s"[graft-cc] $msg")
-  private def secsSince(t0: Long): String = f"${(System.nanoTime() - t0) / 1e9}%.2fs"
-  /** Stage timer that records to BOTH channels: the stderr line (live
-    * post-mortem detail) and the Attribution registry (survives the
-    * driver's tail truncation via Bench's final JSON line).
-    *
-    * Disjointness contract: the recorded stages partition the clustering
-    * wall time — collapse_keys → candidates → edges_sym → cc_round (×n)
-    * → expand cover consecutive, non-overlapping intervals, so the
-    * snapshot's values sum to (approximately) the query's wall seconds.
-    * Note edges_sym is where the verify join actually RUNS: the eager
-    * checkpoint of the directed edge set forces the upstream LSH-verify
-    * computation, so its seconds attribute the verify cost, not just the
-    * symmetrize shuffle. */
-  private def ccStage(stage: String, t0: Long): Unit = {
-    graft.core.Attribution.record(stage, (System.nanoTime() - t0) / 1e9)
-    ccLog(s"stage $stage: ${secsSince(t0)}")
-  }
-
   /** Distributed connected components by min-label propagation: each
     * round every node takes the minimum label among itself and its
     * neighbors (one shuffle: edge-join + groupBy-min), repeating until the
@@ -674,22 +632,18 @@ object Similarity extends QueryPack {
     // shuffle sizing; it also means the symmetrizing union inside the
     // loop reads both branches from the checkpoint's blocks, so the
     // upstream runs ONCE, not once per union branch
-    val t0 = System.nanoTime()
-    val directed = Checkpoints.eager(edges.toDF("src", "dst"))
     // edges_sym used to cover this force AND the symmetrize below as one
     // number, which made the round-15 bimodality (18 s vs 150-180 s on
     // back-to-back identical runs) unattributable — the split shows
     // which half the host throttle landed on (it is the verify join: the
     // longest sustained full-width stage in the query)
-    ccStage("verify_force", t0)
+    val directed = Attribution.timed("verify_force")(
+      Checkpoints.eager(edges.toDF("src", "dst")))
     val spark = nodes.sparkSession
     val aqePrev = spark.conf.get("spark.sql.adaptive.enabled")
     val partsPrev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    // fresh timer: edges_sym now covers ONLY the loop's own sizing counts
-    // + symmetrize/repartition checkpoint (verify_force above owns the
-    // upstream force), keeping the stage set disjoint
-    try connectedComponentsLoop(nodes, directed, maxRounds, System.nanoTime())
+    try connectedComponentsLoop(nodes, directed, maxRounds)
     finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
       spark.conf.set("spark.sql.shuffle.partitions", partsPrev)
@@ -697,7 +651,7 @@ object Similarity extends QueryPack {
   }
 
   private def connectedComponentsLoop(nodes: DataFrame, directed: DataFrame,
-      maxRounds: Int, t0: Long): DataFrame = {
+      maxRounds: Int): DataFrame = {
     // Eager checkpoint after every round truncates the LOGICAL plan, not
     // just the computation: without it each round's plan embeds every
     // previous round's, and Catalyst re-optimization time grows
@@ -727,36 +681,39 @@ object Similarity extends QueryPack {
     var (labels, sum) = checkpointWithSum(
       nodes.toDF("vec_id").select(col("vec_id"), col("vec_id").as("lbl")))
     if (sum.isEmpty) { Checkpoints.release(directed); return labels }
-    // Data-proportional round sizing (AQE is off in the loop, so this is
-    // the static stand-in for its coalescing): target ~500k shuffled rows
-    // per task, capped by the session setting — at cluster scale
-    // rows/500k exceeds the cap and the operator-tuned session value
-    // rules; at toy scale this collapses a 32-task round into a few
-    // tasks and removes pure scheduling overhead (counts are free: both
-    // frames are materialized checkpoints).
-    val spark = nodes.sparkSession
-    val nEdges = directed.count()
-    val nNodes = labels.count()
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val loopParts = math.max(1L, math.min(sessionParts.toLong,
-      math.max(2 * nEdges, nNodes) / 500000L + 1)).toInt
-    spark.conf.set("spark.sql.shuffle.partitions", loopParts)
-    ccLog(s"loop sizing: nodes=$nNodes edges=$nEdges parts=$loopParts")
-    // pre-partition the symmetric edge set on the propagation key: every
-    // round joins sym on dst, and a checkpoint (captured with AQE off)
-    // preserves its physical partitioning, so the O(diameter) rounds each
-    // shuffle only the (shrinking) label side — the static edge set never
-    // moves again. At cluster scale this is the difference between one
-    // edge shuffle total and one per round.
-    val sym = Checkpoints.eager(
-      directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
-        .repartition(loopParts, col("dst")))
-    Checkpoints.release(directed)
-    ccStage("edges_sym", t0)
+    // edges_sym: the loop's own sizing counts + the symmetrize/repartition
+    // checkpoint (verify_force above owns the upstream force), keeping the
+    // stage set disjoint
+    val sym = Attribution.timed("edges_sym") {
+      // Data-proportional round sizing (AQE is off in the loop, so this is
+      // the static stand-in for its coalescing): target ~500k shuffled rows
+      // per task, capped by the session setting — at cluster scale
+      // rows/500k exceeds the cap and the operator-tuned session value
+      // rules; at toy scale this collapses a 32-task round into a few
+      // tasks and removes pure scheduling overhead (counts are free: both
+      // frames are materialized checkpoints).
+      val spark = nodes.sparkSession
+      val nEdges = directed.count()
+      val nNodes = labels.count()
+      val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val loopParts = math.max(1L, math.min(sessionParts.toLong,
+        math.max(2 * nEdges, nNodes) / 500000L + 1)).toInt
+      spark.conf.set("spark.sql.shuffle.partitions", loopParts)
+      // pre-partition the symmetric edge set on the propagation key: every
+      // round joins sym on dst, and a checkpoint (captured with AQE off)
+      // preserves its physical partitioning, so the O(diameter) rounds each
+      // shuffle only the (shrinking) label side — the static edge set never
+      // moves again. At cluster scale this is the difference between one
+      // edge shuffle total and one per round.
+      val sym = Checkpoints.eager(
+        directed.union(directed.select(col("dst").as("src"), col("src").as("dst")))
+          .repartition(loopParts, col("dst")))
+      Checkpoints.release(directed)
+      sym
+    }
     var converged = false
     var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val rt = System.nanoTime()
+    while (!converged && rounds < maxRounds) Attribution.timed("cc_round") {
       val nb = sym.join(labels.withColumnRenamed("vec_id", "dst2"),
           col("dst") === col("dst2"))
         .select(col("src").as("vec_id"), col("lbl"))
@@ -773,9 +730,6 @@ object Similarity extends QueryPack {
       converged = nextSum == sum // labels only decrease: equal sum = fixpoint
       sum = nextSum
       rounds += 1
-      graft.core.Attribution.record("cc_round", (System.nanoTime() - rt) / 1e9)
-      ccLog(s"round $rounds: ${secsSince(rt)}" +
-        (if (converged) " (converged)" else ""))
     }
     Checkpoints.release(sym) // labels are self-contained; edges are dead
     // Non-converged labels are WRONG labels (two nodes of one component
@@ -953,52 +907,50 @@ object Similarity extends QueryPack {
     // ~10⁵ pairs/s through the exact intersect on 10²-token arrays, so
     // this floor costs ~1 round's fixed overhead)
     val fullVerifyFloor = math.max(50000L, 4L * nNodes)
-    ccLog(s"frugal: $nPending size-compatible candidate pairs, $nNodes nodes")
     while (nPending > 0 && rnd < maxOuterRounds) {
       rnd += 1
-      val rt = System.nanoTime()
-      // bounded batch: one pair per active left endpoint, partner picked
-      // by xxhash64 order (deterministic; see doc — id order is
-      // adversarial because low-id partners skew false-positive). The
-      // LAST round and the small-remainder case take everything still
-      // pending: the exactness fallback that bounds the loop.
-      val takeAll = rnd == maxOuterRounds || nPending <= fullVerifyFloor
-      val batchCp = Checkpoints.eager(
-        if (takeAll) pending
-        else pending
-          .groupBy(col("id_a"))
-          .agg(min(struct(xxhash64(col("id_a"), col("id_b"), lit(rnd)).as("h"),
-            col("id_b").as("b"))).as("m"))
-          .select(col("id_a"), col("m.b").as("id_b")))
-      val batch = rebased(batchCp)
-      val newEdges = verifyExact(batch)
-      // current components re-enter as star edges; CC over star ∪ new
-      // verified edges = components of everything verified so far
-      val star = labels.where(col("vec_id") =!= col("lbl"))
-        .select(col("vec_id").as("src"), col("lbl").as("dst"))
-      val newLabelsCp = connectedComponents(nodes, star.union(newEdges))
-      Checkpoints.release(labelsCp)
-      labelsCp = newLabelsCp
-      labels = rebased(labelsCp)
-      // prune: the processed batch leaves unconditionally; everything
-      // now intra-component leaves WITHOUT its token arrays ever being
-      // joined — pending rows are two longs throughout
-      val la = labels.select(col("vec_id").as("id_a"), col("lbl").as("__la"))
-      val lb = labels.select(col("vec_id").as("id_b"), col("lbl").as("__lb"))
-      val remaining =
-        if (takeAll) pending.limit(0) // everything was verified this round
-        else pending
-          .join(batch, Seq("id_a", "id_b"), "left_anti")
-          .join(la, "id_a").join(lb, "id_b")
-          .where(col("__la") =!= col("__lb"))
-          .select("id_a", "id_b")
-      val nextPendingCp = Checkpoints.eager(remaining)
-      Checkpoints.release(pendingCp, batchCp)
-      pendingCp = nextPendingCp
-      pending = rebased(pendingCp)
-      nPending = pendingCp.count()
-      graft.core.Attribution.record("frugal_round", (System.nanoTime() - rt) / 1e9)
-      ccLog(s"frugal round $rnd: ${secsSince(rt)}, pending=$nPending")
+      Attribution.timed("frugal_round") {
+        // bounded batch: one pair per active left endpoint, partner picked
+        // by xxhash64 order (deterministic; see doc — id order is
+        // adversarial because low-id partners skew false-positive). The
+        // LAST round and the small-remainder case take everything still
+        // pending: the exactness fallback that bounds the loop.
+        val takeAll = rnd == maxOuterRounds || nPending <= fullVerifyFloor
+        val batchCp = Checkpoints.eager(
+          if (takeAll) pending
+          else pending
+            .groupBy(col("id_a"))
+            .agg(min(struct(xxhash64(col("id_a"), col("id_b"), lit(rnd)).as("h"),
+              col("id_b").as("b"))).as("m"))
+            .select(col("id_a"), col("m.b").as("id_b")))
+        val batch = rebased(batchCp)
+        val newEdges = verifyExact(batch)
+        // current components re-enter as star edges; CC over star ∪ new
+        // verified edges = components of everything verified so far
+        val star = labels.where(col("vec_id") =!= col("lbl"))
+          .select(col("vec_id").as("src"), col("lbl").as("dst"))
+        val newLabelsCp = connectedComponents(nodes, star.union(newEdges))
+        Checkpoints.release(labelsCp)
+        labelsCp = newLabelsCp
+        labels = rebased(labelsCp)
+        // prune: the processed batch leaves unconditionally; everything
+        // now intra-component leaves WITHOUT its token arrays ever being
+        // joined — pending rows are two longs throughout
+        val la = labels.select(col("vec_id").as("id_a"), col("lbl").as("__la"))
+        val lb = labels.select(col("vec_id").as("id_b"), col("lbl").as("__lb"))
+        val remaining =
+          if (takeAll) pending.limit(0) // everything was verified this round
+          else pending
+            .join(batch, Seq("id_a", "id_b"), "left_anti")
+            .join(la, "id_a").join(lb, "id_b")
+            .where(col("__la") =!= col("__lb"))
+            .select("id_a", "id_b")
+        val nextPendingCp = Checkpoints.eager(remaining)
+        Checkpoints.release(pendingCp, batchCp)
+        pendingCp = nextPendingCp
+        pending = rebased(pendingCp)
+        nPending = pendingCp.count()
+      }
     }
     Checkpoints.release(pendingCp)
     labelsCp
@@ -1016,13 +968,18 @@ object Similarity extends QueryPack {
     // at any corpus size. All members of a group share the same sorted
     // array, so first() picks among identical payloads — deterministic
     // in value.
-    val tColl = System.nanoTime()
-    val keyed = Checkpoints.eager(docs
+    //
+    // Stage timers (Attribution): collapse_keys, candidates (split into
+    // cand_bands/cand_pairs), verify_encode, verify_force, edges_sym,
+    // cc_round (×n) and expand are non-overlapping intervals in call
+    // order. verify_force is where the verify join actually RUNS:
+    // connectedComponents' eager checkpoint of the directed edge set
+    // forces it.
+    val keyed = Attribution.timed("collapse_keys")(Checkpoints.eager(docs
       .select(col("doc_id"),
         array_sort(array_distinct(col("ts"))).as("ts"),
         md5(to_json(array_sort(array_distinct(col("ts"))))).as("__k"))
-      ) // reused by reps AND the expansion join
-    ccStage("collapse_keys", tColl)
+      )) // reused by reps AND the expansion join
     // reps has FOUR consumers downstream (the candidate build, both
     // sides of the verify join, the CC node set, the final expansion) —
     // without a checkpoint each one re-runs this groupBy shuffle over
@@ -1069,15 +1026,10 @@ object Similarity extends QueryPack {
     // the verify join's pair shuffle carrying a token array per candidate
     // is the widest shuffle in the dedup path, so every pair killed here
     // never pays it. See fbwCandidates for the measured plan.
-    val tCand = System.nanoTime()
-    val candidates = fbwCandidates(repDocs, bucketCap, tau, nHashes = 24)
-    ccStage("candidates", tCand)
-    // free read off the checkpoint blocks; sizes the verify join's input
-    // (the quantity the τ-prefilter and banding dials actually control)
-    ccLog(s"candidate pairs: ${candidates.count()}")
-    val sizeOk = candidates
+    val candidates = Attribution.timed("candidates")(
+      fbwCandidates(repDocs, bucketCap, tau, nHashes = 24))
     val labels = if (frugal) {
-      frugalComponents(repDocs, sizeOk, threshold)
+      frugalComponents(repDocs, candidates, threshold)
     } else {
       // DICTIONARY-ENCODED verify (round 22): tokens are dense-int-coded
       // corpus-wide before the verify join — the vocabulary (distinct
@@ -1089,25 +1041,24 @@ object Similarity extends QueryPack {
       // preserved (arrays stay distinct); null token sets stay null and
       // empty stay empty, so the threshold filter sees the same values
       // row for row (spec-asserted: edge set byte-identical at sf0.001
-      // AND over the real sf0.1 candidate set in the Lab A/B —
-      // 698,435 edges, except() both ways = 0).
+      // AND over the real sf0.1 candidate set in the OPTIMIZATION_r22.md
+      // (change 1) A/B — 698,435 edges, except() both ways = 0).
       //
       // Why (guide §2.3 narrower types, §5 allocation): the verify
       // join's mid-exchange carries one token array per candidate pair —
       // the widest shuffle in the dedup path at any scale. Int codes cut
       // those bytes ~4x vs the UTF8 tokens, and the per-pair merge walk
       // compares primitives instead of UTF8String byte spans. At sf0.1
-      // the best-case times tie (Lab, 8 reps: strings best 1.70 s, dict
-      // verify best 1.30 + 0.5 encode), but the HIGH modes separate
-      // decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
+      // the best-case times tie (OPTIMIZATION_r22.md change 1, 8 reps in
+      // one JVM: strings best 1.70 s, dict verify best 1.30 + 0.5
+      // encode), but the HIGH modes separate decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
       // while the int verify never left 1.3–1.9 s — the stage's
       // documented GC-bimodality (round 16: 8 s ↔ 42 s) is proportional
       // to allocated bytes, which the encoding shrinks 4x. The encode
       // itself is two small shuffles of the token explosion (~0.5 s
       // warm), amortized against the corpus-sized verify at 100 TB.
-      val tEnc = System.nanoTime()
-      val encDocs = Checkpoints.eager(dictEncodePlan(repDocs))
-      ccStage("verify_encode", tEnc)
+      val encDocs = Attribution.timed("verify_encode")(
+        Checkpoints.eager(dictEncodePlan(repDocs)))
       // SHUFFLE-HASH, not sort-merge: SMJ must SORT the pair stream —
       // 5.5M rows at sf0.1, and after the first join each row carries a
       // token ARRAY, so the second sort runs over wide rows and spills;
@@ -1128,7 +1079,7 @@ object Similarity extends QueryPack {
       // array made this stage GC-BIMODAL (round 16: verify_force 8 s ↔
       // 42 s on identical data, flat probes, tmpfs shuffle unchanged —
       // allocator weather, not IO). The merge walk allocates nothing.
-      val verified = sizeOk
+      val verified = candidates
         .join(encDocs.toDF("id_a", "ts_a").hint("shuffle_hash"), "id_a")
         .join(encDocs.toDF("id_b", "ts_b").hint("shuffle_hash"), "id_b")
         .withColumn("__i", expr("graft_sorted_intersect_size(ts_a, ts_b)"))
@@ -1152,10 +1103,8 @@ object Similarity extends QueryPack {
     // surviving this call is the returned checkpoint (asserted in
     // SimilarityOpsSpec), which the caller owns — Bench/Verify release
     // all per-query storage between queries.
-    val tExp = System.nanoTime()
-    val out = Checkpoints.materializeThenRelease(expand(repClusters), keyed, labels, reps)
-    ccStage("expand", tExp)
-    out
+    Attribution.timed("expand")(
+      Checkpoints.materializeThenRelease(expand(repClusters), keyed, labels, reps))
   }
 
   /** §2.K6→K12 end-to-end — the 100-TB dedup endgame with NO all-pairs

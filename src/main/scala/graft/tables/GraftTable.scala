@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.core.Attribution
 
 /** Minimal ACID table format over parquet — a Delta/Iceberg-style commit
   * log, self-contained (no external jars; the container is offline).
@@ -1342,16 +1343,6 @@ object GraftTable {
     sb.toString
   }
 
-  /** Stage timer into the process-wide Attribution registry (the bench
-    * embeds the per-query snapshot in its gate line): a slow merge-heavy
-    * query arrives with its census/probe/stage/commit split attached. */
-  private def timed[A](stage: String)(f: => A): A = {
-    val t0 = System.nanoTime()
-    try f
-    finally graft.core.Attribution.record(stage,
-      (System.nanoTime() - t0) / 1e9)
-  }
-
   /** Run up to three independent STAGING computations concurrently
     * (optimization guide §2.6 — Spark runs several jobs at once; a table
     * op's data/dv/cdc stagings share no mutable state: each writes its
@@ -1950,7 +1941,7 @@ object GraftTable {
     val localKeyCap = 64 * 1024
     val keyCols = on.map(col)
     val kcDf = ups.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
-    val kcRows = timed("merge_census")(kcDf.collect())
+    val kcRows = Attribution.timed("merge_census")(kcDf.collect())
     val smallKeys = kcRows.length <= localKeyCap
     if (how == "upsert") {
       // SQL MERGE law: one target row must match at most one source row
@@ -2027,7 +2018,7 @@ object GraftTable {
     val probeSrc = keys.withColumn("__up", lit(true))
     val probeAll = delKeys.fold(probeSrc)(dk =>
       probeSrc.unionByName(dk.withColumn("__up", lit(false))))
-    val probed = timed("merge_probe")(
+    val probed = Attribution.timed("merge_probe")(
       if (needMatched)
         base.join(broadcast(probeAll), on, "inner")
           .select(col("__f") +: col("__up") +: keyCols: _*).distinct()
@@ -2149,7 +2140,7 @@ object GraftTable {
     // merge-on-read: victims' positions extend the touched files'
     // vectors, only new rows are staged, no file is removed or rewritten
     val mor = dvEnabled(state) && touchedRel.nonEmpty
-    val (adds, dvActs, cdc) = timed("merge_stage")(staged3(
+    val (adds, dvActs, cdc) = Attribution.timed("merge_stage")(staged3(
       if (mor) morData.map(d => stageDataFiles(toPhysical(d, mapNew),
         root, partitionBy = state.partitionBy)).getOrElse(Nil)
       else stageDataFiles(toPhysical(cowData, mapNew), root,
@@ -2180,7 +2171,7 @@ object GraftTable {
       on.exists(spark.sessionState.conf.resolver(_, p)))
     val addRule = if (keyedParts) dmlAddRule(state, touchedRel, adds)
       else AddsAlwaysConflict
-    timed("merge_commit")(commitDml(root, snap.version,
+    Attribution.timed("merge_commit")(commitDml(root, snap.version,
       txn.map(t => txnAction(t._1, t._2)).toSeq ++ meta ++
         removes ++ adds ++ dvActs ++ cdc,
       depFiles = touchedRel.toSet, addRule,

@@ -8,14 +8,7 @@ import org.scalatest.matchers.should.Matchers
   * suites run sequentially in the forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = graft.core.Session.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }
