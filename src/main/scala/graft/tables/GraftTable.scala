@@ -37,15 +37,18 @@ import graft.core.Attribution
   *    and staged invisibly (never referenced until their commit lands),
   *    so a concurrent writer can never make a reader see a mix of two
   *    versions.
-  *  - Optimistic CONCURRENCY: a writer resolves version V, prepares its
-  *    files, and claims slot V+1. Losing the race throws
-  *    [[ConcurrentWriteException]]; blind appends simply re-resolve and
-  *    retry, while merge/overwrite abort (their rewrite was computed
-  *    against a snapshot that is no longer current).
-  *  - DURABILITY / crash safety: a writer that dies before its commit
-  *    lands leaves only orphan data files and a `.tmp` log entry —
-  *    invisible to every reader, reclaimed by `vacuum`. The published
-  *    table is never in an intermediate state.
+  *  - Optimistic CONCURRENCY: a writer resolves version V, stages its
+  *    files, and claims slot V+1 (one commit path for every op, see
+  *    `transact`). Losing the race is resolved per op: appends re-check
+  *    against the new head and retry, overwrites also recompute their
+  *    removes there; DML, OPTIMIZE and dropPartition replay the commits
+  *    in between and re-commit past disjoint ones, throwing
+  *    [[ConcurrentWriteException]] only on a real conflict.
+  *  - DURABILITY / crash safety: an op whose commit does not land
+  *    deletes the files it staged. Only a writer that dies mid-op leaves
+  *    orphan files and a `.tmp` log entry — invisible to every reader,
+  *    reclaimed by `vacuum`. The published table is never in an
+  *    intermediate state.
   *
   * At 100 TB the log-per-version scheme is exactly what lakehouse
   * formats ship: O(changed files) metadata per commit, no directory
@@ -110,6 +113,15 @@ object GraftTable {
     *   2 = + deletion vectors    3 = + column mapping */
   private val SupportedCkptReader = 3
 
+  /** An add action's logged partition values (empty when it has none). */
+  private def partValuesOf(
+      add: com.fasterxml.jackson.databind.JsonNode): Map[String, String] =
+    if (!add.has("partitionValues")) Map.empty
+    else {
+      val pv = add.get("partitionValues")
+      pv.fieldNames().asScala.map(c => c -> pv.get(c).asText()).toMap
+    }
+
   /** Full replayed state at one version (internal). */
   private final class LogState {
     val files = scala.collection.mutable.LinkedHashSet.empty[String]
@@ -162,11 +174,7 @@ object GraftTable {
         fileCounts(p) = a.get("numRecords").asLong()
         if (a.has("size")) fileSizes(p) = a.get("size").asLong()
         if (a.has("stats")) fileStats(p) = a.get("stats")
-        if (a.has("partitionValues")) {
-          val pv = a.get("partitionValues")
-          filePartVals(p) = pv.fieldNames().asScala
-            .map(c => c -> pv.get(c).asText()).toMap
-        }
+        if (a.has("partitionValues")) filePartVals(p) = partValuesOf(a)
       } else if (n.has("remove")) {
         val p = n.get("remove").get("path").asText()
         files -= p; fileStats -= p; fileCounts -= p; fileSizes -= p
@@ -312,8 +320,7 @@ object GraftTable {
     * streaming ingest checkpoints every N batches; `truncateHistory`
     * checkpoints before dropping old logs. */
   def checkpoint(root: String): Long = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     writeCheckpoint(root, latest)
     latest
   }
@@ -377,8 +384,7 @@ object GraftTable {
     * the dropped versions referenced. The lakehouse retention lifecycle:
     * checkpoint → truncate → vacuum. */
   def truncateHistory(root: String, upToInclusive: Long): Unit = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     require(upToInclusive >= 1 && upToInclusive <= latest,
       s"graft_table $root: truncate version $upToInclusive out of [1, $latest]")
     // seal: materialize the state AT upTo so later replays never need the
@@ -393,8 +399,7 @@ object GraftTable {
     * same proxy Delta's retention uses). The LATEST version always
     * survives. Returns the truncation point, if any version qualified. */
   def truncateOlderThan(root: String, cutoffMillis: Long): Option[Long] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val cut = (1L until latest).filter { v =>
       val f = verFile(root, v)
       Files.exists(f) && Files.getLastModifiedTime(f).toMillis < cutoffMillis
@@ -407,13 +412,29 @@ object GraftTable {
     * when one exists. Files come back in first-add order; removes drop
     * them. */
   def snapshot(root: String, asOf: Option[Long] = None): Snapshot = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val v = asOf.getOrElse(latest)
     require(v >= 1 && v <= latest,
       s"graft_table $root: version $v out of range [1, $latest]")
     val st = replayState(root, v)
     Snapshot(v, st.files.toSeq, st.schemaDdl)
+  }
+
+  /** The latest version as a [[Snapshot]] plus its replayed state — one
+    * replay for the ops that need both. */
+  private def current(root: String): (Snapshot, LogState) = {
+    val st = stateAt(root)
+    (Snapshot(st.version, st.files.toSeq, st.schemaDdl), st)
+  }
+
+  /** The latest version; fails loud on a non-table. */
+  private def headVersion(root: String): Long = latestVersion(root).getOrElse(
+    throw new IllegalArgumentException(s"not a graft_table: $root"))
+
+  /** Replayed state at `asOf` (default: the latest version). */
+  private def stateAt(root: String, asOf: Option[Long] = None): LogState = {
+    val latest = headVersion(root) // a non-table fails loud, asOf or not
+    replayState(root, asOf.getOrElse(latest))
   }
 
   /** Commit wall-clock of one version in epoch millis: the logged
@@ -452,8 +473,7 @@ object GraftTable {
     * versionAtTimestamp would swallow that too and silently deliver
     * everything on a typo'd path. */
   def versionAtTimestampOpt(root: String, tsMillis: Long): Option[Long] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     (1L to latest).filter(v => Files.exists(verFile(root, v)))
       .filter(v => commitTimestamp(root, v) <= tsMillis).maxOption
   }
@@ -482,8 +502,7 @@ object GraftTable {
     * actually pruned. */
   private[graft] def readIndexed(spark: SparkSession, root: String,
       asOf: Option[Long] = None): (DataFrame, Option[GraftFileIndex]) = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val v = asOf.getOrElse(latest)
     require(v >= 1 && v <= latest,
       s"graft_table $root: version $v out of range [1, $latest]")
@@ -538,9 +557,7 @@ object GraftTable {
       case other => throw new IllegalArgumentException(
         s"filesInRange: numeric bound expected, got $other")
     }
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    val st = replayState(root, asOf.getOrElse(latest))
+    val st = stateAt(root, asOf)
     val physCol = physOf(st, column) // stats are keyed physical
     val kept = st.files.toSeq.filter { f =>
       st.fileStats.get(f).flatMap(s => Option(s.get(physCol))) match {
@@ -566,10 +583,7 @@ object GraftTable {
     * zero data IO at any scale (every add action carries its footer
     * count; merges re-log rewritten files with fresh counts). */
   def rowCount(root: String, asOf: Option[Long] = None): Long = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    val v = asOf.getOrElse(latest)
-    val st = replayState(root, v)
+    val st = stateAt(root, asOf)
     st.files.iterator.map(f => st.fileCounts.getOrElse(f, 0L) -
       st.dvs.get(f).map(_._2).getOrElse(0L)).sum
   }
@@ -579,9 +593,7 @@ object GraftTable {
     * answer would be silently wrong). Zero data IO. */
   def columnRange(root: String, column: String,
       asOf: Option[Long] = None): Option[(Any, Any)] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    val st = replayState(root, asOf.getOrElse(latest))
+    val st = stateAt(root, asOf)
     val physCol = physOf(st, column) // stats are keyed physical
     val per = st.files.toSeq.map(f =>
       st.fileStats.get(f).flatMap(s => Option(s.get(physCol))))
@@ -639,8 +651,7 @@ object GraftTable {
     * pass it back as `changesFrom` on the next run. */
   def changes(spark: SparkSession, root: String, fromExclusive: Long,
       toInclusive: Option[Long] = None): DataFrame = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val to = toInclusive.getOrElse(latest)
     require(fromExclusive >= 0 && to <= latest && fromExclusive <= to,
       s"graft_table $root: changes range ($fromExclusive, $to] out of [0, $latest]")
@@ -685,8 +696,7 @@ object GraftTable {
     * metadata to plan; data IO proportional to the change volume only. */
   def changesWithImages(spark: SparkSession, root: String,
       fromExclusive: Long, toInclusive: Option[Long] = None): DataFrame = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val to = toInclusive.getOrElse(latest)
     require(fromExclusive >= 0 && to <= latest && fromExclusive <= to,
       s"graft_table $root: changes range ($fromExclusive, $to] out of [0, $latest]")
@@ -843,8 +853,7 @@ object GraftTable {
     * file counts, rows added, schema-change and txn markers. Pure log
     * metadata: O(versions), never touches data files. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val rows = (1L to latest)
       .filter(ver => Files.exists(verFile(root, ver))) // truncated = no rows
       .map { ver =>
@@ -942,9 +951,7 @@ object GraftTable {
 
   /** The table's logical→physical column mapping (empty = identity). */
   def columnMapping(root: String, asOf: Option[Long] = None): Map[String, String] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    replayState(root, asOf.getOrElse(latest)).colMap.toMap
+    stateAt(root, asOf).colMap.toMap
   }
 
   /** Does a CHECK expression reference `column`? Whole-identifier match
@@ -975,8 +982,7 @@ object GraftTable {
   def renameColumn(root: String, oldName: String, newName: String): Long = {
     require(oldName.trim.nonEmpty && newName.trim.nonEmpty,
       "renameColumn: both names required")
-    val snap = snapshot(root)
-    val st = replayState(root, snap.version)
+    val (snap, st) = current(root)
     val schema = StructType.fromDDL(snap.schemaDdl)
     val field = schema.fields.find(_.name == oldName).getOrElse(
       throw new IllegalArgumentException(
@@ -1021,8 +1027,7 @@ object GraftTable {
     * (readers just never project it) until a rewrite naturally sheds it.
     * Partition columns and constraint-referenced columns fail loud. */
   def dropColumn(root: String, name: String): Long = {
-    val snap = snapshot(root)
-    val st = replayState(root, snap.version)
+    val (snap, st) = current(root)
     val schema = StructType.fromDDL(snap.schemaDdl)
     require(schema.fieldNames.contains(name),
       s"graft_table $root: no column '$name' to drop " +
@@ -1093,7 +1098,11 @@ object GraftTable {
   def appendBatch(spark: SparkSession, df: DataFrame, root: String,
       appId: String, batchId: Long, evolve: Boolean = false,
       maxRetries: Int = 10): Option[Long] = {
-    if (lastTxn(root, appId).exists(_ >= batchId)) return None // replay
+    def done(st: Option[LogState]): Boolean =
+      st.exists(_.txns.get(appId).exists(_ >= batchId))
+    val st0 = latestVersion(root).map(replayState(root, _))
+    if (done(st0)) return None // replay
+    fireRaceHook()
     // evolve: the batch sink's `evolve: add_nulls` applied per micro-batch
     // — a RE-RUN of a pipeline whose source grew a column appends against
     // the existing table by widening it (meta + data in one txn-stamped
@@ -1101,49 +1110,28 @@ object GraftTable {
     // resolved HERE; a concurrent schema change aborts below (same rule
     // as writeEvolve — the conformed rows were computed against a stale
     // shape).
-    val snap0 = latestVersion(root).map(_ => snapshot(root))
-    val st0 = snap0.map(sn => replayState(root, sn.version))
     val pb = st0.fold(Seq.empty[String])(_.partitionBy) // inherit layout
-    val (out, metaDdl, mapNew) = (snap0, st0) match {
-      case (Some(sn), Some(st)) if evolve =>
-        val (conformed, union, newCols) = conformEvolved(spark, df, sn, root)
-        val m: Map[String, String] =
-          if (st.colMap.isEmpty) Map.empty
-          else st.colMap.toMap ++
-            newCols.map(f => f.name -> freshPhysical(f.name))
+    val (out, metaDdl, mapNew) = st0 match {
+      case Some(st) if evolve =>
+        val (conformed, union, newCols, m) = conformEvolved(spark, df, st, root)
         (conformed, if (newCols.nonEmpty) Some(union.toDDL) else None, m)
       case _ =>
         (df, None, st0.fold(Map.empty[String, String])(_.colMap.toMap))
     }
-    val adds = stageDataFiles(toPhysical(out, mapNew), root, partitionBy = pb)
-    var attempt = 0
-    while (true) {
-      val cur = latestVersion(root)
-      val snap = cur.map(_ => snapshot(root))
-      if (evolve)
-        snap0.zip(snap).foreach { case (s0, s) =>
-          if (s.schemaDdl != s0.schemaDdl)
-            throw new ConcurrentWriteException(
-              s"graft_table $root: schema changed concurrently — re-run " +
-                "the evolving append against the fresh snapshot")
+    transact(root, s"streaming batch $batchId", st0, Some(spark),
+      Some((appId, batchId)), maxRetries)(
+      stageDataFiles(_, toPhysical(out, mapNew), root, st0, partitionBy = pb)) {
+      (adds, st) =>
+        // the racer may have been a replay of THIS txn — same
+        // exactly-once rule as the check above
+        if (done(st)) None
+        else {
+          if (evolve) st0.foreach(s0 => requireSchemaKept(root, s0, st))
+          else st.foreach(s => requireSchemaMatch(out, s.schemaDdl, root))
+          Some(metaDdl.map(d => metaAction(d, pb, mapNew)).toSeq ++
+            (if (st.isDefined) adds else metaAction(out.schema.toDDL) +: adds))
         }
-      else snap.foreach(requireSchemaMatch(out, _, root))
-      val actions = txnAction(appId, batchId) +:
-        (metaDdl.map(d => metaAction(d, pb, mapNew)).toSeq ++
-          (if (snap.isDefined) adds else metaAction(out.schema.toDDL) +: adds))
-      enforceConstraints(spark, root, adds, cur.getOrElse(0L),
-        s"streaming batch $batchId")
-      try return Some(commit(root, cur.getOrElse(0L), actions))
-      catch {
-        case e: ConcurrentWriteException =>
-          // the racer may have been a replay of THIS txn from another
-          // attempt — re-check before retrying, same exactly-once rule
-          if (lastTxn(root, appId).exists(_ >= batchId)) return None
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
     }
-    None // unreachable
   }
 
   /** Claim version `expected + 1` with the given actions. Atomic publish
@@ -1210,8 +1198,9 @@ object GraftTable {
   private[tables] final case class AddsConflictInParts(
     parts: Set[Map[String, String]]) extends AddRule
 
-  /** Test seam: runs once after a DML call resolves its snapshot —
-    * lets a spec interleave a competing writer deterministically. */
+  /** Test seam: runs once after a DML call or `appendBatch` resolves its
+    * snapshot — lets a spec interleave a competing writer
+    * deterministically. */
   private[graft] var testRaceHook: () => Unit = () => ()
   private def fireRaceHook(): Unit = {
     val h = testRaceHook; testRaceHook = () => (); h()
@@ -1246,11 +1235,7 @@ object GraftTable {
           case AddsAlwaysConflict =>
             return Some(s"version $ver added data ($p)")
           case AddsConflictInParts(parts) =>
-            val pv = if (!a.has("partitionValues")) Map.empty[String, String]
-              else {
-                val o = a.get("partitionValues")
-                o.fieldNames().asScala.map(c => c -> o.get(c).asText()).toMap
-              }
+            val pv = partValuesOf(a)
             if (!partitionBy.forall(pv.contains))
               return Some(s"version $ver added data with unknown " +
                 s"partition values ($p)")
@@ -1264,35 +1249,83 @@ object GraftTable {
     None
   }
 
-  /** Commit `actions` computed against `snapVersion`, retrying past
-    * commits that provably do not conflict (see the rules above). A real
-    * conflict throws [[ConcurrentWriteException]] — the caller re-runs
-    * its whole computation against the fresh snapshot, exactly as
-    * before; disjoint writers now simply both land. */
-  private def commitDml(root: String, snapVersion: Long,
-      actions: Seq[ObjectNode], depFiles: Set[String], addRule: AddRule,
-      partitionBy: Seq[String], ctx: String, maxRetries: Int = 10): Long = {
-    var cur = snapVersion
-    var attempt = 0
-    while (true) {
-      try return commit(root, cur, actions)
-      catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          val latest = latestVersion(root).getOrElse(throw e)
-          ((cur + 1) to latest).foreach { ver =>
-            conflictWith(root, ver, depFiles, addRule, partitionBy)
-              .foreach { why =>
-                throw new ConcurrentWriteException(
-                  s"graft_table $root: $ctx conflicts with a concurrent " +
-                    s"commit — $why; re-run against the fresh snapshot")
+  /** How a DML, OPTIMIZE or dropPartition commit survives a lost race:
+    * its actions stand iff every commit in between is disjoint from
+    * `depFiles` under the [[AddRule]] its staged adds imply. */
+  private final case class Replay(depFiles: Set[String],
+      addRule: Seq[ObjectNode] => AddRule)
+
+  /** The files an op's stagers moved into data/, dv/ and cdf/ — a
+    * concurrent queue, since [[staged3]] runs the stagers at once. */
+  private type Staged = java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** The one commit path of every op that stages files. `stage` writes
+    * them, recording each in its [[Staged]]. Each attempt runs `attempt`
+    * — the op's checks against the state it commits on, giving its
+    * actions, or None when nothing is left to commit — CHECK-enforces the
+    * staged adds at that state with `enforceWith` (None: the op adds no
+    * new row), prefixes the `txn` action and claims the next slot. A lost
+    * race re-runs the attempt at the new head (so a constraint added
+    * meanwhile is enforced), or with `replay` re-commits the same actions
+    * past disjoint commits. The staged files are deleted when the op ends
+    * without its commit landing (a throw, a real conflict, the retries run
+    * out, `attempt` gives None) — except after an error inside `commit`
+    * other than a taken slot: its hard link may have landed, so they stay
+    * for `vacuum`. `base` is the state the op staged against. */
+  private def transact[S](root: String, ctx: String, base: Option[LogState],
+      enforceWith: Option[SparkSession], txn: Option[(String, Long)] = None,
+      maxRetries: Int = 10, replay: Option[Replay] = None,
+      commitStage: Option[String] = None)(stage: Staged => S)(
+      attempt: (S, Option[LogState]) => Option[Seq[ObjectNode]]): Option[Long] = {
+    val staged = new Staged
+    def discard(): Unit = staged.forEach { p =>
+      try Files.deleteIfExists(p) catch { case _: java.io.IOException => () }
+      ()
+    }
+    def head(): Option[LogState] = latestVersion(root).map(v =>
+      if (base.exists(_.version == v)) base.get else replayState(root, v))
+    var linking = false // a commit is in flight: its link may land
+    try {
+      val s = stage(staged)
+      def run(): Option[Long] = {
+        var st = if (replay.isEmpty) head() else base
+        var at = st.fold(0L)(_.version)
+        def plan() = attempt(s, st).map { acts =>
+          enforceWith.foreach(enforceConstraints(_, root, acts, st, ctx))
+          txn.map(t => txnAction(t._1, t._2)).toSeq ++ acts
+        }
+        var actions = plan()
+        var landed: Option[Long] = None
+        var tries = 0
+        while (landed.isEmpty && actions.isDefined) {
+          linking = true
+          try landed = Some(commit(root, at, actions.get))
+          catch {
+            case e: ConcurrentWriteException => // the slot was taken
+              linking = false
+              tries += 1
+              if (tries > maxRetries) throw e
+              replay match {
+                case None =>
+                  st = head(); at = st.fold(0L)(_.version); actions = plan()
+                case Some(Replay(depFiles, addRule)) =>
+                  val latest = latestVersion(root).getOrElse(throw e)
+                  val rule = addRule(actions.get.filter(_.has("add")))
+                  ((at + 1) to latest).foreach { v =>
+                    conflictWith(root, v, depFiles, rule, base.get.partitionBy)
+                      .foreach { why => throw new ConcurrentWriteException(
+                        s"graft_table $root: $ctx conflicts with a concurrent " +
+                          s"commit — $why; re-run against the fresh snapshot") }
+                  }
+                  at = latest
               }
           }
-          cur = latest
+        }
+        if (landed.isEmpty) discard()
+        landed
       }
-    }
-    -1L // unreachable
+      commitStage.fold(run())(Attribution.timed(_)(run()))
+    } catch { case t: Throwable => if (!linking) discard(); throw t }
   }
 
   /** The [[AddRule]] for a DML txn that touched `depRel` and stages
@@ -1302,27 +1335,14 @@ object GraftTable {
       adds: Seq[ObjectNode]): AddRule = {
     val pb = state.partitionBy
     if (pb.isEmpty) return AddsAlwaysConflict
-    val touched = depRel.map(f => state.filePartVals.get(f).collect {
-      case pv if pb.forall(pv.contains) => pb.map(c => c -> pv(c)).toMap
-    })
-    val staged = adds.map { n =>
-      val a = n.get("add")
-      if (!a.has("partitionValues")) None
-      else {
-        val o = a.get("partitionValues")
-        val pv = o.fieldNames().asScala.map(c => c -> o.get(c).asText()).toMap
-        if (pb.forall(pv.contains)) Some(pb.map(c => c -> pv(c)).toMap)
-        else None
-      }
-    }
+    def tuple(pv: Map[String, String]): Option[Map[String, String]] =
+      if (pb.forall(pv.contains)) Some(pb.map(c => c -> pv(c)).toMap) else None
+    val touched = depRel.map(f => state.filePartVals.get(f).flatMap(tuple))
+    val staged = adds.map(n => tuple(partValuesOf(n.get("add"))))
     if ((touched ++ staged).exists(_.isEmpty)) AddsAlwaysConflict
     else AddsConflictInParts((touched ++ staged).flatten.toSet)
   }
 
-  /** Write `df`'s rows as immutable parquet files under data/ and return
-    * their (relative path, rows) adds. The files are INVISIBLE to readers
-    * until a commit references them — a crash here leaves only orphans
-    * for `vacuum`, never a torn table. */
   /** Hive path-escaping inverse (%xx escapes back to their chars) for
     * logging a partition dir's VALUE; the dir name itself keeps Spark's
     * escaped form verbatim. */
@@ -1378,85 +1398,133 @@ object GraftTable {
     }
   }
 
-  private def stageDataFiles(df: DataFrame, root: String,
-      dataChange: Boolean = true,
-      partitionBy: Seq[String] = Nil): Seq[ObjectNode] = {
+  /** Delete `p` and everything under it, deepest first. */
+  private def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) {
+      val w = Files.walk(p)
+      try w.sorted(java.util.Comparator.reverseOrder())
+        .iterator().asScala.foreach(Files.deleteIfExists(_))
+      finally w.close()
+    }
+
+  /** One parquet part of a staging write: its subdir under the staging
+    * dir (`""` when flat), its rank `i` in (subdir, name) order and its
+    * footer. */
+  private final case class Part(into: String, stamp: String, i: Int,
+      dir: String, path: Path,
+      footer: org.apache.parquet.hadoop.metadata.ParquetMetadata) {
+    def rows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+    /** Root-relative target `<into>/[<sub>/]<stamp>_<tag><i>.parquet`. */
+    def rel(tag: String, sub: String = ""): String =
+      (into +: Seq(sub).filter(_.nonEmpty) :+ s"${stamp}_$tag$i.parquet")
+        .mkString("/")
+  }
+
+  /** The one staging primitive behind the data, dv and cdc stagers.
+    * `write` writes `df` (on a session clone carrying `conf`) into a fresh
+    * `_staging_<stamp>` dir and returns what the stager needs from the
+    * whole output (data: bloom sketches); `place` maps each part that
+    * holds rows to its root-relative target and action. Each placed part
+    * moves atomically under `into` and is recorded in `staged`: the files
+    * are INVISIBLE to readers until a commit references them, and
+    * [[transact]] deletes them when that commit does not land. The staging
+    * dir is deleted here, also when a step throws — so only a crash
+    * leaves orphans for `vacuum`, never a torn table. */
+  private def stageParquet[W, A](staged: Staged, df: DataFrame, root: String,
+      into: String, conf: (String, String)*)(write: (DataFrame, String) => W)(
+      place: (W, Part) => (String, A)): Seq[A] = {
     val stamp = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
     val staging = Paths.get(root, s"_staging_$stamp")
-    // Staged files ALWAYS carry timestamps as INT64 epoch-micros, never
-    // Spark's INT96 default: the streaming file reader and the logged
-    // min/max skip stats both speak INT64-micros only (an INT96 column
-    // would fail the stream mid-batch and record no stats). Session conf
-    // is the only knob parquet exposes, so the write runs under a session
-    // CLONE with it pinned — the caller's conf is untouched and
-    // concurrent writers cannot race a shared set/restore.
-    val pinned = org.apache.spark.sql.GraftSqlBridge.withConf(df,
-      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-    // Partitioned layout, Iceberg-style identity partitioning: files land
-    // under hive-style `data/<col>=<val>/` dirs BUT the partition columns
-    // STAY in the data (written via duplicated `__p_` shadow columns that
-    // the partitionBy consumes) — every file remains self-contained, so
-    // merge/DML/time-travel/streaming compose unchanged, and the footer
-    // min=max stats on a single-partition file make partition pruning a
-    // special case of the existing log-stats skipping.
-    if (partitionBy.isEmpty)
-      pinned.write.mode("overwrite").parquet(staging.toString)
-    else {
-      partitionBy.foreach(c => require(df.columns.exists(
-        df.sparkSession.sessionState.conf.resolver(_, c)),
-        s"graft_table $root: partition column '$c' is not in the write " +
-          s"schema (${df.columns.mkString(", ")})"))
-      partitionBy.foldLeft(pinned)((d, c) => d.withColumn(s"__p_$c", col(c)))
+    try {
+      // Staged files ALWAYS carry timestamps as INT64 epoch-micros, never
+      // Spark's INT96 default: the streaming file reader and the logged
+      // min/max skip stats both speak INT64-micros only (an INT96 column
+      // would fail the stream mid-batch and record no stats). Session conf
+      // is the only knob parquet exposes, so the write runs under a session
+      // CLONE with it pinned — the caller's conf is untouched and
+      // concurrent writers cannot race a shared set/restore.
+      val w = write(org.apache.spark.sql.GraftSqlBridge.withConf(df,
+        ("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") +:
+          conf: _*), staging.toString)
+      Files.createDirectories(Paths.get(root, into))
+      val parts = {
+        val s = Files.walk(staging)
+        // regular files only: a partition DIR may be named `…=x.parquet`
+        try s.iterator().asScala
+          .filter(p => Files.isRegularFile(p) &&
+            p.getFileName.toString.endsWith(".parquet"))
+          .map(p => (staging.relativize(p.getParent).toString, p))
+          .toSeq.sortBy { case (d, p) => (d, p.getFileName.toString) }
+        finally s.close()
+      }
+      // record counts (and data's min/max) come from the FOOTER — pure
+      // metadata IO, never a re-scan of what was just written
+      val hconf = df.sparkSession.sessionState.newHadoopConf()
+      parts.zipWithIndex.flatMap { case ((dir, p), i) =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromPath(new org.apache.hadoop.fs.Path(p.toUri), hconf))
+        val part = try Part(into, stamp, i, dir, p, r.getFooter)
+          finally r.close()
+        // an empty part adds no rows, only metadata
+        Option.when(part.rows > 0L) {
+          val (rel, action) = place(w, part)
+          val target = Paths.get(root).resolve(rel)
+          Files.createDirectories(target.getParent)
+          Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
+          staged.add(target)
+          action
+        }
+      }
+    } finally deleteTree(staging)
+  }
+
+  /** Stage `df`'s rows as data files under data/ and return their adds,
+    * with per-column min/max (and opt-in bloom) stats and, on a
+    * partitioned layout, partition dirs and values. */
+  private def stageDataFiles(staged: Staged, df: DataFrame, root: String,
+      st: Option[LogState], dataChange: Boolean = true,
+      partitionBy: Seq[String] = Nil): Seq[ObjectNode] = {
+    partitionBy.foreach(c => require(df.columns.exists(
+      df.sparkSession.sessionState.conf.resolver(_, c)),
+      s"graft_table $root: partition column '$c' is not in the write " +
+        s"schema (${df.columns.mkString(", ")})"))
+    stageParquet(staged, df, root, "data") { (pinned, staging) =>
+      // Partitioned layout, Iceberg-style identity partitioning: files
+      // land under hive-style `data/<col>=<val>/` dirs BUT the partition
+      // columns STAY in the data (written via duplicated `__p_` shadow
+      // columns that the partitionBy consumes) — every file remains
+      // self-contained, so merge/DML/time-travel/streaming compose
+      // unchanged, and the footer min=max stats on a single-partition file
+      // make partition pruning a special case of the existing log-stats
+      // skipping.
+      if (partitionBy.isEmpty) pinned.write.mode("overwrite").parquet(staging)
+      else partitionBy.foldLeft(pinned)((d, c) => d.withColumn(s"__p_$c", col(c)))
         .write.mode("overwrite")
         .partitionBy(partitionBy.map(c => s"__p_$c"): _*)
-        .parquet(staging.toString)
-    }
-    Files.createDirectories(dataDir(root))
-    // (relative-dir-under-staging, file) pairs; flat staging yields ("", f)
-    val parts = {
-      val s = Files.walk(staging)
-      try s.iterator().asScala
-        .filter(p => p.getFileName.toString.endsWith(".parquet"))
-        .map(p => (staging.relativize(p.getParent).toString, p))
-        .toSeq.sortBy { case (d, p) => (d, p.getFileName.toString) }
-      finally s.close()
-    }
-    // optional per-file bloom stats (`stats_bloom` property): staged
-    // absolute path -> (physical column, base64 sketch) pairs
-    val blooms = stageBlooms(df.sparkSession, root, staging)
-    // numRecords AND per-column min/max from the parquet FOOTER (pure
-    // metadata IO) — a count/stats job over the staged output would
-    // re-scan everything just written, which at 100 TB doubles the write
-    // cost for statistics the file already carries. The min/max land in
-    // the add action so `readRange` can skip whole FILES from the log
-    // alone — never opening a footer, the data-skipping half of the
-    // z-order/range layouts.
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    def footerInfo(p: Path): (Long, Option[ObjectNode]) = {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p.toUri), hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try (r.getRecordCount, footerStats(r.getFooter))
-      finally r.close()
-    }
-    val adds = parts.zipWithIndex.flatMap { case ((dir, p), i) =>
+        .parquet(staging)
+      // optional per-file bloom stats (`stats_bloom` property): staged
+      // absolute path -> (physical column, base64 sketch) pairs
+      stageBlooms(df.sparkSession, root, st, staging)
+    } { (blooms, part) =>
       // hive dir components `__p_<c>=<escaped>` → logged values + a
       // `data/<c>=<escaped>/...` target dir (real column names, Spark's
       // escaping kept verbatim for the path)
-      val comps = if (dir.isEmpty) Nil
-        else dir.split(java.io.File.separatorChar.toString).toSeq
+      val comps = if (part.dir.isEmpty) Nil
+        else part.dir.split(java.io.File.separatorChar.toString).toSeq
       val partValues = comps.collect {
         case c if c.startsWith("__p_") && c.contains('=') =>
           val Array(k, v) = c.split("=", 2)
           k.stripPrefix("__p_") -> unescapePathName(v)
       }.toMap
-      val subdir = comps.map(_.stripPrefix("__p_")).mkString("/")
-      val rel = if (subdir.isEmpty) s"data/${stamp}_part$i.parquet"
-        else s"data/$subdir/${stamp}_part$i.parquet"
-      val (cnt, stats0) = footerInfo(p)
-      // bloom sketches ride INSIDE the per-column stats node, so the
-      // checkpoint and replay plumbing carry them with zero new state
-      val stats = blooms.get(p.toAbsolutePath.normalize.toString) match {
+      val rel = part.rel("part", comps.map(_.stripPrefix("__p_")).mkString("/"))
+      // the min/max land in the add action so `readRange` can skip
+      // whole FILES from the log alone — never opening a footer, the
+      // data-skipping half of the z-order/range layouts. Bloom sketches
+      // ride INSIDE the per-column stats node, so the checkpoint and
+      // replay plumbing carry them with zero new state
+      val stats0 = footerStats(part.footer)
+      val stats = blooms.get(part.path.toAbsolutePath.normalize.toString) match {
         case None => stats0
         case Some(cols) =>
           val node = stats0.getOrElse(json.createObjectNode())
@@ -1472,21 +1540,9 @@ object GraftTable {
           }
           Some(node)
       }
-      if (cnt == 0L) None // an empty part adds no rows, only metadata
-      else {
-        val bytes = Files.size(p)
-        val target = Paths.get(root).resolve(rel)
-        Files.createDirectories(target.getParent)
-        Files.move(p, target, StandardCopyOption.ATOMIC_MOVE)
-        Some(addAction(rel, cnt, dataChange, stats, bytes, partValues))
-      }
+      (rel, addAction(rel, part.rows, dataChange, stats,
+        Files.size(part.path), partValues))
     }
-    // staging dir now holds only _SUCCESS etc. — remove it
-    val leftovers = Files.walk(staging)
-    try leftovers.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally leftovers.close()
-    adds
   }
 
   /** Optional per-file BLOOM stats (opt-in via the `stats_bloom` table
@@ -1506,8 +1562,8 @@ object GraftTable {
     * WRONG skip — rejected loud instead). Returns staged-absolute-path →
     * (physical column, base64 sketch, hash domain) triples. */
   private def stageBlooms(spark: SparkSession, root: String,
-      staging: Path): Map[String, Seq[(String, String, String)]] = {
-    val stOpt = latestVersion(root).map(v => replayState(root, v))
+      stOpt: Option[LogState],
+      staging: String): Map[String, Seq[(String, String, String)]] = {
     val propCols = stOpt.flatMap(_.properties.get("stats_bloom"))
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Nil)
@@ -1519,7 +1575,7 @@ object GraftTable {
       s"graft_table $root: stats_bloom_bits must be in [1024, ${1L << 23}]" +
         s", got $bits")
     val phys = propCols.map(c => physOf(st, c))
-    val reader = spark.read.parquet(staging.toString)
+    val reader = spark.read.parquet(staging)
     val resolver = spark.sessionState.conf.resolver
     // a bloom'd column can legitimately be absent from one write (schema
     // evolution staged the narrow shape) — skip it, never fail the write
@@ -1669,8 +1725,9 @@ object GraftTable {
     if (out.isEmpty) None else Some(out)
   }
 
-  private def requireSchemaMatch(df: DataFrame, snap: Snapshot, root: String): Unit = {
-    val want = StructType.fromDDL(snap.schemaDdl)
+  private def requireSchemaMatch(df: DataFrame, schemaDdl: String,
+      root: String): Unit = {
+    val want = StructType.fromDDL(schemaDdl)
     // names + types only: nullability is PLAN metadata (an aggregate's
     // output flips nullable across equivalent plans), not a data shape —
     // parquet files carry the actual values either way
@@ -1745,41 +1802,29 @@ object GraftTable {
     val stageDf =
       if (mode == "append") st0.fold(df)(s => toPhysical(df, s.colMap))
       else toPhysical(df, owMap)
-    val adds = stageDataFiles(stageDf, root, partitionBy = effPb)
-    var attempt = 0
-    while (true) {
-      val cur = latestVersion(root)
-      val snap = cur.map(_ => snapshot(root))
-      if (mode == "append") snap.foreach(requireSchemaMatch(df, _, root))
+    transact(root, mode, st0, Some(spark), txn, maxRetries)(
+      stageDataFiles(_, stageDf, root, st0, partitionBy = effPb)) { (adds, st) =>
+      if (mode == "append") st.foreach(s => requireSchemaMatch(df, s.schemaDdl, root))
       // per-attempt LAYOUT check, mirroring the schema check above: a
       // concurrent overwrite that changed partitionBy between staging and
       // this attempt would otherwise commit files with the old layout's
       // dirs/partitionValues (reads stay correct — identity partitioning
       // keeps the columns in the data — but a later dropPartition fails
       // on the blind files)
-      val nowPb = if (mode == "append" && cur.isDefined)
-        partitioning(root) else effPb
+      val nowPb = if (mode == "append") st.fold(effPb)(_.partitionBy) else effPb
       if (nowPb != effPb)
         throw new ConcurrentWriteException(
           s"graft_table $root: partition layout changed concurrently " +
             s"(staged [${effPb.mkString(",")}], table now " +
             s"[${nowPb.mkString(",")}]) — re-run the append " +
             "against the fresh snapshot")
-      val actions = txn.map(t => txnAction(t._1, t._2)).toSeq ++ (mode match {
-        case "append" if snap.isDefined => adds
+      Some(mode match {
+        case "append" if st.isDefined => adds
         case _ => // first-ever commit, or overwrite: (re)declare schema
           metaAction(df.schema.toDDL, effPb, owMap) +:
-            (snap.toSeq.flatMap(_.files.map(removeAction)) ++ adds)
+            (st.toSeq.flatMap(_.files.toSeq.map(removeAction)) ++ adds)
       })
-      enforceConstraints(spark, root, adds, cur.getOrElse(0L), s"$mode")
-      try return commit(root, cur.getOrElse(0L), actions)
-      catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
-    }
-    -1L // unreachable
+    }.get
   }
 
   /** Append with schema EVOLUTION — the path sinks' `evolve: add_nulls`
@@ -1794,41 +1839,34 @@ object GraftTable {
     * append retries through. */
   def writeEvolve(spark: SparkSession, df: DataFrame, root: String,
       maxRetries: Int = 10): Long = {
-    if (latestVersion(root).isEmpty) return write(spark, df, root, "append")
-    val snap = snapshot(root)
-    val st0 = replayState(root, snap.version)
-    val pb = st0.partitionBy
-    val (conformed, union, newCols) = conformEvolved(spark, df, snap, root)
-    // on a column-mapped table, genuinely-new columns get FRESH physical
-    // names (a dropped column's old physical data may still live in old
-    // files under the plain name — re-using it would resurrect it)
-    val mapNew: Map[String, String] =
-      if (st0.colMap.isEmpty) Map.empty
-      else st0.colMap.toMap ++ newCols.map(f => f.name -> freshPhysical(f.name))
-    val adds = stageDataFiles(toPhysical(conformed, mapNew), root,
-      partitionBy = pb)
-    val actions = // the widening meta re-declares the layout AND mapping:
-      // meta REPLACES both on replay, so dropping either here would
-      // silently departition/unmap the table
-      if (newCols.nonEmpty) metaAction(union.toDDL, pb, mapNew) +: adds
-      else adds
-    var attempt = 0
-    while (true) {
-      val cur = latestVersion(root).getOrElse(0L)
-      if (cur != snap.version && snapshot(root).schemaDdl != snap.schemaDdl)
-        throw new ConcurrentWriteException(
-          s"graft_table $root: schema changed concurrently — re-run the " +
-            "evolving append against the fresh snapshot")
-      enforceConstraints(spark, root, adds, cur, "evolving append")
-      try return commit(root, cur, actions)
-      catch {
-        case e: ConcurrentWriteException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-      }
+    val st0 = latestVersion(root) match {
+      case None => return write(spark, df, root, "append")
+      case Some(v) => replayState(root, v)
     }
-    -1L // unreachable
+    val pb = st0.partitionBy
+    val (conformed, union, newCols, mapNew) =
+      conformEvolved(spark, df, st0, root)
+    transact(root, "evolving append", Some(st0), Some(spark),
+      maxRetries = maxRetries)(
+      stageDataFiles(_, toPhysical(conformed, mapNew), root, Some(st0),
+        partitionBy = pb)) { (adds, st) =>
+      requireSchemaKept(root, st0, st)
+      // the widening meta re-declares the layout AND mapping: meta
+      // REPLACES both on replay, so dropping either here would silently
+      // departition/unmap the table
+      Some(if (newCols.nonEmpty) metaAction(union.toDDL, pb, mapNew) +: adds
+        else adds)
+    }.get
   }
+
+  /** An evolving append's rows were conformed to `was`'s schema; a
+    * concurrent schema change left them stale. */
+  private def requireSchemaKept(root: String, was: LogState,
+      st: Option[LogState]): Unit =
+    if (st.exists(_.schemaDdl != was.schemaDdl))
+      throw new ConcurrentWriteException(
+        s"graft_table $root: schema changed concurrently — re-run the " +
+          "evolving append against the fresh snapshot")
 
   /** Shared evolve conformance: resolve `df` against the snapshot schema
     * with the SESSION's resolver — Spark analysis is case-insensitive by
@@ -1836,11 +1874,15 @@ object GraftTable {
     * SAME column (type-checked, selected under the table's spelling),
     * never a second add-only column that later reads would reject as
     * ambiguous. Returns (conformed rows under the union schema, union
-    * schema, genuinely-new fields). */
+    * schema, genuinely-new fields, the column mapping to write under). On
+    * a column-mapped table, genuinely-new columns get FRESH physical
+    * names (a dropped column's old physical data may still live in old
+    * files under the plain name — re-using it would resurrect it). */
   private def conformEvolved(spark: SparkSession, df: DataFrame,
-      snap: Snapshot, root: String): (DataFrame, StructType, Array[org.apache.spark.sql.types.StructField]) = {
+      st: LogState, root: String): (DataFrame, StructType,
+      Array[org.apache.spark.sql.types.StructField], Map[String, String]) = {
     val resolver = spark.sessionState.conf.resolver
-    val table = StructType.fromDDL(snap.schemaDdl)
+    val table = StructType.fromDDL(st.schemaDdl)
     df.schema.fields.foreach { f =>
       table.find(t => resolver(t.name, f.name)).foreach(t =>
         require(t.dataType == f.dataType,
@@ -1856,7 +1898,9 @@ object GraftTable {
         case Some(c) => col(c).as(f.name) // table's spelling wins
         case None => lit(null).cast(f.dataType).as(f.name)
       }): _*)
-    (conformed, union, newCols)
+    val mapping = if (st.colMap.isEmpty) Map.empty[String, String]
+      else st.colMap.toMap ++ newCols.map(f => f.name -> freshPhysical(f.name))
+    (conformed, union, newCols, mapping)
   }
 
   /** Upsert/delete that rewrites ONLY the files containing matched keys.
@@ -1899,9 +1943,9 @@ object GraftTable {
     require(!evolve || (how == "upsert" && condition.isEmpty),
       "graft_table merge: `evolve` (schema-evolving upsert) composes " +
         "with the plain upsert only")
-    val snap = snapshot(root)
-    if (how == "upsert" && !evolve) requireSchemaMatch(updates, snap, root)
-    val state = replayState(root, snap.version)
+    val (snap, state) = current(root)
+    if (how == "upsert" && !evolve)
+      requireSchemaMatch(updates, snap.schemaDdl, root)
     fireRaceHook()
     // schema EVOLUTION (evolve=true): genuinely-new source columns widen
     // the table schema in the SAME commit (meta + data atomically —
@@ -1910,11 +1954,8 @@ object GraftTable {
     // and on a column-mapped table new columns get fresh physical names.
     val (ups, schema, mapNew, evolvedCols) =
       if (how == "upsert" && evolve) {
-        val (conformed, union, nc) = conformEvolved(spark, updates, snap, root)
-        val m: Map[String, String] =
-          if (state.colMap.isEmpty) Map.empty
-          else state.colMap.toMap ++
-            nc.map(f => f.name -> freshPhysical(f.name))
+        val (conformed, union, nc, m) =
+          conformEvolved(spark, updates, state, root)
         (conformed, union, m, nc)
       } else (updates, StructType.fromDDL(snap.schemaDdl),
         state.colMap.toMap,
@@ -2140,17 +2181,6 @@ object GraftTable {
     // merge-on-read: victims' positions extend the touched files'
     // vectors, only new rows are staged, no file is removed or rewritten
     val mor = dvEnabled(state) && touchedRel.nonEmpty
-    val (adds, dvActs, cdc) = Attribution.timed("merge_stage")(staged3(
-      if (mor) morData.map(d => stageDataFiles(toPhysical(d, mapNew),
-        root, partitionBy = state.partitionBy)).getOrElse(Nil)
-      else stageDataFiles(toPhysical(cowData, mapNew), root,
-        partitionBy = state.partitionBy),
-      if (!mor) Nil else stageDvFiles(spark, root, state,
-        victims.select(col("__f"), col("__i")), touchedRel),
-      if (!changeFeedEnabled(state)) Nil
-      else cdcDf.toSeq.flatMap(d =>
-        stageCdcFiles(toPhysical(d, mapNew), root))))
-    enforceConstraints(spark, root, adds, snap.version, s"merge ($how)")
     val removes = if (mor) Nil else touchedRel.map(removeAction)
     // the widening meta (evolve with genuinely-new columns) rides the
     // SAME commit — schema + data change atomically, like writeEvolve
@@ -2169,13 +2199,26 @@ object GraftTable {
     // merge's read scope here is the whole key space).
     val keyedParts = keysPartitionLocal || state.partitionBy.forall(p =>
       on.exists(spark.sessionState.conf.resolver(_, p)))
-    val addRule = if (keyedParts) dmlAddRule(state, touchedRel, adds)
-      else AddsAlwaysConflict
-    Attribution.timed("merge_commit")(commitDml(root, snap.version,
-      txn.map(t => txnAction(t._1, t._2)).toSeq ++ meta ++
-        removes ++ adds ++ dvActs ++ cdc,
-      depFiles = touchedRel.toSet, addRule,
-      state.partitionBy, s"merge ($how)"))
+    transact(root, s"merge ($how)", Some(state), Some(spark), txn,
+      replay = Some(Replay(touchedRel.toSet, adds =>
+        if (keyedParts) dmlAddRule(state, touchedRel, adds)
+        else AddsAlwaysConflict)),
+      commitStage = Some("merge_commit")) { staged =>
+      // merge-on-read: victims' positions extend the touched files'
+      // vectors, only new rows are staged, no file is removed or rewritten
+      Attribution.timed("merge_stage")(staged3(
+        if (mor) morData.map(d => stageDataFiles(staged, toPhysical(d, mapNew),
+          root, Some(state), partitionBy = state.partitionBy)).getOrElse(Nil)
+        else stageDataFiles(staged, toPhysical(cowData, mapNew), root,
+          Some(state), partitionBy = state.partitionBy),
+        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
+          victims.select(col("__f"), col("__i")), touchedRel),
+        if (!changeFeedEnabled(state)) Nil
+        else cdcDf.toSeq.flatMap(d =>
+          stageCdcFiles(staged, toPhysical(d, mapNew), root))))
+    } { case ((adds, dvActs, cdc), _) =>
+      Some(meta ++ removes ++ adds ++ dvActs ++ cdc)
+    }.get
   }
 
   /** Conservative log-stats pruning for pushed/parsed predicate
@@ -2368,8 +2411,7 @@ object GraftTable {
     * conjuncts. */
   private[graft] def candidateFilesForPredicate(root: String,
       predicate: String): (Seq[String], Seq[String]) = {
-    val snap = snapshot(root)
-    val st = replayState(root, snap.version)
+    val (snap, st) = current(root)
     (pruneByStats(st, snap.files, predicate), snap.files)
   }
 
@@ -2381,17 +2423,13 @@ object GraftTable {
     * files from the LOG alone; (2) the scan over survivors is
     * column-pruned and predicate-pushed, so parquet row-group stats
     * prune IO inside each file and only matching rows surface.
-    * Returns (relative touched files → matched row count, absolute-path
-    * map used to re-read exactly those files). */
+    * Returns relative touched files → matched row count. */
   private def probeMatches(spark: SparkSession, root: String,
       snap: Snapshot, pred: org.apache.spark.sql.Column,
-      state: LogState, predicate: String)
-      : (Map[String, Long], Map[String, String]) = {
+      state: LogState, predicate: String): Map[String, Long] = {
     val schema = StructType.fromDDL(snap.schemaDdl)
     val candidates = pruneByStats(state, snap.files, predicate)
-    if (candidates.isEmpty) return (Map.empty, Map.empty)
-    val absOf = candidates.map(f =>
-      f -> Paths.get(root).resolve(f).toString).toMap
+    if (candidates.isEmpty) return Map.empty
     // LIVE rows only: a row an existing deletion vector already marks
     // dead can neither re-match nor re-delete
     val base = livePosScan(spark, root, state, candidates, schema)
@@ -2400,10 +2438,7 @@ object GraftTable {
     // O(files) filename→rel map (data file names are UUID-unique)
     val relOfName = candidates.map(r =>
       Paths.get(r).getFileName.toString -> r).toMap
-    val perRel = perName.flatMap { case (name, n) =>
-      relOfName.get(name).map(_ -> n)
-    }
-    (perRel, absOf)
+    perName.flatMap { case (name, n) => relOfName.get(name).map(_ -> n) }
   }
 
   /** DELETE WHERE — predicate delete as copy-on-write, the GDPR/TTL
@@ -2416,17 +2451,16 @@ object GraftTable {
     * rewritten, keeping rows where the predicate is false or null (SQL
     * DELETE removes rows where it is TRUE only). At 100 TB with a
     * date-clustered layout the rewrite set is the one boundary file per
-    * partition edge, not the table. Commit races abort like merge's. */
+    * partition edge, not the table. Commit races resolve like merge's. */
   def deleteWhere(spark: SparkSession, root: String, predicate: String,
       txn: Option[(String, Long)] = None): Long = {
     require(predicate.trim.nonEmpty, "deleteWhere: empty predicate — an " +
       "unconditional delete is `write(emptyDf, mode=overwrite)`, say it")
-    val snap = snapshot(root)
+    val (snap, state) = current(root)
     if (snap.files.isEmpty) return snap.version
     val pred = expr(predicate)
-    val state = replayState(root, snap.version)
     fireRaceHook()
-    val (matched, absOf) = probeMatches(spark, root, snap, pred, state, predicate)
+    val matched = probeMatches(spark, root, snap, pred, state, predicate)
     if (matched.isEmpty) return snap.version // no-op: no row matches
     // live rows per file = logged footer count minus its vector's dead rows
     def liveCount(f: String): Long = state.fileCounts.getOrElse(f, -1L) -
@@ -2441,29 +2475,30 @@ object GraftTable {
     // vector instead of forcing a rewrite. Full-match files stay pure
     // metadata removes either way (cheaper than any vector).
     val mor = dvEnabled(state) && partial.nonEmpty
-    // the three stagings are independent (snapshot-pinned reads, own
-    // staging dirs) — run them concurrently, commit after all (staged3)
-    val (adds, dvActs, cdc) = staged3(
-      if (partial.isEmpty || mor) Nil
-      else stageDataFiles(toPhysical(
-        live(partial).where(!coalesce(pred, lit(false))).select(dataCols: _*),
-        state.colMap), root, partitionBy = state.partitionBy),
-      if (!mor) Nil else stageDvFiles(spark, root, state,
-        live(partial).where(pred).select(col("__f"), col("__i")), partial),
-      // change feed enabled: the deleted rows (pre-images) ride the same
-      // commit as `cdf/` sidecars — one extra pushdown-pruned scan of the
-      // touched subset only
-      if (!changeFeedEnabled(state)) Nil else stageCdcFiles(
-        toPhysical(live(fullMatch ++ partial).where(pred)
-          .select(dataCols: _*).withColumn("_change_type", lit("delete")),
-          state.colMap), root))
     val removes = (if (mor) fullMatch else fullMatch ++ partial).sorted
     val touched = (fullMatch ++ partial).distinct
-    commitDml(root, snap.version,
-      txn.map(t => txnAction(t._1, t._2)).toSeq ++
-        removes.map(removeAction) ++ adds ++ dvActs ++ cdc,
-      depFiles = touched.toSet, dmlAddRule(state, touched, adds),
-      state.partitionBy, "deleteWhere")
+    // deleteWhere only drops rows: its rewrites carry no new row to check.
+    // The three stagings are independent (snapshot-pinned reads, own
+    // staging dirs) — run them concurrently, commit after all (staged3)
+    transact(root, "deleteWhere", Some(state), enforceWith = None, txn = txn,
+      replay = Some(Replay(touched.toSet, dmlAddRule(state, touched, _)))) {
+      staged => staged3(
+        if (partial.isEmpty || mor) Nil
+        else stageDataFiles(staged, toPhysical(
+          live(partial).where(!coalesce(pred, lit(false))).select(dataCols: _*),
+          state.colMap), root, Some(state), partitionBy = state.partitionBy),
+        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
+          live(partial).where(pred).select(col("__f"), col("__i")), partial),
+        // change feed enabled: the deleted rows (pre-images) ride the same
+        // commit as `cdf/` sidecars — one extra pushdown-pruned scan of the
+        // touched subset only
+        if (!changeFeedEnabled(state)) Nil else stageCdcFiles(staged,
+          toPhysical(live(fullMatch ++ partial).where(pred)
+            .select(dataCols: _*).withColumn("_change_type", lit("delete")),
+            state.colMap), root))
+    } { case ((adds, dvActs, cdc), _) =>
+      Some(removes.map(removeAction) ++ adds ++ dvActs ++ cdc)
+    }.get
   }
 
   /** UPDATE WHERE — predicate update as copy-on-write. Same probe and
@@ -2480,7 +2515,7 @@ object GraftTable {
     require(predicate.trim.nonEmpty,
       "updateWhere: empty predicate — to rewrite every row use overwrite")
     require(set.nonEmpty, "updateWhere: empty SET clause")
-    val snap = snapshot(root)
+    val (snap, state) = current(root)
     val schema = StructType.fromDDL(snap.schemaDdl)
     val resolver = spark.sessionState.conf.resolver
     val assign = set.map { case (name, e) =>
@@ -2492,9 +2527,8 @@ object GraftTable {
     }
     if (snap.files.isEmpty) return snap.version
     val pred = expr(predicate)
-    val state = replayState(root, snap.version)
     fireRaceHook()
-    val (matched, absOf) = probeMatches(spark, root, snap, pred, state, predicate)
+    val matched = probeMatches(spark, root, snap, pred, state, predicate)
     if (matched.isEmpty) return snap.version
     val touched = matched.keys.toSeq.sorted
     val live = livePosScan(spark, root, state, touched, schema)
@@ -2508,14 +2542,15 @@ object GraftTable {
     val mor = dvEnabled(state)
     // change feed: matched rows before (pre) and after (post) the
     // assignments, same commit, touched subset only
-    def cdcStage(): Seq[ObjectNode] =
+    def cdcStage(staged: Staged): Seq[ObjectNode] =
       if (!changeFeedEnabled(state)) Nil else {
         val hit = live.where(pred)
           .select(schema.fields.toSeq.map(f => col(f.name)): _*)
         val pre = hit.withColumn("_change_type", lit("update_preimage"))
         val post = applyAssign(hit)
           .withColumn("_change_type", lit("update_postimage"))
-        stageCdcFiles(toPhysical(pre.unionByName(post), state.colMap), root)
+        stageCdcFiles(staged, toPhysical(pre.unionByName(post), state.colMap),
+          root)
       }
     // merge-on-read: the matched rows' positions extend each touched
     // file's vector and ONLY the post-image rows are written — a 1-row
@@ -2524,36 +2559,27 @@ object GraftTable {
     // applied to matching rows only. Data/dv/cdc stagings are
     // independent (snapshot-pinned reads, own staging dirs) — run
     // concurrently, commit after all (staged3).
-    val (removes, adds, dvActs, cdc) =
-      if (mor) {
-        val hit = live.where(pred)
-        val (adds, dvActs, cdc) = staged3(
-          stageDataFiles(toPhysical(applyAssign(hit), state.colMap),
-            root, partitionBy = state.partitionBy),
-          stageDvFiles(spark, root, state,
-            hit.select(col("__f"), col("__i")), touched),
-          cdcStage())
-        (Nil, adds, dvActs, cdc)
-      } else {
-        val rewritten = live.select(schema.fields.toSeq.map { f =>
-          assign.get(f.name) match {
-            case Some((e, dt)) =>
-              when(pred, expr(e).cast(dt)).otherwise(col(f.name)).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*)
-        val (adds, _, cdc) = staged3(
-          stageDataFiles(toPhysical(rewritten, state.colMap), root,
-            partitionBy = state.partitionBy),
-          (), cdcStage())
-        (touched.map(removeAction), adds, Nil, cdc)
+    val hit = live.where(pred)
+    def rewritten = live.select(schema.fields.toSeq.map { f =>
+      assign.get(f.name) match {
+        case Some((e, dt)) =>
+          when(pred, expr(e).cast(dt)).otherwise(col(f.name)).as(f.name)
+        case None => col(f.name)
       }
-    enforceConstraints(spark, root, adds, snap.version, "updateWhere")
-    commitDml(root, snap.version,
-      txn.map(t => txnAction(t._1, t._2)).toSeq ++
-        removes ++ adds ++ dvActs ++ cdc,
-      depFiles = touched.toSet, dmlAddRule(state, touched, adds),
-      state.partitionBy, "updateWhere")
+    }: _*)
+    val removes = if (mor) Nil else touched.map(removeAction)
+    transact(root, "updateWhere", Some(state), Some(spark), txn,
+      replay = Some(Replay(touched.toSet, dmlAddRule(state, touched, _)))) {
+      staged => staged3(
+        stageDataFiles(staged, toPhysical(
+          if (mor) applyAssign(hit) else rewritten, state.colMap),
+          root, Some(state), partitionBy = state.partitionBy),
+        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
+          hit.select(col("__f"), col("__i")), touched),
+        cdcStage(staged))
+    } { case ((adds, dvActs, cdc), _) =>
+      Some(removes ++ adds ++ dvActs ++ cdc)
+    }.get
   }
 
   /** RESTORE — roll the table back to `toVersion` as a NEW commit, pure
@@ -2568,7 +2594,7 @@ object GraftTable {
     * [[appendOnlySince]] correctly reports). Fails loud if the target
     * version's files were already vacuumed or its log truncated. */
   def restore(spark: SparkSession, root: String, toVersion: Long): Long = {
-    val cur = snapshot(root)
+    val (cur, curState) = current(root)
     if (toVersion == cur.version) return cur.version
     val tgt = snapshot(root, Some(toVersion)) // validates range; throws on
     // a truncated log past every covering checkpoint
@@ -2586,8 +2612,6 @@ object GraftTable {
       s"restore: version $toVersion references ${missingDv.size} deletion-" +
         s"vector file(s) already vacuumed (e.g. ${missingDv.head}) — " +
         "unrecoverable; raise the vacuum/retention horizon")
-    val curState = replayState(root, cur.version)
-    val curPb = partitioning(root, Some(cur.version))
     val curSet = cur.files.toSet; val tgtSet = tgt.files.toSet
     val removes = cur.files.filterNot(tgtSet).sorted.map(removeAction)
     val reAdded = tgt.files.filterNot(curSet).toSet
@@ -2612,7 +2636,7 @@ object GraftTable {
       }
     }
     val meta = if (tgt.schemaDdl != cur.schemaDdl ||
-        tgtState.partitionBy != curPb ||
+        tgtState.partitionBy != curState.partitionBy ||
         tgtState.colMap != curState.colMap)
       Seq(metaAction(tgt.schemaDdl, tgtState.partitionBy,
         tgtState.colMap.toMap))
@@ -2639,8 +2663,7 @@ object GraftTable {
   def dropPartition(root: String, values: Map[String, String]): Long = {
     require(values.nonEmpty, "dropPartition: name at least one " +
       "partition column = value pair")
-    val snap = snapshot(root)
-    val st = replayState(root, snap.version)
+    val (snap, st) = current(root)
     fireRaceHook()
     require(st.partitionBy.nonEmpty,
       s"graft_table $root: not a partitioned table — use deleteWhere")
@@ -2663,9 +2686,10 @@ object GraftTable {
     // into the dropped partition, the outcome serializes as
     // drop-then-insert (the drop removes exactly the files it resolved);
     // concurrent DML on a victim file still aborts
-    commitDml(root, snap.version, victims.sorted.map(removeAction),
-      depFiles = victims.toSet, AddsNeverConflict, st.partitionBy,
-      "dropPartition")
+    transact(root, "dropPartition", Some(st), enforceWith = None,
+      replay = Some(Replay(victims.toSet, _ => AddsNeverConflict)))(_ => ()) {
+      (_, _) => Some(victims.sorted.map(removeAction))
+    }.get
   }
 
   // -- CHECK constraints -------------------------------------------------------
@@ -2675,9 +2699,7 @@ object GraftTable {
     * dropConstraint actions, checkpointed like every other state), so
     * they survive overwrite, truncation, and restore. */
   def constraints(root: String, asOf: Option[Long] = None): Map[String, String] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    replayState(root, asOf.getOrElse(latest)).constraints.toMap
+    stateAt(root, asOf).constraints.toMap
   }
 
   /** ADD CONSTRAINT `name` CHECK (`check`) — validated against ALL live
@@ -2691,8 +2713,7 @@ object GraftTable {
       check: String): Long = {
     require(name.trim.nonEmpty && check.trim.nonEmpty,
       "addConstraint: name and check predicate are both required")
-    val snap = snapshot(root)
-    val st = replayState(root, snap.version)
+    val (snap, st) = current(root)
     val existing = st.constraints
     require(!existing.contains(name),
       s"graft_table $root: constraint '$name' already exists " +
@@ -2714,8 +2735,8 @@ object GraftTable {
   /** DROP CONSTRAINT — unknown names fail loud (a typo must not
     * silently leave the real constraint in force). */
   def dropConstraint(root: String, name: String): Long = {
-    val snap = snapshot(root)
-    val existing = replayState(root, snap.version).constraints
+    val (snap, st) = current(root)
+    val existing = st.constraints
     require(existing.contains(name),
       s"graft_table $root: no constraint '$name' to drop " +
         s"(have: ${if (existing.isEmpty) "none" else existing.keys.mkString(", ")})")
@@ -2736,9 +2757,7 @@ object GraftTable {
     * commit's write volume on the touched subset, a cost a table should
     * opt into, not discover. */
   def tableProperties(root: String, asOf: Option[Long] = None): Map[String, String] = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    replayState(root, asOf.getOrElse(latest)).properties.toMap
+    stateAt(root, asOf).properties.toMap
   }
 
   /** SET/UNSET a table property as one commit (`value = None` unsets). */
@@ -2765,44 +2784,17 @@ object GraftTable {
     n
   }
 
-  /** Stage `df` (table columns + `_change_type`) as immutable parquet
-    * under cdf/ and return the cdc actions — the change-data twin of
-    * [[stageDataFiles]]: invisible until a commit references it, orphans
-    * reclaimed by vacuum. */
-  private def stageCdcFiles(df: DataFrame, root: String): Seq[ObjectNode] = {
-    val stamp = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val staging = Paths.get(root, s"_staging_$stamp")
-    org.apache.spark.sql.GraftSqlBridge.withConf(df,
-        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
-      .write.mode("overwrite").parquet(staging.toString)
-    Files.createDirectories(Paths.get(root, "cdf"))
-    val parts = {
-      val s = Files.list(staging)
-      try s.iterator().asScala
-        .filter(_.getFileName.toString.endsWith(".parquet"))
-        .toSeq.sortBy(_.getFileName.toString)
-      finally s.close()
+  /** Stage `df` (table columns + `_change_type`) as parquet under cdf/
+    * and return the cdc actions — the change-data twin of
+    * [[stageDataFiles]], through the same [[stageParquet]] contract. */
+  private def stageCdcFiles(staged: Staged, df: DataFrame,
+      root: String): Seq[ObjectNode] =
+    stageParquet(staged, df, root, "cdf")(
+      (pinned, staging) => pinned.write.mode("overwrite").parquet(staging)) {
+      (_, part) =>
+        val rel = part.rel("cdc")
+        (rel, cdcAction(rel, part.rows))
     }
-    val hconf = df.sparkSession.sessionState.newHadoopConf()
-    val actions = parts.zipWithIndex.flatMap { case (p, i) =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new org.apache.hadoop.fs.Path(p.toUri), hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val cnt = try r.getRecordCount finally r.close()
-      if (cnt == 0L) None
-      else {
-        val rel = s"cdf/${stamp}_cdc$i.parquet"
-        Files.move(p, Paths.get(root).resolve(rel),
-          StandardCopyOption.ATOMIC_MOVE)
-        Some(cdcAction(rel, cnt))
-      }
-    }
-    val leftovers = Files.walk(staging)
-    try leftovers.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally leftovers.close()
-    actions
-  }
 
   // -- deletion vectors (merge-on-read DML) -----------------------------------
   //
@@ -2998,7 +2990,7 @@ object GraftTable {
     * parallel across files, never a single-task funnel. Per-file
     * cardinalities come from a file-count-bounded aggregate (row indexes
     * themselves never touch the driver). */
-  private def stageDvFiles(spark: SparkSession, root: String,
+  private def stageDvFiles(staged: Staged, spark: SparkSession, root: String,
       state: LogState, deleted: DataFrame,
       affectedRel: Seq[String]): Seq[ObjectNode] = {
     val relOfName = affectedRel.map(r =>
@@ -3009,8 +3001,7 @@ object GraftTable {
       .select(col("__f"), col("__i")).distinct()
     val counts = all.groupBy(col("__f")).count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val stamp = java.util.UUID.randomUUID().toString.replace("-", "").take(12)
-    val staging = Paths.get(root, s"_staging_$stamp")
+    val seen = scala.collection.mutable.HashSet.empty[String]
     // Pinned session clone: a dv action REPLACES the file's cumulative
     // vector on replay, so each data file's vector MUST land as exactly
     // one parquet part — a caller session with maxRecordsPerFile set
@@ -3018,41 +3009,22 @@ object GraftTable {
     // superseded the first (resurrecting earlier deleted rows). The
     // repartition puts each file's rows in one task; the pin stops the
     // writer from re-splitting them.
-    org.apache.spark.sql.GraftSqlBridge.withConf(
-        all.repartition(col("__f")).withColumnRenamed("__i", "idx"),
-        "spark.sql.files.maxRecordsPerFile" -> "0")
-      .write.mode("overwrite").partitionBy("__f").parquet(staging.toString)
-    Files.createDirectories(Paths.get(root, "dv"))
-    val parts = {
-      val s = Files.walk(staging)
-      // regular files only: the partition DIRS themselves are named
-      // `__f=<datafile>.parquet` and would match a name-only filter
-      try s.iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .map(p => (staging.relativize(p.getParent).toString, p))
-        .toSeq.sortBy(_._1)
-      finally s.close()
+    stageParquet(staged, all.repartition(col("__f")).withColumnRenamed(
+        "__i", "idx"), root, "dv", "spark.sql.files.maxRecordsPerFile" -> "0")(
+      (pinned, staging) =>
+        pinned.write.mode("overwrite").partitionBy("__f").parquet(staging)) {
+      (_, part) =>
+        // exactly-one-part invariant (see the pinned write above): replay
+        // keeps only the LAST dv action per data file, so a split vector
+        // would silently drop rows — fail loud instead of corrupting
+        require(seen.add(part.dir),
+          s"graft_table $root: deletion-vector staging split a file's vector " +
+            s"into multiple parts (${part.dir}) — one dv action per data " +
+            "file is a replay invariant")
+        val dataName = unescapePathName(part.dir.stripPrefix("__f="))
+        val rel = part.rel("dv")
+        (rel, dvAction(relOfName(dataName), Some(rel), counts(dataName)))
     }
-    // exactly-one-part invariant (see the pinned write above): replay
-    // keeps only the LAST dv action per data file, so a split vector
-    // would silently drop rows — fail loud instead of corrupting
-    val multi = parts.groupBy(_._1).collect { case (d, ps) if ps.size > 1 => d }
-    require(multi.isEmpty,
-      s"graft_table $root: deletion-vector staging split a file's vector " +
-        s"into multiple parts (${multi.mkString(", ")}) — one dv action " +
-        "per data file is a replay invariant")
-    val actions = parts.zipWithIndex.map { case ((dir, p), i) =>
-      val dataName = unescapePathName(dir.stripPrefix("__f="))
-      val rel = s"dv/${stamp}_dv$i.parquet"
-      Files.move(p, Paths.get(root).resolve(rel), StandardCopyOption.ATOMIC_MOVE)
-      dvAction(relOfName(dataName), Some(rel), counts(dataName))
-    }
-    val leftovers = Files.walk(staging)
-    try leftovers.sorted(java.util.Comparator.reverseOrder())
-      .iterator().asScala.foreach(Files.deleteIfExists(_))
-    finally leftovers.close()
-    actions
   }
 
   /** Full-table constraint audit: violation count per constraint (0 =
@@ -3061,8 +3033,7 @@ object GraftTable {
     * re-validate resurrected files) or to certify externally-produced
     * data. One pass, all constraints counted together. */
   def verifyConstraints(spark: SparkSession, root: String): Map[String, Long] = {
-    val snap = snapshot(root)
-    val state = replayState(root, snap.version)
+    val (snap, state) = current(root)
     val cons = state.constraints.toMap
     if (cons.isEmpty) return Map.empty
     if (snap.files.isEmpty) return cons.map { case (k, _) => k -> 0L }
@@ -3109,23 +3080,25 @@ object GraftTable {
     * write-side CHECK gate. Probes only the delta (the files this commit
     * is adding), so an append of 1k rows into a 100 TB table validates
     * 1k rows; the first violating row aborts with the constraint name
-    * and the row. Called by every data-adding path (write, writeEvolve,
-    * appendBatch, merge, updateWhere); deleteWhere only shrinks row sets
-    * and restore is metadata-only by contract (see verifyConstraints). */
+    * and the row. `st` is the state the commit lands on (None: no table
+    * yet). Run by [[transact]] for every op that adds new rows (write,
+    * writeEvolve, appendBatch, merge, updateWhere); deleteWhere only
+    * shrinks row sets, optimize only re-lays them out, dropPartition adds
+    * nothing, and restore is metadata-only by contract (see
+    * verifyConstraints). */
   private def enforceConstraints(spark: SparkSession, root: String,
-      adds: Seq[ObjectNode], atVersion: Long, ctx: String): Unit = {
-    if (adds.isEmpty || atVersion < 1) return
-    val st = replayState(root, atVersion)
-    val cons = st.constraints
-    if (cons.isEmpty) return
-    val files = adds.map(_.get("add").get("path").asText())
+      actions: Seq[ObjectNode], st: Option[LogState], ctx: String): Unit = {
+    val files = actions.filter(_.has("add"))
+      .map(_.get("add").get("path").asText())
+    if (files.isEmpty || st.forall(_.constraints.isEmpty)) return
+    val cons = st.get.constraints
     // the staged files' OWN schema (self-describing; an evolving write's
     // files already carry the widened shape — in PHYSICAL names on a
     // mapped table, renamed to logical for the CHECK expressions)
     val schemaDdl = spark.read
       .parquet(files.map(f => Paths.get(root).resolve(f).toString): _*)
       .schema.toDDL
-    val logOf = st.colMap.map(_.swap).toMap
+    val logOf = st.get.colMap.map(_.swap).toMap
     cons.foreach { case (name, check) =>
       violationProbe(spark, root, files, schemaDdl, name, check, logOf)
         .foreach {
@@ -3145,8 +3118,8 @@ object GraftTable {
     * small-file problem this exists for: per-micro-batch streaming ACID
     * commits (appendBatch) add one small file set per batch — at 100 TB
     * an un-optimized ingest table becomes a metadata + open() storm.
-    * A commit race aborts like merge (the rewrite was computed against a
-    * snapshot another writer replaced); re-run against the fresh one.
+    * A commit race resolves like merge's: concurrent appends never
+    * conflict with a layout rewrite; DML on a compacted file aborts it.
     * Without zorder the pack is a shuffle-free coalesce read of the old
     * files; with it, one range shuffle on the Morton key. */
   def optimize(spark: SparkSession, root: String, targetFiles: Int,
@@ -3156,12 +3129,11 @@ object GraftTable {
     require(zorderBy.isEmpty ||
       (zorderBy.length >= 2 && zorderBy.length <= 4),
       s"optimize: zorderBy takes 2-4 columns, got ${zorderBy.mkString(",")}")
-    val snap = snapshot(root)
+    val (snap, state) = current(root)
     if (snap.files.isEmpty) return snap.version // nothing to lay out
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val state = replayState(root, snap.version)
     fireRaceHook()
-    val pb = partitioning(root, Some(snap.version))
+    val pb = state.partitionBy
     // partition-scoped compaction: rewrite ONLY the named partitions'
     // files — at 100 TB, OPTIMIZE is a rolling per-partition pass, never
     // a whole-table rewrite. Values name partition columns (subset ok);
@@ -3207,13 +3179,16 @@ object GraftTable {
     // dataChange=false: a layout-only rewrite is NOT new data — the
     // change feed (`changes`) skips these adds, so an OPTIMIZE between
     // two feed reads cannot re-deliver the whole table
-    val adds = stageDataFiles(laid, root, dataChange = false, partitionBy = pb)
     // a concurrent APPEND never conflicts with a layout rewrite — the
     // new files simply stay live beside the compacted ones (the
     // streaming-ingest + background-OPTIMIZE composition); concurrent
     // DML on any compacted file still aborts via the dependency set
-    commitDml(root, snap.version, victims.map(removeAction) ++ adds,
-      depFiles = victims.toSet, AddsNeverConflict, pb, "optimize")
+    transact(root, "optimize", Some(state), enforceWith = None,
+      replay = Some(Replay(victims.toSet, _ => AddsNeverConflict)))(
+      stageDataFiles(_, laid, root, Some(state), dataChange = false,
+        partitionBy = pb)) { (adds, _) =>
+      Some(victims.map(removeAction) ++ adds)
+    }.get
   }
 
   /** DESCRIBE DETAIL parity: one-row table summary from log metadata
@@ -3223,8 +3198,7 @@ object GraftTable {
     * trigger's own inputs), and whether column mapping is active.
     * Zero data IO. */
   def describe(spark: SparkSession, root: String): DataFrame = {
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
+    val latest = headVersion(root)
     val st = replayState(root, latest)
     import spark.implicits._
     Seq((latest,
@@ -3258,9 +3232,7 @@ object GraftTable {
       deadRowFraction: Double = 0.2): Option[Long] = {
     require(deadRowFraction > 0 && deadRowFraction <= 1,
       s"autoCompact: deadRowFraction in (0, 1], got $deadRowFraction")
-    val latest = latestVersion(root).getOrElse(
-      throw new IllegalArgumentException(s"not a graft_table: $root"))
-    val st = replayState(root, latest)
+    val st = stateAt(root)
     // two triggers, both decided from log metadata alone (zero IO when
     // the answer is "no"): small-file sprawl (streaming ingest), and
     // dead-row fraction (merge-on-read DML accumulating vectors — the
@@ -3401,12 +3373,7 @@ object GraftTable {
       .filter(p => p.getFileName.toString.startsWith("_staging_") &&
         oldEnough(p))
       .foreach { st =>
-        if (!dryRun) {
-          val w = Files.walk(st)
-          try w.sorted(java.util.Comparator.reverseOrder())
-            .iterator().asScala.foreach(Files.deleteIfExists(_))
-          finally w.close()
-        }
+        if (!dryRun) deleteTree(st)
         removed += st.getFileName.toString
       }
     finally rs.close()

@@ -25,6 +25,21 @@ class GraftTableSpec extends SparkSpecBase {
     root
   }
 
+  /** Every file under `root/sub` plus any `_staging_*` dir, as sorted
+    * root-relative paths — what a failed op must leave as it found. */
+  private def filesUnder(root: String, sub: String = ""): Seq[String] = {
+    val top = Paths.get(root, sub)
+    if (!Files.exists(top)) Nil
+    else {
+      val w = Files.walk(top)
+      try w.iterator().asScala
+        .filter(p => Files.isRegularFile(p) ||
+          p.getFileName.toString.startsWith("_staging_"))
+        .map(p => Paths.get(root).relativize(p).toString).toSeq.sorted
+      finally w.close()
+    }
+  }
+
   test("write/read round-trip, append, and per-version time travel") {
     val root = freshRoot("rt")
     val v1 = GraftTable.write(spark,
@@ -297,6 +312,31 @@ class GraftTableSpec extends SparkSpecBase {
     GraftTable.restore(spark, root, 6L)                             // v9
     GraftTable.constraints(root) shouldBe Map("x_pos" -> "x > 0")
     GraftTable.verifyConstraints(spark, root) shouldBe Map("x_pos" -> 1L)
+  }
+
+  test("a CHECK-rejected updateWhere or merge on a deletion-vector + " +
+    "change-feed table leaves its version and every file as they were") {
+    val root = freshRoot("cons_cleanup")
+    GraftTable.write(spark, (1L to 6L).map(i => (i, i * 10.0)).toDF("k", "v")
+      .repartition(2), root, "overwrite")
+    GraftTable.setProperty(root, "changeDataFeed", Some("true"))
+    GraftTable.setProperty(root, "deletionVectors", Some("true"))
+    GraftTable.addConstraint(spark, root, "v_small", "v < 1000")
+    val top = GraftTable.latestVersion(root)
+    val before = filesUnder(root)
+    // both ops stage data, dv/ and cdf/ files before the constraint
+    // rejects their adds; none of them may outlive the failed op
+    (the[IllegalArgumentException] thrownBy GraftTable.updateWhere(spark,
+      root, "k = 2", Map("v" -> "5000.0")))
+      .getMessage should include("v_small")
+    GraftTable.latestVersion(root) shouldBe top
+    filesUnder(root) shouldBe before
+    (the[IllegalArgumentException] thrownBy GraftTable.merge(spark, root,
+      Seq((3L, 9000.0), (7L, 1.0)).toDF("k", "v"), Seq("k")))
+      .getMessage should include("v_small")
+    GraftTable.latestVersion(root) shouldBe top
+    filesUnder(root) shouldBe before
+    GraftTable.read(spark, root).count() shouldBe 6L
   }
 
   test("timestampAsOf: commit-ts time travel resolves the newest commit at or " +
@@ -1575,12 +1615,18 @@ class GraftTableSpec extends SparkSpecBase {
       .as[(String, Long, Double)].collect() shouldBe Array(
       ("p1", 1L, 11.0), ("p1", 2L, 20.0), ("p2", 3L, 33.0), ("p2", 4L, 40.0))
     // TRUE conflict: both writers touch partition p1 — the loser aborts
-    GraftTable.testRaceHook = () => GraftTable.merge(spark, root,
-      Seq(("p1", 2L, 22.0)).toDF("p", "k", "v"), Seq("p", "k"))      // v4
+    // and deletes the data files it staged
+    var racerFiles = Seq.empty[String]
+    GraftTable.testRaceHook = () => {
+      GraftTable.merge(spark, root,
+        Seq(("p1", 2L, 22.0)).toDF("p", "k", "v"), Seq("p", "k"))    // v4
+      racerFiles = filesUnder(root, "data")
+    }
     (the[GraftTable.ConcurrentWriteException] thrownBy
       GraftTable.merge(spark, root,
         Seq(("p1", 1L, 111.0)).toDF("p", "k", "v"), Seq("p", "k")))
       .getMessage should include("conflicts with a concurrent commit")
+    filesUnder(root, "data") shouldBe racerFiles
     // deleteWhere scoped to p2 sails past a raced p1 update
     GraftTable.testRaceHook = () => GraftTable.updateWhere(spark, root,
       "p = 'p1' AND k = 1", Map("v" -> "12.0"))                      // v5
@@ -1602,6 +1648,17 @@ class GraftTableSpec extends SparkSpecBase {
     GraftTable.dropPartition(root, Map("p" -> "p2"))                 // v10
     GraftTable.read(spark, root).select($"k").as[Long]
       .collect().sorted shouldBe Array(1L, 2L, 9L, 10L)
+    // a racer that commits the same (appId, batchId) first makes the
+    // streaming append a no-op that keeps none of its staged files
+    def batch() = GraftTable.appendBatch(spark,
+      Seq(("p1", 11L, 110.0)).toDF("p", "k", "v"), root, "occ-app", 1L)
+    GraftTable.testRaceHook = () => {
+      batch() shouldBe Some(11L)                                     // v11
+      racerFiles = filesUnder(root, "data")
+    }
+    batch() shouldBe None
+    GraftTable.latestVersion(root).get shouldBe 11L
+    filesUnder(root, "data") shouldBe racerFiles
   }
 
   test("deletion vectors apply INSIDE the scan (no join node) for " +
