@@ -130,10 +130,11 @@ final case class BranchSpec(
   * `drift` (ADF "allow schema drift" parity; parquet + declared schema):
   *  - allow: evolved files merge (mergeSchema), then the read conforms to
   *    the DECLARED schema by name — missing columns become typed nulls,
-  *    upstream additions are dropped, types cast. Downstream ops never
-  *    see a surprise column.
+  *    upstream additions are dropped, widening casts only; a narrowing
+  *    drift fails and names the column (graft.core.Conform). Downstream
+  *    ops never see a surprise column.
   *  - strict: fail FAST with the exact column-level drift (missing /
-  *    unexpected / retyped) instead of a confusing resolve error deep in
+  *    extra / retyped) instead of a confusing resolve error deep in
   *    some later transform.
   * csv/json don't take a drift policy: their readers already force the
   * declared schema at parse time (csv maps by POSITION — by-name drift
@@ -366,7 +367,9 @@ final case class TransformSpec(
   *  - add_nulls: the output conforms to the UNION by name — columns the
   *    target has but the new output lacks are appended as typed nulls
   *    (old readers keep every column they know), genuinely new columns
-  *    are kept. Type conflicts always fail. With mode=overwrite the
+  *    are kept. Type conflicts always fail under both policies;
+  *    nullability (a `split()` array's containsNull, say) is not a type
+  *    change. With mode=overwrite the
   *    rewritten target carries the union schema outright; with append
   *    the new files do, and readers merge (source drift:allow handles
   *    exactly that shape). */

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 
 import graft.config._
+import graft.core.Conform
 import graft.ext.GraftFunctions
 import graft.streaming.StreamOps
 
@@ -694,7 +695,13 @@ object PipelineRunner {
           "validation should have caught this (kafka in a transform " +
           "`table:` or check `ref_table:` is not supported)")
     }
-    val conformed = applyDrift(base, s)
+    // schema drift policy (see SourceSpec): project under the DECLARED
+    // names and types; strict also rejects any column-level drift
+    val conformed = s.drift.fold(base) { policy =>
+      val c = Conform(base, StructType.fromDDL(s.schema.get))
+      if (policy == "strict") c.exact("source schema drift under strict policy")
+      else c.project(s"source $path drift") // allow
+    }
     // incremental high-water mark: a plain typed comparison that pushes
     // down into the scan (parquet stats pruning / jdbc WHERE); no state
     // file yet = the initial full load.
@@ -704,64 +711,6 @@ object PipelineRunner {
           col(inc.watermarkCol) > expr(s"CAST('${v.replace("'", "''")}' AS $t)"))
       }
     }
-  }
-
-  /** Schema drift policy (parquet + declared schema; see SourceSpec):
-    * allow = conform BY NAME to the declared schema (missing → typed
-    * null, extras dropped, types cast — one projection, no extra scan);
-    * strict = fail fast with the exact column-level drift. */
-  private def applyDrift(base: DataFrame, s: SourceSpec): DataFrame =
-    s.drift match {
-      case None => base
-      case Some("allow") =>
-        val declared = StructType.fromDDL(s.schema.get)
-        // name matching follows the session's resolution rules: under the
-        // default spark.sql.caseSensitive=false a case-drifted column
-        // (score → Score) must CONFORM, not silently become null
-        val resolve = driftResolver(base)
-        base.select(declared.fields.map { f =>
-          resolve(f.name) match {
-            case Some(actual) => col(actual).cast(f.dataType).as(f.name)
-            case None         => lit(null).cast(f.dataType).as(f.name)
-          }
-        }.toSeq: _*)
-      case Some("strict") =>
-        val declared = StructType.fromDDL(s.schema.get)
-        val resolve = driftResolver(base)
-        val actM = base.schema.fields.map(f => f.name -> f.dataType).toMap
-        val declM = declared.fields.map(f => f.name -> f.dataType).toMap
-        val matchedActuals = declared.fields.flatMap(f => resolve(f.name)).toSet
-        val missing = declM.keySet.filter(resolve(_).isEmpty)
-        val extra = actM.keySet.diff(matchedActuals)
-        val retyped = declared.fields.flatMap { f =>
-          resolve(f.name).collect {
-            case a if actM(a) != f.dataType =>
-              s"${f.name}: declared ${f.dataType.sql}, found ${actM(a).sql}"
-          }
-        }
-        require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-          s"source schema drift under strict policy — " +
-            s"missing: [${missing.toSeq.sorted.mkString(",")}] " +
-            s"unexpected: [${extra.toSeq.sorted.mkString(",")}] " +
-            s"retyped: [${retyped.toSeq.sorted.mkString("; ")}]")
-        // project under the DECLARED names (a case-only drift would
-        // otherwise leak the file's casing into downstream resolution)
-        base.select(declared.fields.map(f =>
-          col(resolve(f.name).get).as(f.name)).toSeq: _*)
-      case Some(other) => throw new IllegalArgumentException(
-        s"unknown drift policy '$other'")
-    }
-
-  /** Declared-name → actual-column resolver honoring the session's
-    * spark.sql.caseSensitive (default false, like Spark's own analysis). */
-  private def driftResolver(base: DataFrame): String => Option[String] = {
-    val caseSensitive = base.sparkSession.conf
-      .getOption("spark.sql.caseSensitive").exists(_.toBoolean)
-    val norm: String => String =
-      if (caseSensitive) identity
-      else _.toLowerCase(java.util.Locale.ROOT) // locale-independent, like Spark
-    val byName = base.columns.map(c => norm(c) -> c).toMap
-    name => byName.get(norm(name))
   }
 
   // -- validation (§2.C) ----------------------------------------------------
@@ -1192,14 +1141,10 @@ object PipelineRunner {
             // types too, not just names: a type-drifted change set would
             // otherwise coerce through the struct-array conditional and
             // silently WIDEN the published dimension's schema
-            val retyped = carried.filter(cn =>
-              updates.schema(cn).dataType.catalogString !=
-                df.schema(cn).dataType.catalogString)
-            require(retyped.isEmpty, "merge scd2: change-set column types " +
-              "must match the base — " + retyped.map(cn =>
-                s"$cn: ${updates.schema(cn).dataType.sql} vs base " +
-                  s"${df.schema(cn).dataType.sql}").mkString("; ") +
-              " — cast upstream (op: cast) before the merge")
+            val typed = Conform(updates.drop(effCol), df.drop(scdCols: _*).schema)
+            require(typed.retyped.isEmpty, "merge scd2: change-set column " +
+              s"types must match the base (${typed.describe}) — cast " +
+              "upstream (op: cast) before the merge")
             requireUniqueKeys()
             // a null effective date would silently corrupt both the
             // close-out and the new version — fail fast (bounded probe,
@@ -1888,53 +1833,20 @@ object PipelineRunner {
     }
   }
 
-  /** Write-side schema evolution (SinkSpec.evolve; parquet path sinks).
-    * Compares the output schema to the EXISTING target's by name
-    * (case-insensitive, like Spark's resolver) and either fails with the
-    * exact drift or conforms the output to the union — see SinkSpec. */
-  private def evolved(df: DataFrame, s: SinkSpec): DataFrame = s.evolve match {
-    case None => df
-    case Some(policy) =>
-      val target = new org.apache.hadoop.fs.Path(s.path)
-      val fs = target.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-      val existing =
-        if (!fs.exists(target)) None
-        else scala.util.Try(df.sparkSession.read.parquet(s.path).schema).toOption
-      existing match {
-        case None => df // first write (or unreadable/empty target): as-is
-        case Some(old) =>
-          def key(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-          val cur = df.schema
-          val curOf = cur.map(f => key(f.name) -> f).toMap
-          val oldOf = old.map(f => key(f.name) -> f).toMap
-          val retyped = old.flatMap { f =>
-            curOf.get(key(f.name)).collect {
-              case c if c.dataType != f.dataType =>
-                s"${f.name}: ${f.dataType.sql} -> ${c.dataType.sql}"
-            }
-          }
-          require(retyped.isEmpty, s"sink ${s.path}: column type drift " +
-            retyped.mkString("[", "; ", "]") +
-            " — evolution never retypes; cast upstream or version the dataset")
-          val missing = old.filterNot(f => curOf.contains(key(f.name)))
-          val added = cur.filterNot(f => oldOf.contains(key(f.name)))
-          policy match {
-            case "fail" =>
-              require(missing.isEmpty && added.isEmpty,
-                s"sink ${s.path}: schema drift under evolve:fail — missing " +
-                  missing.map(_.name).mkString("[", ",", "]") + ", new " +
-                  added.map(_.name).mkString("[", ",", "]"))
-              df
-            case "add_nulls" =>
-              // union by name: the target's column layout first (old
-              // readers keep every column they know, in the order they
-              // know), typed nulls where the new output dropped one,
-              // genuinely new columns appended after
-              df.select(old.map(f =>
-                curOf.get(key(f.name)).map(c => col(c.name))
-                  .getOrElse(lit(null).cast(f.dataType).as(f.name))) ++
-                added.map(f => col(f.name)): _*)
-          }
-      }
+  /** Write-side schema evolution (SinkSpec.evolve; parquet path sinks):
+    * conform the output BY NAME to the EXISTING target's schema — fail
+    * rejects any column-level drift, add_nulls projects onto the union
+    * (target layout first, typed nulls where the output dropped a column,
+    * new columns appended); a retyped column fails under both. */
+  private def evolved(df: DataFrame, s: SinkSpec): DataFrame = s.evolve.fold(df) { policy =>
+    // first write (no, unreadable or empty target): as-is
+    scala.util.Try(df.sparkSession.read.parquet(s.path).schema).toOption.fold(df) { old =>
+      val c = Conform(df, old)
+      require(c.retyped.isEmpty, s"sink ${s.path}: column type drift " +
+        s"(${c.describe}) — evolution never retypes; cast upstream or " +
+        "version the dataset")
+      if (policy == "fail") c.exact(s"sink ${s.path}: schema drift under evolve:fail")
+      else c.project(s"sink ${s.path}", keepExtra = true) // add_nulls
+    }
   }
 }

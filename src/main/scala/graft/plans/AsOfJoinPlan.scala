@@ -5,6 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.DataType
+import graft.core.Conform
 
 /** §2.D7 as a whole-operator Catalyst extension (SURVEY §2.M tier (c)):
   * a custom `LogicalPlan` + `SparkStrategy` + `SparkPlan` registered via
@@ -113,31 +115,22 @@ object AsOf {
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty,
       s"as-of join output names must be disjoint; rename: ${overlap.mkString(",")}")
-    // Widen mismatched key/ts pairs to a common type up front (cast is a
-    // per-row projection — cheaper than a wrong-answer debug at 100 TB).
-    // The cast lands on a SHADOW column (dropped post-join), never on the
-    // output column itself — an INT key must stay INT in the result.
-    import org.apache.spark.sql.catalyst.analysis.TypeCoercion
-    def fieldType(df: DataFrame, n: String) = df.schema(n).dataType
+    // Compare mismatched key/ts pairs at their common type (Conform.keyType)
+    // on SHADOW columns dropped post-join — an INT key stays INT in the
+    // result.
     var (lCur, rCur) = (left, right)
     val shadows = scala.collection.mutable.Buffer[String]()
+    def at(df: DataFrame, n: String, shadow: String, w: DataType) =
+      if (GraftSqlBridge.sameType(df.schema(n).dataType, w)) (df, n)
+      else { shadows += shadow; (df.withColumn(shadow, col(n).cast(w)), shadow) }
     val cmpPairs = ((leftKeys :+ leftTs) zip (rightKeys :+ rightTs))
       .zipWithIndex.map { case ((ln, rn), i) =>
-        val (lt, rt) = (fieldType(lCur, ln), fieldType(rCur, rn))
-        if (lt == rt) (ln, rn)
-        else TypeCoercion.findTightestCommonType(lt, rt) match {
-          case Some(w) =>
-            val ln2 = if (lt == w) ln else {
-              val n = s"__asof_l_$i"; lCur = lCur.withColumn(n, col(ln).cast(w))
-              shadows += n; n
-            }
-            val rn2 = if (rt == w) rn else {
-              val n = s"__asof_r_$i"; rCur = rCur.withColumn(n, col(rn).cast(w))
-              shadows += n; n
-            }
-            (ln2, rn2)
-          case None => (ln, rn) // AsOfJoinPlan's require reports it
-        }
+        val w = Conform.keyType(s"$ln/$rn", lCur.schema(ln).dataType,
+          rCur.schema(rn).dataType, "as-of join")
+        val (l2, ln2) = at(lCur, ln, s"__asof_l_$i", w)
+        val (r2, rn2) = at(rCur, rn, s"__asof_r_$i", w)
+        lCur = l2; rCur = r2
+        (ln2, rn2)
       }
     val (lNames, rNames) = cmpPairs.unzip
     // Re-alias the right side so its output gets fresh ExprIds — both

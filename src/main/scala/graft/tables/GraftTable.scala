@@ -6,8 +6,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import graft.core.Attribution
+import org.apache.spark.sql.types.{StructField, StructType}
+import graft.core.{Attribution, Conform}
 
 /** Minimal ACID table format over parquet — a Delta/Iceberg-style commit
   * log, self-contained (no external jars; the container is offline).
@@ -1113,10 +1113,10 @@ object GraftTable {
     val pb = st0.fold(Seq.empty[String])(_.partitionBy) // inherit layout
     val (out, metaDdl, mapNew) = st0 match {
       case Some(st) if evolve =>
-        val (conformed, union, newCols, m) = conformEvolved(spark, df, st, root)
+        val (conformed, union, newCols, m) = conformEvolved(df, st, root)
         (conformed, if (newCols.nonEmpty) Some(union.toDDL) else None, m)
-      case _ =>
-        (df, None, st0.fold(Map.empty[String, String])(_.colMap.toMap))
+      case Some(st) => (conformPlain(df, st, root), None, st.colMap.toMap)
+      case None => (df, None, Map.empty[String, String])
     }
     transact(root, s"streaming batch $batchId", st0, Some(spark),
       Some((appId, batchId)), maxRetries)(
@@ -1127,7 +1127,7 @@ object GraftTable {
         if (done(st)) None
         else {
           if (evolve) st0.foreach(s0 => requireSchemaKept(root, s0, st))
-          else st.foreach(s => requireSchemaMatch(out, s.schemaDdl, root))
+          else st.foreach(conformPlain(out, _, root))
           Some(metaDdl.map(d => metaAction(d, pb, mapNew)).toSeq ++
             (if (st.isDefined) adds else metaAction(out.schema.toDDL) +: adds))
         }
@@ -1725,18 +1725,13 @@ object GraftTable {
     if (out.isEmpty) None else Some(out)
   }
 
-  private def requireSchemaMatch(df: DataFrame, schemaDdl: String,
-      root: String): Unit = {
-    val want = StructType.fromDDL(schemaDdl)
-    // names + types only: nullability is PLAN metadata (an aggregate's
-    // output flips nullable across equivalent plans), not a data shape —
-    // parquet files carry the actual values either way
-    def shape(s: StructType) = s.fields.toSeq.map(f => (f.name, f.dataType))
-    require(shape(df.schema) == shape(want),
-      s"graft_table $root: schema mismatch on append/merge — table is " +
-        s"[${want.toDDL}], write is [${df.schema.toDDL}] (conform with " +
-        "select/cast, or overwrite to replace the schema)")
-  }
+  /** A plain append or merge source as the table's columns, under the
+    * table's spelling and order: a missing, extra or retyped column fails
+    * (nullability is plan metadata, not a type — see [[Conform]]). */
+  private def conformPlain(df: DataFrame, st: LogState, root: String): DataFrame =
+    Conform(df, StructType.fromDDL(st.schemaDdl)).exact(s"graft_table $root: " +
+      "schema mismatch on append/merge (conform with select/cast, or " +
+      "overwrite to replace the schema)")
 
   /** The table's declared partition columns at `asOf` (default latest);
     * empty for an unpartitioned table. Pure log metadata. */
@@ -1799,12 +1794,13 @@ object GraftTable {
       else st0.map(_.colMap).filter(_.nonEmpty)
         .fold(Map.empty[String, String])(cm => df.schema.fields.map(f =>
           f.name -> cm.getOrElse(f.name, freshPhysical(f.name))).toMap)
+    val src = if (mode == "append") st0.fold(df)(conformPlain(df, _, root)) else df
     val stageDf =
-      if (mode == "append") st0.fold(df)(s => toPhysical(df, s.colMap))
+      if (mode == "append") st0.fold(src)(s => toPhysical(src, s.colMap))
       else toPhysical(df, owMap)
     transact(root, mode, st0, Some(spark), txn, maxRetries)(
       stageDataFiles(_, stageDf, root, st0, partitionBy = effPb)) { (adds, st) =>
-      if (mode == "append") st.foreach(s => requireSchemaMatch(df, s.schemaDdl, root))
+      if (mode == "append") st.foreach(conformPlain(src, _, root))
       // per-attempt LAYOUT check, mirroring the schema check above: a
       // concurrent overwrite that changed partitionBy between staging and
       // this attempt would otherwise commit files with the old layout's
@@ -1844,8 +1840,7 @@ object GraftTable {
       case Some(v) => replayState(root, v)
     }
     val pb = st0.partitionBy
-    val (conformed, union, newCols, mapNew) =
-      conformEvolved(spark, df, st0, root)
+    val (conformed, union, newCols, mapNew) = conformEvolved(df, st0, root)
     transact(root, "evolving append", Some(st0), Some(spark),
       maxRetries = maxRetries)(
       stageDataFiles(_, toPhysical(conformed, mapNew), root, Some(st0),
@@ -1868,39 +1863,22 @@ object GraftTable {
         s"graft_table $root: schema changed concurrently — re-run the " +
           "evolving append against the fresh snapshot")
 
-  /** Shared evolve conformance: resolve `df` against the snapshot schema
-    * with the SESSION's resolver — Spark analysis is case-insensitive by
-    * default, so a write column `ID` against a table column `id` is the
-    * SAME column (type-checked, selected under the table's spelling),
-    * never a second add-only column that later reads would reject as
-    * ambiguous. Returns (conformed rows under the union schema, union
-    * schema, genuinely-new fields, the column mapping to write under). On
-    * a column-mapped table, genuinely-new columns get FRESH physical
-    * names (a dropped column's old physical data may still live in old
-    * files under the plain name — re-using it would resurrect it). */
-  private def conformEvolved(spark: SparkSession, df: DataFrame,
-      st: LogState, root: String): (DataFrame, StructType,
-      Array[org.apache.spark.sql.types.StructField], Map[String, String]) = {
-    val resolver = spark.sessionState.conf.resolver
-    val table = StructType.fromDDL(st.schemaDdl)
-    df.schema.fields.foreach { f =>
-      table.find(t => resolver(t.name, f.name)).foreach(t =>
-        require(t.dataType == f.dataType,
-          s"graft_table $root: evolve type conflict on '${f.name}' — table " +
-            s"has ${t.dataType.sql}, write has ${f.dataType.sql} (cast first; " +
-            "evolution only ADDS columns, it never changes a type)"))
-    }
-    val newCols = df.schema.fields.filter(f =>
-      !table.exists(t => resolver(t.name, f.name)))
-    val union = StructType(table.fields ++ newCols)
-    val conformed = df.select(union.fields.toSeq.map(f =>
-      df.columns.find(resolver(_, f.name)) match {
-        case Some(c) => col(c).as(f.name) // table's spelling wins
-        case None => lit(null).cast(f.dataType).as(f.name)
-      }): _*)
+  /** An evolving append or merge source projected onto the table with its
+    * new columns appended ([[Conform]]: a write `ID` IS the table's `id`);
+    * a retyped column fails. Returns (conformed rows, union schema, new
+    * fields, the column mapping to write under). On a column-mapped table,
+    * new columns get FRESH physical names (a dropped column's old physical
+    * data may still live in old files under the plain name). */
+  private def conformEvolved(df: DataFrame, st: LogState, root: String)
+      : (DataFrame, StructType, Seq[StructField], Map[String, String]) = {
+    val c = Conform(df, StructType.fromDDL(st.schemaDdl))
+    require(c.retyped.isEmpty, s"graft_table $root: evolve type conflict " +
+      s"(${c.describe}) — cast first; evolution only ADDS columns, it never " +
+      "changes a type")
     val mapping = if (st.colMap.isEmpty) Map.empty[String, String]
-      else st.colMap.toMap ++ newCols.map(f => f.name -> freshPhysical(f.name))
-    (conformed, union, newCols, mapping)
+      else st.colMap.toMap ++ c.extra.map(f => f.name -> freshPhysical(f.name))
+    (c.project(s"graft_table $root", keepExtra = true),
+      StructType(c.target.fields ++ c.extra), c.extra, mapping)
   }
 
   /** Upsert/delete that rewrites ONLY the files containing matched keys.
@@ -1944,8 +1922,6 @@ object GraftTable {
       "graft_table merge: `evolve` (schema-evolving upsert) composes " +
         "with the plain upsert only")
     val (snap, state) = current(root)
-    if (how == "upsert" && !evolve)
-      requireSchemaMatch(updates, snap.schemaDdl, root)
     fireRaceHook()
     // schema EVOLUTION (evolve=true): genuinely-new source columns widen
     // the table schema in the SAME commit (meta + data atomically —
@@ -1954,12 +1930,12 @@ object GraftTable {
     // and on a column-mapped table new columns get fresh physical names.
     val (ups, schema, mapNew, evolvedCols) =
       if (how == "upsert" && evolve) {
-        val (conformed, union, nc, m) =
-          conformEvolved(spark, updates, state, root)
+        val (conformed, union, nc, m) = conformEvolved(updates, state, root)
         (conformed, union, m, nc)
-      } else (updates, StructType.fromDDL(snap.schemaDdl),
+      } else (if (how == "upsert") conformPlain(updates, state, root) else updates,
+        StructType.fromDDL(snap.schemaDdl),
         state.colMap.toMap,
-        Array.empty[org.apache.spark.sql.types.StructField])
+        Seq.empty[StructField])
     // ---- capped key census ---------------------------------------------
     // ONE job either returns the COMPLETE key set (small mode — the
     // MV-maintenance / streaming-CDF shape: a handful to a few thousand
@@ -2002,15 +1978,14 @@ object GraftTable {
       else Nil
     val keys = if (smallKeys) localKeys(keyRows)
       else ups.select(keyCols: _*).distinct()
-    // conform delete keys to the upsert key types BEFORE collecting
-    // (the old distributed path coerced both sides inside the joins; a
-    // LocalRelation claiming int cannot hold collected longs)
-    val delRows = if (smallKeys)
-      deleteKeys.map(_.select(on.zip(keySchema.fields).map { case (k, f) =>
-        col(k).cast(f.dataType).as(f.name) }: _*).distinct().collect().toSeq)
-    else None
-    val delKeys = delRows.map(localKeys).orElse(
-      deleteKeys.map(_.select(keyCols: _*).distinct()))
+    // delete keys as the upsert key types (a LocalRelation claiming int
+    // cannot hold collected longs); a wider delete key that cannot
+    // round-trip into the key type equals no table row and is dropped,
+    // never narrowed onto some other row's key
+    val delConformed = deleteKeys.map(dk => Conform.keys(dk, keySchema,
+      s"graft_table $root: merge deleteKeys").distinct())
+    val delRows = if (smallKeys) delConformed.map(_.collect().toSeq) else None
+    val delKeys = delRows.map(localKeys).orElse(delConformed)
     delRows match {
       case Some(dr) =>
         // SQL-equality set probe, matching what the old left_semi join
@@ -2112,9 +2087,7 @@ object GraftTable {
         // turn that error into data loss). Matched rows take the source
         // value only for columns the ORIGINAL source carried; inserts
         // keep the null fill — there is no target row to preserve.
-        val resolver = spark.sessionState.conf.resolver
-        val srcMissing = schema.fields.map(_.name).filter(n =>
-          !updates.columns.exists(resolver(_, n)))
+        val srcMissing = Conform(updates, schema).missing.map(_.name)
         val post = if (!evolve || srcMissing.isEmpty) post0 else {
           // duplicate-key targets: the non-evolve path collapses every
           // matched target row to the ONE source row per key, so the

@@ -3,6 +3,7 @@ package graft.tables
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.core.Conform
 
 /** Incrementally-maintained materialized aggregate over a [[GraftTable]].
   *
@@ -136,18 +137,18 @@ object MaterializedView {
     val rowCountOut = aggs.find(a => a.fn == "count" && isStar(a.expr)).get.out
     val deltaAgg = delta.groupBy(keys.map(col): _*).agg(
       retractionAggCols(aggs).head, retractionAggCols(aggs).tail: _*)
-    val mvDdl = GraftTable.snapshot(mv).schemaDdl
+    val pinned = pinnedTo(mv)
     val s = delta.sparkSession
     val oldTouched = GraftTable.read(s, mv)
       .join(deltaAgg.select(keys.map(col): _*), keys, "left_semi")
-    val merged = oldTouched.unionByName(conformTo(deltaAgg, mvDdl))
+    val merged = oldTouched.unionByName(pinned(deltaAgg))
       .groupBy(keys.map(col): _*)
       .agg(mergeCols(aggs).head, mergeCols(aggs).tail: _*)
     val companions = sumCompanions(aggs)
     val nullFixed = aggs.filter(_.fn == "sum").foldLeft(merged)((df, a) =>
       df.withColumn(a.out,
         when(col(companions(a.out)) === 0, lit(null)).otherwise(col(a.out))))
-    val combined = conformTo(nullFixed, mvDdl).cache()
+    val combined = pinned(nullFixed).cache()
     try {
       // dead-group deletes and the cursor-bearing upsert land as ONE
       // merge commit (merge's deleteKeys) — a concurrent MV reader or a
@@ -207,13 +208,12 @@ object MaterializedView {
   }
 
   /** Aggregate-output TYPES drift across refreshes (a re-merged DECIMAL
-    * sum widens its precision) — pin every refresh to the MV's logged
-    * schema: same order, same types. Nullability is not pinned; the
-    * table's schema check ignores it (plan metadata, not data shape). */
-  private def conformTo(df: DataFrame, ddl: String): DataFrame = {
-    val want = StructType.fromDDL(ddl)
-    df.select(want.fields.toSeq.map(f =>
-      col(f.name).cast(f.dataType).as(f.name)): _*)
+    * sum widens its precision): a refresh projects onto the MV's logged
+    * schema, and [[Conform]] narrows such a sum only with an overflow
+    * check that fails loud. */
+  private def pinnedTo(mv: String): DataFrame => DataFrame = {
+    val logged = StructType.fromDDL(GraftTable.snapshot(mv).schemaDdl)
+    Conform(_, logged).project(s"materialized view $mv")
   }
 
   /** Bring `mv` up to date with `base`'s latest version — or, when
@@ -249,7 +249,7 @@ object MaterializedView {
         .drop("_commit_version")
       val deltaAgg = delta.groupBy(keys.map(col): _*).agg(
         aggCols(aggs).head, aggCols(aggs).tail: _*)
-      val mvDdl = GraftTable.snapshot(mv).schemaDdl
+      val pinned = pinnedTo(mv)
       // only groups the delta touched need re-merging; the semi-joined
       // old rows are ≤1 per touched group
       val oldTouched = GraftTable.read(spark, mv)
@@ -257,11 +257,9 @@ object MaterializedView {
       // cache: merge executes its source several times (key census, data
       // stage, CDC stage) — without it each action re-runs the delta scan
       // + aggregation + semi-join (mergeSignedDelta already does this)
-      val combined = conformTo(
-        oldTouched.unionByName(conformTo(deltaAgg, mvDdl))
-          .groupBy(keys.map(col): _*)
-          .agg(mergeCols(aggs).head, mergeCols(aggs).tail: _*),
-        mvDdl).cache()
+      val combined = pinned(oldTouched.unionByName(pinned(deltaAgg))
+        .groupBy(keys.map(col): _*)
+        .agg(mergeCols(aggs).head, mergeCols(aggs).tail: _*)).cache()
       try Some(GraftTable.merge(spark, mv, combined, keys,
         txn = Some(appId -> baseV)))
       finally combined.unpersist()
@@ -302,7 +300,7 @@ object MaterializedView {
         .join(touched, keys, "left_semi")
         .groupBy(keys.map(col): _*).agg(
           aggCols(aggs).head, aggCols(aggs).tail: _*)
-      val up = conformTo(freshAgg, GraftTable.snapshot(mv).schemaDdl).cache()
+      val up = pinnedTo(mv)(freshAgg).cache()
       try {
         val dead = touched.join(up.select(keys.map(col): _*), keys, "left_anti")
         Some(GraftTable.merge(spark, mv, up, keys,

@@ -24,8 +24,9 @@ object GraftSqlBridge {
     classic.ExpressionUtils.expression(c)
 
   /** Nullability-insensitive type equality (`DataType.sameType` is
-    * `private[sql]`) — used by AsOfJoinPlan to reject key/timestamp pairs
-    * whose bytes would hash/order differently across the two sides. */
+    * `private[sql]`) — graft.core.Conform's notion of "same type", and
+    * AsOfJoinPlan's check on key/timestamp pairs whose bytes would
+    * hash/order differently across the two sides. */
   def sameType(a: DataType, b: DataType): Boolean = a.sameType(b)
 
   /** Recursive nullable clone (`StructType.asNullable` is

@@ -1074,6 +1074,30 @@ class ConfigPipelineSpec extends SparkSpecBase {
     val e = intercept[IllegalArgumentException](
       PipelineRunner.run(spark, yaml("strict")))
     e.getMessage should (include("drift") and include("extra"))
+    // allow casts only where it widens: an INT id declared BIGINT
+    // conforms, while a BIGINT v declared INT fails while the source frame
+    // is planned (never a wrapped value, never a task failure without the
+    // column's name), under either ANSI setting
+    val nd = Files.createTempDirectory("graft_drift_narrow").toString
+    graft.queries.Sources.writeSingleParquet(
+      Seq((7, 5000000000L)).toDF("id", "v"), s"$nd/a.parquet")
+    def declared(ddl: String) = PipelineSpec.parse(
+      s"""name: drift_narrow
+         |source: {format: parquet, path: "$nd", schema: "$ddl", drift: allow}
+         |""".stripMargin).source
+    PipelineRunner.read(spark, declared("id BIGINT, v BIGINT"))
+      .as[(Long, Long)].collect() shouldBe Array((7L, 5000000000L))
+    for (ansi <- Seq("false", "true")) withClue(s"ansi=$ansi: ") {
+      val was = spark.conf.getOption("spark.sql.ansi.enabled")
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      try {
+        val en = intercept[IllegalArgumentException](
+          PipelineRunner.read(spark, declared("id BIGINT, v INT")))
+        en.getMessage should (include("'v'") and include("BIGINT"))
+        en.getMessage.replace("BIGINT", "") should include("INT")
+      } finally was.fold(spark.conf.unset("spark.sql.ansi.enabled"))(
+        spark.conf.set("spark.sql.ansi.enabled", _))
+    }
     // guard rails: drift needs a declared schema, and is parquet-scoped
     val e2 = intercept[IllegalArgumentException](PipelineSpec.parse(
       s"""name: x
