@@ -70,13 +70,33 @@ object Conform {
     case _ if GraftSqlBridge.sameType(from, to) => c
     case _ if Cast.canUpCast(from, to) => c.cast(to)
     case (f: DecimalType, t: DecimalType) if f.scale == t.scale =>
-      when(c.isNotNull && c.try_cast(t).isNull, raise_error(lit(
-        s"$context: column '$name' (${f.sql}) holds a value that overflows ${t.sql}")))
-        .otherwise(c.try_cast(t))
+      checked(c, name, from, to, context)
     case _ => throw new IllegalArgumentException(
       s"$context: column '$name' is ${from.sql}, which does not widen to " +
         s"${to.sql} — only widening casts conform; cast upstream")
   }
+
+  /** A SQL UPDATE's store assignment of `c` (of type `from`) into column
+    * `name` of type `to`. Looser than [[Conform]]'s widening rule, as SQL
+    * UPDATE is: any type Spark can ANSI-store-assign is accepted (so
+    * `price * 1.1` rounds back onto a DECIMAL(12,2) column), cast with the
+    * overflow check; any other fails here, before a job runs. */
+  def assign(c: Column, name: String, from: DataType, to: DataType,
+      context: String): Column =
+    if (GraftSqlBridge.sameType(from, to)) c
+    else if (Cast.canUpCast(from, to)) c.cast(to)
+    else if (Cast.canANSIStoreAssign(from, to)) checked(c, name, from, to, context)
+    else throw new IllegalArgumentException(
+      s"$context: column '$name' is ${to.sql}, which cannot store a " +
+        s"${from.sql} value — cast the expression")
+
+  /** `c` cast to `to`, failing loud whatever `spark.sql.ansi.enabled`
+    * says when a non-null value does not fit. */
+  private def checked(c: Column, name: String, from: DataType, to: DataType,
+      context: String): Column =
+    when(c.isNotNull && c.try_cast(to).isNull, raise_error(lit(
+      s"$context: column '$name' (${from.sql}) holds a value that overflows ${to.sql}")))
+      .otherwise(c.try_cast(to))
 
   /** The type two keys compare at: their tightest common type. */
   def keyType(name: String, a: DataType, b: DataType, context: String): DataType =

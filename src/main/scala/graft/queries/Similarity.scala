@@ -555,8 +555,9 @@ object Similarity extends QueryPack {
       .where(score6(expr("graft_cosine(e_a, e_b)")) >= threshold)
       .select(col("id_a"), col("id_b"))
     val labels = connectedComponents(assigned.select("vec_id"), pairs)
-    // CC materialized its symmetrized edges (forcing the verify join) and
-    // the labels checkpoint backs the result; the harness releases all
+    // CC's edge checkpoint forced the pair join, and a graph this size
+    // (a few hundred edges) is labelled in driver memory; the labels
+    // checkpoint backs the result, and the harness releases all
     // per-query storage between queries (same ownership as k12)
     assigned.select(col("vec_id"), col("cell"))
       .join(labels.select(col("vec_id"), col("lbl")), Seq("vec_id"))
@@ -597,24 +598,155 @@ object Similarity extends QueryPack {
     semDedupClusters(spark, dir, nCentroids = 16, threshold = 0.35)
   }
 
-  /** Distributed connected components by min-label propagation: each
+  /** Connected components by synchronous min-label propagation: each
     * round every node takes the minimum label among itself and its
-    * neighbors (one shuffle: edge-join + groupBy-min), repeating until the
-    * label sum stops falling — iterations = graph diameter, the standard
-    * large-graph CC loop (cf. the published Hash-to-Min / large-star
-    * designs). The driver loop iterates O(diameter) JOBS, never rows.
-    * `nodes` must carry every vertex (singletons included); `edges` is
-    * directed-as-given and symmetrized here.
+    * neighbors, repeating until no label falls — rounds ≈ graph diameter,
+    * the standard large-graph CC loop (cf. the published Hash-to-Min /
+    * large-star designs). `nodes` must carry every vertex once
+    * (singletons included), with numeric ids; `edges` is
+    * directed-as-given and symmetrized here. Returns (vec_id, lbl), lbl =
+    * the minimum id of the vertex's component.
     *
-    * Retained-memory contract (asserted in SimilarityOpsSpec): during the
-    * loop, block-manager storage holds the symmetrized edge set plus at
-    * most TWO label sets (previous + next, during the handover); each
-    * round releases the prior round's checkpoint the moment the next one
-    * materializes, and the edge set is released before return. The ONLY
-    * storage that survives this call is the returned labels checkpoint,
-    * which the caller owns (lshClusters releases it after expansion). */
+    * Two executors run the same rounds. The edges are materialized and
+    * counted first (`verify_force`); then:
+    *  - in memory ([[componentsInMemory]]) when the packed edge set fits
+    *    [[InMemoryEdgeBytes]] and the ids are integral: one collect of
+    *    packed primitive arrays, the rounds over arrays on the driver, one
+    *    labels job — 3 jobs after the edge checkpoint (count, collect,
+    *    labels), whatever the diameter;
+    *  - distributed ([[componentsDistributed]]) past the cap: one
+    *    checkpointed shuffle round per propagation step, O(diameter) jobs,
+    *    never rows, on the driver.
+    * Both count one `cc_round` per round, refuse to return labels that
+    * have not converged within `maxRounds` (IllegalStateException: the
+    * bound caps the diameter — raise it for genuinely deep graphs), and
+    * give identical labels and round counts (asserted in
+    * SimilarityOpsSpec).
+    *
+    * Retained-memory contract (asserted in SimilarityOpsSpec): the edge
+    * checkpoint is released before return, and the ONLY storage that
+    * survives this call is the returned labels checkpoint, which the
+    * caller owns (lshClusters releases it after expansion). The
+    * distributed loop holds the symmetrized edge set plus at most TWO
+    * label sets at any instant. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
       maxRounds: Int = 50): DataFrame = {
+    // materialize the DIRECTED edges first, with AQE still ON: this one
+    // action forces the caller's (possibly expensive) upstream edge
+    // computation — k12b's LSH-verify join — which benefits from adaptive
+    // shuffle sizing; it also means the symmetrizing union inside the
+    // loop reads both branches from the checkpoint's blocks, so the
+    // upstream runs ONCE, not once per union branch. The count picks the
+    // executor before anything is collected; both executors size from it.
+    // edges_sym used to cover this force AND the symmetrize as one
+    // number, which made the round-15 bimodality (18 s vs 150-180 s on
+    // back-to-back identical runs) unattributable — the split shows
+    // which half the host throttle landed on (it is the verify join: the
+    // longest sustained full-width stage in the query)
+    val (directed, nEdges) = Attribution.timed("verify_force") {
+      val d = Checkpoints.eager(edges.toDF("src", "dst"))
+      (d, d.queryExecution.toRdd.count()) // one job; Dataset.count is two under AQE
+    }
+    val integral = (nodes.schema.fields ++ directed.schema.fields).forall(_.dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    })
+    if (integral && nEdges <= InMemoryEdgeBytes / 16)
+      componentsInMemory(nodes, directed, nEdges, maxRounds)
+    else componentsDistributed(nodes, directed, nEdges, maxRounds)
+  }
+
+  /** Packed-edge bytes (two longs an edge, so 1M edges) up to which
+    * [[connectedComponents]] labels on the driver. The rounds' working
+    * set adds the sorted vertex ids and the int endpoint and label arrays,
+    * about as much again, so the driver holds at most ~40 MB for it. */
+  private val InMemoryEdgeBytes = 16L << 20
+
+  /** The in-memory executor: releases `directed` (materialized, `nEdges`
+    * rows) once collected and returns the labels checkpoint. Vertices are
+    * renumbered 0..n−1 in id order, so a min over indices is the min over
+    * ids and the rounds run over int arrays. */
+  private[graft] def componentsInMemory(nodes: DataFrame, directed: DataFrame,
+      nEdges: Long, maxRounds: Int): DataFrame = {
+    // (src, dst) interleaved, one primitive array per partition: the
+    // collect ships packed longs, never a Row per edge
+    val packed = Attribution.timed("edges_sym") {
+      val parts = if (nEdges == 0) Array.empty[Array[Long]]
+        else directed.select(col("src").cast(LongType), col("dst").cast(LongType))
+          .where(col("src").isNotNull && col("dst").isNotNull)
+          .queryExecution.toRdd.mapPartitions { rows =>
+            val b = Array.newBuilder[Long]
+            rows.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+            Iterator.single(b.result())
+          }.collect()
+      Checkpoints.release(directed)
+      Array.concat(parts.toIndexedSeq: _*)
+    }
+    val ids = packed.clone()
+    java.util.Arrays.sort(ids)
+    var n = 0
+    for (i <- ids.indices if i == 0 || ids(i) != ids(i - 1)) { ids(n) = ids(i); n += 1 }
+    val ends = packed.map(v => java.util.Arrays.binarySearch(ids, 0, n, v))
+    var lbl = Array.range(0, n)
+    // an empty graph is already the (empty) fixpoint: zero rounds, as the
+    // distributed loop's empty-node exit
+    var converged = nEdges == 0 && nodes.isEmpty
+    var rounds = 0
+    while (!converged && rounds < maxRounds) Attribution.timed("cc_round") {
+      val next = lbl.clone()
+      var i = 0
+      while (i < ends.length) {
+        val a = ends(i)
+        val b = ends(i + 1)
+        if (lbl(b) < next(a)) next(a) = lbl(b)
+        if (lbl(a) < next(b)) next(b) = lbl(a)
+        i += 2
+      }
+      converged = java.util.Arrays.equals(next, lbl)
+      lbl = next
+      rounds += 1
+    }
+    if (!converged) throw nonConvergence(maxRounds)
+    // only vertices whose label moved need an entry; the rest label
+    // themselves. `ids` is sorted, so `from` is too.
+    val moved = Array.range(0, n).filter(i => lbl(i) != i)
+    val from = moved.map(ids(_))
+    val to = moved.map(i => ids(lbl(i)))
+    val node = nodes.toDF("vec_id")
+    val id = col("vec_id")
+    val idType = node.schema.head.dataType
+    if (moved.length <= graft.tables.GraftTable.LocalKeyCap) {
+      // a broadcast variable, not a broadcast join: the join would build
+      // its hashed relation in a Spark job of its own. Once the labels are
+      // materialized the executor copies go; the driver copy (≤ 1 MB)
+      // stays referenced by the checkpoint's RDD, which is serialized into
+      // later tasks but never recomputed, and is cleaned up with it.
+      val bc = nodes.sparkSession.sparkContext.broadcast((from, to))
+      val relabel = udf { (v: Long) =>
+        val i = java.util.Arrays.binarySearch(bc.value._1, v)
+        if (i < 0) v else bc.value._2(i)
+      }
+      val out = Checkpoints.eager(
+        node.select(id, relabel(id.cast(LongType)).cast(idType).as("lbl")))
+      bc.unpersist(false)
+      out
+    } else {
+      val spark = nodes.sparkSession
+      import spark.implicits._
+      Checkpoints.eager(node
+        .join(from.zip(to).toSeq.toDF("__id", "__lbl"), id === col("__id"), "left")
+        .select(id, coalesce(col("__lbl").cast(idType), id).as("lbl")))
+    }
+  }
+
+  private def nonConvergence(maxRounds: Int) = new IllegalStateException(
+    s"connectedComponents did not converge within $maxRounds rounds — " +
+      s"graph diameter exceeds the bound; raise maxRounds")
+
+  /** The distributed executor: releases `directed` (materialized, `nEdges`
+    * rows) and returns the labels checkpoint. */
+  private[graft] def componentsDistributed(nodes: DataFrame, directed: DataFrame,
+      nEdges: Long, maxRounds: Int): DataFrame = {
     // AQE is disabled for the duration of the loop (restored on exit):
     // a checkpoint only carries its physical partitioning forward when
     // the captured plan is NOT wrapped in AdaptiveSparkPlanExec (AQE
@@ -626,32 +758,19 @@ object Similarity extends QueryPack {
     // and skew-splitting act on shuffle stages, which this loop's joins
     // no longer have. Iterative loops pinning their partitioning
     // explicitly is the standard large-graph trade.
-    // materialize the DIRECTED edges first, with AQE still ON: this one
-    // action forces the caller's (possibly expensive) upstream edge
-    // computation — k12b's LSH-verify join — which benefits from adaptive
-    // shuffle sizing; it also means the symmetrizing union inside the
-    // loop reads both branches from the checkpoint's blocks, so the
-    // upstream runs ONCE, not once per union branch
-    // edges_sym used to cover this force AND the symmetrize below as one
-    // number, which made the round-15 bimodality (18 s vs 150-180 s on
-    // back-to-back identical runs) unattributable — the split shows
-    // which half the host throttle landed on (it is the verify join: the
-    // longest sustained full-width stage in the query)
-    val directed = Attribution.timed("verify_force")(
-      Checkpoints.eager(edges.toDF("src", "dst")))
     val spark = nodes.sparkSession
     val aqePrev = spark.conf.get("spark.sql.adaptive.enabled")
     val partsPrev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try connectedComponentsLoop(nodes, directed, maxRounds)
+    try distributedLoop(nodes, directed, nEdges, maxRounds)
     finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqePrev)
       spark.conf.set("spark.sql.shuffle.partitions", partsPrev)
     }
   }
 
-  private def connectedComponentsLoop(nodes: DataFrame, directed: DataFrame,
-      maxRounds: Int): DataFrame = {
+  private def distributedLoop(nodes: DataFrame, directed: DataFrame,
+      nEdges: Long, maxRounds: Int): DataFrame = {
     // Eager checkpoint after every round truncates the LOGICAL plan, not
     // just the computation: without it each round's plan embeds every
     // previous round's, and Catalyst re-optimization time grows
@@ -681,19 +800,18 @@ object Similarity extends QueryPack {
     var (labels, sum) = checkpointWithSum(
       nodes.toDF("vec_id").select(col("vec_id"), col("vec_id").as("lbl")))
     if (sum.isEmpty) { Checkpoints.release(directed); return labels }
-    // edges_sym: the loop's own sizing counts + the symmetrize/repartition
-    // checkpoint (verify_force above owns the upstream force), keeping the
-    // stage set disjoint
+    // edges_sym: the loop's own sizing count + the symmetrize/repartition
+    // checkpoint (verify_force owns the upstream force and the edge
+    // count), keeping the stage set disjoint
     val sym = Attribution.timed("edges_sym") {
       // Data-proportional round sizing (AQE is off in the loop, so this is
       // the static stand-in for its coalescing): target ~500k shuffled rows
       // per task, capped by the session setting — at cluster scale
       // rows/500k exceeds the cap and the operator-tuned session value
       // rules; at toy scale this collapses a 32-task round into a few
-      // tasks and removes pure scheduling overhead (counts are free: both
-      // frames are materialized checkpoints).
+      // tasks and removes pure scheduling overhead (the node count is
+      // free: the labels are a materialized checkpoint).
       val spark = nodes.sparkSession
-      val nEdges = directed.count()
       val nNodes = labels.count()
       val sessionParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val loopParts = math.max(1L, math.min(sessionParts.toLong,
@@ -737,9 +855,7 @@ object Similarity extends QueryPack {
     // the graph diameter, so raise it for genuinely deep graphs.
     if (!converged) {
       Checkpoints.release(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge within $maxRounds rounds — " +
-          s"graph diameter exceeds the bound; raise maxRounds")
+      throw nonConvergence(maxRounds)
     }
     labels
   }
@@ -852,9 +968,14 @@ object Similarity extends QueryPack {
     * MEASURED VERDICT (round 14, sf0.1, idle box): the frugal route is
     * NOT faster on this corpus — 664k surviving candidate pairs
     * exact-verify in ~8 s (the token arrays are ~10²; the whole verify
-    * join is ~10 s of k12b's 36 s), while each frugal round pays ~1 s of
+    * join is ~10 s of k12b's 36 s), while each frugal round paid ~1 s of
     * CC/checkpoint fixed cost, and ~2/3 of candidates are LSH false
-    * positives that no amount of connectivity pruning can skip. k12b
+    * positives that no amount of connectivity pruning can skip. The ~1 s
+    * predates in-memory CC: a frugal round's graph (star ∪ one verified
+    * batch) is far under the cap, so its CC is now ~3 jobs, not a
+    * checkpointed shuffle per propagation step. The round's batch, verify
+    * and prune checkpoints remain, and the verdict has not been
+    * re-measured since; until it is, it stands as measured. k12b
     * (verify-everything) therefore stays the default and the benched
     * path. The frugal loop is kept as the documented scale lever for the
     * regime that inverts the trade: per-pair verification cost growing
@@ -973,8 +1094,11 @@ object Similarity extends QueryPack {
     // cand_bands/cand_pairs), verify_encode, verify_force, edges_sym,
     // cc_round (×n) and expand are non-overlapping intervals in call
     // order. verify_force is where the verify join actually RUNS:
-    // connectedComponents' eager checkpoint of the directed edge set
-    // forces it.
+    // connectedComponents' eager checkpoint and count of the directed
+    // edge set force it. edges_sym is the packed edge collect on the
+    // in-memory CC path, the symmetrize checkpoint on the distributed one;
+    // an in-memory cc_round is a pass over driver arrays (milliseconds),
+    // a distributed one a checkpointed shuffle.
     val keyed = Attribution.timed("collapse_keys")(Checkpoints.eager(docs
       .select(col("doc_id"),
         array_sort(array_distinct(col("ts"))).as("ts"),

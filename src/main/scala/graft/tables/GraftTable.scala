@@ -66,6 +66,11 @@ object GraftTable {
 
   private val json = new ObjectMapper()
 
+  /** Rows a driver-built relation may hold and still be broadcast: merge's
+    * small-key mode, and the labels an in-memory connected-components run
+    * returns. Past it the relation joins the way the planner picks. */
+  private[graft] val LocalKeyCap = 64 * 1024
+
   private def logDir(root: String): Path = Paths.get(root, "_graft_log")
   private def dataDir(root: String): Path = Paths.get(root, "data")
   private def verFile(root: String, v: Long): Path =
@@ -1955,11 +1960,10 @@ object GraftTable {
     // census was tried first — Spark's CollectLimit scale-up re-runs
     // the aggregate stage up to 4x, costing more than the full collect
     // of a few MB of key counts.)
-    val localKeyCap = 64 * 1024
     val keyCols = on.map(col)
     val kcDf = ups.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
     val kcRows = Attribution.timed("merge_census")(kcDf.collect())
-    val smallKeys = kcRows.length <= localKeyCap
+    val smallKeys = kcRows.length <= LocalKeyCap
     if (how == "upsert") {
       // SQL MERGE law: one target row must match at most one source row
       val dup = kcRows.find(_.getLong(on.size) > 1)
@@ -2480,9 +2484,10 @@ object GraftTable {
     * matching rows (predicate TRUE; null keeps the old value, per SQL
     * UPDATE) and passing every other row and column through bit-exact.
     * Assignments are resolved against the TABLE schema with the
-    * session's resolver and cast back to the declared column type — an
-    * update can never drift a column's type, and assigning a column the
-    * table does not have fails loud. */
+    * session's resolver and store-assigned to the declared column type
+    * ([[Conform.assign]]) — an update can never drift a column's type or
+    * wrap a value that does not fit, and assigning a column the table
+    * does not have fails loud, before any job runs. */
   def updateWhere(spark: SparkSession, root: String, predicate: String,
       set: Map[String, String], txn: Option[(String, Long)] = None): Long = {
     require(predicate.trim.nonEmpty,
@@ -2491,12 +2496,14 @@ object GraftTable {
     val (snap, state) = current(root)
     val schema = StructType.fromDDL(snap.schemaDdl)
     val resolver = spark.sessionState.conf.resolver
+    val typed = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val assign = set.map { case (name, e) =>
       val f = schema.fields.find(t => resolver(t.name, name)).getOrElse(
         throw new IllegalArgumentException(
           s"updateWhere: SET column '$name' is not in the table schema " +
             s"(${schema.fieldNames.mkString(", ")})"))
-      f.name -> (e, f.dataType)
+      f.name -> Conform.assign(expr(e), f.name, typed.select(expr(e)).schema.head.dataType,
+        f.dataType, "updateWhere")
     }
     if (snap.files.isEmpty) return snap.version
     val pred = expr(predicate)
@@ -2508,7 +2515,7 @@ object GraftTable {
     def applyAssign(df: DataFrame): DataFrame =
       df.select(schema.fields.toSeq.map { f =>
         assign.get(f.name) match {
-          case Some((e, dt)) => expr(e).cast(dt).as(f.name)
+          case Some(v) => v.as(f.name)
           case None => col(f.name)
         }
       }: _*)
@@ -2535,8 +2542,7 @@ object GraftTable {
     val hit = live.where(pred)
     def rewritten = live.select(schema.fields.toSeq.map { f =>
       assign.get(f.name) match {
-        case Some((e, dt)) =>
-          when(pred, expr(e).cast(dt)).otherwise(col(f.name)).as(f.name)
+        case Some(v) => when(pred, v).otherwise(col(f.name)).as(f.name)
         case None => col(f.name)
       }
     }: _*)

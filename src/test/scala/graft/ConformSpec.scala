@@ -94,4 +94,36 @@ class ConformSpec extends SparkSpecBase {
         .project("narrowing spec").as[BigDecimal].head() shouldBe BigDecimal("123.45")
     }
   }
+
+  test("updateWhere store-assigns SET values: an INT overflow fails naming " +
+    "the column and leaves the table as it was; a decimal rescale rounds") {
+    def listing(root: String): Seq[String] = {
+      val w = Files.walk(Paths.get(root))
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).map(_.toString).toSeq.sorted
+      finally w.close()
+    }
+    for (ansi <- Seq(false, true)) withClue(s"ansi=$ansi: ") {
+      val root = freshRoot(s"update_set_$ansi")
+      GraftTable.write(spark, Seq((1L, 7, "10.00"), (2L, 8, "20.05")).toDF("id", "v", "p")
+        .select($"id", $"v", $"p".cast(DecimalType(12, 2)).as("price")), root, "overwrite")
+      val before = (GraftTable.snapshot(root), listing(root))
+      withAnsi(ansi) {
+        // 5000000000 is BIGINT; a plain cast to INT wraps it to 705032704
+        val e = intercept[Exception](
+          GraftTable.updateWhere(spark, root, "id = 1", Map("v" -> "5000000000")))
+        e.getMessage should (include("'v'") and include("INT"))
+        (GraftTable.snapshot(root), listing(root)) shouldBe before
+        // a type that cannot be stored at all fails before any job
+        val e2 = intercept[IllegalArgumentException](
+          GraftTable.updateWhere(spark, root, "id = 1", Map("v" -> "array(v)")))
+        e2.getMessage should (include("'v'") and include("ARRAY<INT>"))
+        (GraftTable.snapshot(root), listing(root)) shouldBe before
+        // DECIMAL(12,2) * 1.1 is DECIMAL(15,3): store assignment rounds it back
+        GraftTable.updateWhere(spark, root, "id = 2", Map("price" -> "price * 1.1"))
+      }
+      GraftTable.read(spark, root).orderBy("id").select($"v", $"price")
+        .as[(Int, BigDecimal)].collect() shouldBe
+        Array((7, BigDecimal("10.00")), (8, BigDecimal("22.06")))
+    }
+  }
 }

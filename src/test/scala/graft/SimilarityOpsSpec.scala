@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -405,6 +406,96 @@ class SimilarityOpsSpec extends SparkSpecBase {
     val got = Similarity.connectedComponents(nodes, edges).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     got shouldBe Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L, 7L -> 7L)
+  }
+
+  /** Labels and recorded `cc_round` count of one CC executor on
+    * (nodes, edges); asserts the call leaves no storage behind. */
+  private def runCc(exec: (DataFrame, DataFrame, Long, Int) => DataFrame,
+      nodes: DataFrame, edges: DataFrame, maxRounds: Int): (Map[Long, Long], Int) = {
+    import graft.core.{Attribution, Checkpoints}
+    Checkpoints.releaseAll(spark)
+    Attribution.clear()
+    try {
+      val directed = Checkpoints.eager(edges.toDF("src", "dst"))
+      val out = exec(nodes, directed, directed.count(), maxRounds)
+      val labels = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Checkpoints.release(out)
+      spark.sparkContext.getPersistentRDDs shouldBe empty
+      val snap = Attribution.snapshotJson()
+      val rounds = "\"cc_round_n\":(\\d+)".r.findFirstMatchIn(snap).map(_.group(1).toInt)
+        .getOrElse(if (snap.contains("\"cc_round\":")) 1 else 0)
+      (labels, rounds)
+    } finally Attribution.clear()
+  }
+
+  test("K12: in-memory and distributed CC give identical labels and round counts") {
+    def graph(nodes: Seq[Long], edges: Seq[(Long, Long)]) =
+      (nodes.toDF("vec_id"), edges.toDF("src", "dst"))
+    // a few hundred nodes on ten shuffled-id paths of 30 (so the minimum
+    // travels far), bridged by random edges, plus 20 singletons
+    val rng = new scala.util.Random(20260417L)
+    val ids = rng.shuffle((0L until 300L).map(_ * 7 + 3))
+    val paths = ids.grouped(30).toSeq.flatMap(p => p.zip(p.tail))
+    val bridges = Seq.fill(6)((ids(rng.nextInt(300)), ids(rng.nextInt(300))))
+    val graphs = Seq(
+      "chain/island/singleton" -> graph(Seq(1L, 2L, 3L, 5L, 6L, 7L),
+        Seq((2L, 3L), (1L, 2L), (5L, 6L))),
+      "empty" -> graph(Nil, Nil),
+      "9-hop chain" -> graph(0L to 9L, (0L until 9L).map(i => (i, i + 1))),
+      "random long paths" -> graph(ids ++ (5000L until 5020L), paths ++ bridges),
+      // more moved labels than GraftTable.LocalKeyCap: the labels join
+      // instead of riding a broadcast variable
+      "star past the local cap" -> graph(0L to 70000L, (1L to 70000L).map(i => (0L, i))))
+    for ((name, (nodes, edges)) <- graphs) withClue(s"$name: ") {
+      val mem = runCc(Similarity.componentsInMemory, nodes, edges, 200)
+      mem shouldBe runCc(Similarity.componentsDistributed, nodes, edges, 200)
+      if (name == "random long paths") {
+        mem._2 should be > 20
+        mem._1.values.toSet.size should be > 20
+      }
+    }
+    val (nodes, chain) = graphs(2)._2
+    for (exec <- Seq[(DataFrame, DataFrame, Long, Int) => DataFrame](
+        Similarity.componentsInMemory, Similarity.componentsDistributed))
+      intercept[IllegalStateException](runCc(exec, nodes, chain, 2))
+        .getMessage should include("did not converge")
+    // the distributed loop in reliable-checkpoint mode, the cluster
+    // posture, which lshClusters no longer reaches at spec scale
+    System.setProperty("graft.checkpoint.dir",
+      java.nio.file.Files.createTempDirectory("graft_reliable_cc").toString)
+    try runCc(Similarity.componentsDistributed, nodes, chain, 200) shouldBe
+      runCc(Similarity.componentsInMemory, nodes, chain, 200)
+    finally System.clearProperty("graft.checkpoint.dir")
+  }
+
+  test("K12: an in-memory CC runs at most 3 jobs once its edges are materialized") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.core.Checkpoints
+    // a 29-hop chain: 30 rounds, each a checkpoint + sum job in the
+    // distributed loop; the in-memory path must not grow with them
+    val nodes = (0L to 29L).toDF("vec_id")
+    val edges = Checkpoints.eager((0L until 29L).map(i => (i, i + 1)).toDF("src", "dst"))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.add(js.stageInfos.map(_.name).mkString(";"))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val out = try {
+      val out = Similarity.connectedComponents(nodes, edges)
+      var last = -1 // listener delivery is async — wait until it settles
+      var spins = 0
+      while (jobs.size != last && spins < 20) {
+        last = jobs.size; Thread.sleep(200); spins += 1
+      }
+      out
+    } finally spark.sparkContext.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    // the first job is verify_force's edge checkpoint; after it: the
+    // edge count, the packed collect and the labels checkpoint
+    withClue(jobs.asScala.mkString("\n")) { jobs.size - 1 should be <= 3 }
+    out.select("lbl").distinct().as[Long].collect() shouldBe Array(0L)
+    Checkpoints.release(out, edges)
   }
 
   test("K12b: LSH-driven clusters equal exact all-pairs Jaccard clusters") {
