@@ -26,4 +26,11 @@ object Session {
   /** Cpu count of the Bench/Verify/Dev session: `SPARK_GRAFT_CPUS`,
     * default 32 (the grading environment's core count). */
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+
+  /** Shuffle partitions of a streaming run's session:
+    * `SPARK_GRAFT_STREAM_PARTITIONS`, default 8 (the per-partition
+    * state-store cost dominates at test scale; raise it to shard state
+    * wide). */
+  def envStreamPartitions: Int =
+    sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8").toInt
 }

@@ -9,6 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 import graft.config._
 import graft.core.Conform
 import graft.ext.GraftFunctions
+import graft.queries.{Events, Relational, TextOps2}
 import graft.streaming.StreamOps
 
 /** SURVEY.md §3.2 EP1 — the config-driven pipeline interpreter: YAML →
@@ -89,7 +90,7 @@ object PipelineRunner {
         graft.streaming.StreamOps.rmrf(cpBase)
         val ss = spark.newSession()
         ss.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+          graft.core.Session.envStreamPartitions.toString)
         // case-insensitive on KEY and VALUE: the stream source honors
         // `withimages: True` via CaseInsensitiveStringMap.getBoolean
         // (Boolean.parseBoolean ignores case), so the dispatch must
@@ -975,38 +976,30 @@ object PipelineRunner {
         df.unpivot(t.cols.map(col).toArray, t.values.map(col).toArray,
           t.name.getOrElse("name"), t.to.getOrElse("value"))
       case "surrogate_key" => // §2.B9 through the config surface: dense ids
-        // from a declared total order. Single-partition window by design —
-        // the op is for bounded dimension tables; fact-side keys should
-        // hash natural keys via `derive` (xxhash64) instead.
+        // from a declared total order (Relational.surrogateKeyOf).
+        // Single-partition window by design — the op is for bounded
+        // dimension tables; fact-side keys should hash natural keys via
+        // `derive` (xxhash64) instead. The declared bound turns "oops,
+        // pointed it at a fact table" into a fast failure instead of a
+        // silent one-task sort.
         require(t.orderBy.nonEmpty,
           "surrogate_key needs `orderBy` for a deterministic sequence")
-        // The declared bound turns "oops, pointed it at a fact table" into
-        // a fast failure instead of a silent one-task sort. The probe is
-        // limit(max+1).count() — early-exit after max+1 rows, NOT a full
-        // scan — and runs once per pipeline build (driver side).
         val maxRows = t.maxRows.getOrElse(throw new IllegalArgumentException(
           "surrogate_key needs `max_rows`: the global row_number window is " +
             "single-partition, safe only on a declared-bounded input"))
         require(maxRows > 0 && maxRows < Int.MaxValue,
           s"surrogate_key max_rows must be in (0, 2^31), got $maxRows — a " +
             "bound that large is not a dimension table")
-        val probed = df.limit((maxRows + 1).toInt).count()
-        require(probed <= maxRows,
-          s"surrogate_key: input exceeds declared max_rows=$maxRows — this " +
-            "op is for bounded dimension tables; hash natural keys for facts")
-        import org.apache.spark.sql.expressions.Window
-        df.withColumn(t.name.getOrElse("sk"),
-          row_number().over(Window.orderBy(t.orderBy.map(sortExpr): _*)).cast("bigint"))
+        Relational.surrogateKeyOf(df, t.orderBy.map(sortExpr),
+          maxRows, t.name.getOrElse("sk"), "surrogate_key")
       case "sessionize" => // gap-based sessionization (ev1 through the
-        // config surface): stamp each row with a per-key session sequence
-        // — a new session starts at the key's first row or after a gap
-        // > `threshold` in the TIME column's own unit. `cols.head` must be
-        // numeric (epoch micros/nanos via a prior `derive` — integer gap
-        // math is exact and engine-portable; a raw timestamp would drag
-        // zone semantics into the compare); remaining cols break ties.
-        // Scale: ONE shuffle on `on` shared by both windows (lag + running
-        // sum ride the same sort), and a downstream aggregate on
-        // (on..., session) reuses the partitioning — see ev1's plan.
+        // config surface, Events.sessionsOf): stamp each row with a
+        // per-key session sequence — a new session starts at the key's
+        // first row or after a gap > `threshold` in the TIME column's own
+        // unit. `cols.head` must be numeric (epoch micros/nanos via a prior
+        // `derive` — integer gap math is exact and engine-portable; a raw
+        // timestamp would drag zone semantics into the compare); remaining
+        // cols break ties.
         require(t.on.nonEmpty, "sessionize needs `on` (the session key)")
         require(t.cols.nonEmpty,
           "sessionize needs `cols`: [time_col, tiebreak...] — time_col is " +
@@ -1020,15 +1013,8 @@ object PipelineRunner {
           s"sessionize: time column '${t.cols.head}' must be numeric " +
             "(derive epoch micros/nanos first) — got " +
             df.schema(t.cols.head).dataType.sql)
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(t.on.map(col): _*)
-          .orderBy(t.cols.map(col): _*)
-        val tc = col(t.cols.head)
-        val isStart = when(lag(tc, 1).over(w).isNull
-          || tc - lag(tc, 1).over(w) > lit(gap), 1).otherwise(0)
-        df.withColumn(t.name.getOrElse("session_seq"),
-          sum(isStart).over(
-            w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        Events.sessionsOf(df, t.on, t.cols.map(col), lit(gap), "__is_start",
+          t.name.getOrElse("session_seq")).drop("__is_start")
       case "diff" => // CDC snapshot diff (d10 through the config surface):
         // df is the OLD snapshot, `table` the NEW one. Emits ONLY the
         // changed rows — the new values for insert/update, the key with
@@ -1225,7 +1211,7 @@ object PipelineRunner {
         val out = t.name.getOrElse("text_dedup")
         Seq(out, "n_tokens", "kept_tokens").foreach(c =>
           requireFreshColumn(df, c, "span_dedup"))
-        graft.queries.TextOps2.spanDedupOf(df, t.cols(0), t.cols(1),
+        TextOps2.spanDedupOf(df, t.cols(0), t.cols(1),
           t.k.getOrElse(8), t.minLen.getOrElse(50), out)
       case "minhash_dedup" => // §2.K6+K12 through the config surface
         // (batch only): banded LSH candidates → exact Jaccard verify →
@@ -1569,28 +1555,17 @@ object PipelineRunner {
             s"redact rule '$v' must be \"LABEL:regex\"")
           (v.substring(0, i), v.substring(i + 1))
         }
-        val src = col(t.cols.head)
-        val cleaned = rules.foldLeft(src) { case (c, (label, re)) =>
-          regexp_replace(c, re, s"[$label]")
-        }
         val out = t.name.getOrElse(t.cols.head)
         if (t.name.isDefined) requireFreshColumn(df, out, "redact")
-        df.withColumn(out, cleaned)
+        df.withColumn(out, TextOps2.redactOf(col(t.cols.head), rules))
       case "quality_filter" => // §2.J13 through the config surface:
         // repetition-based quality gate, pure per-row array math
+        // (TextOps2.dupFrac: an empty or null token array scores null)
         require(t.cols.length == 1, "quality_filter needs `cols: [tokensCol]`")
-        val toks = col(t.cols.head)
         val thr = t.threshold.getOrElse(0.3)
         require(thr >= 0.0 && thr <= 1.0,
           s"quality_filter threshold must be in [0, 1], got $thr")
-        // zero-token guard INSIDE the expression: under ANSI mode (the
-        // Spark 4 default) a bare x / size(toks) throws DIVIDE_BY_ZERO
-        // the moment an upstream tokenize+stopword step empties a row's
-        // array — when() makes empty/null-token rows score null in the
-        // tag variant and fail the predicate (null) in the drop variant,
-        // without relying on And short-circuit order
-        val frac = when(size(toks) > 0,
-          lit(1.0) - size(array_distinct(toks)).cast("double") / size(toks))
+        val frac = TextOps2.dupFrac(col(t.cols.head))
         t.name match {
           case Some(out) =>
             requireFreshColumn(df, out, "quality_filter")
@@ -1607,17 +1582,12 @@ object PipelineRunner {
         val textCol = t.to.getOrElse("text")
         val ng = t.k.getOrElse(5)
         require(ng > 0, s"decontaminate shingle size `k` must be positive, got $ng")
-        def shingles(frame: DataFrame, tokCol: String, keep: Seq[Column]): DataFrame =
-          frame.where(size(col(tokCol)) >= ng)
-            .select(keep :+ explode(expr(
-              s"transform(sequence(1, size(`$tokCol`) - ${ng - 1}), " +
-                s"i -> concat_ws(' ', slice(`$tokCol`, i, $ng)))")).as("__g"): _*)
         val benchRaw = read(spark, benchSrc)
         val bench = t.where.fold(benchRaw)(w => benchRaw.where(expr(w)))
           .select(split(lower(col(textCol)), " ").as("__bt"))
-        val benchShingles = shingles(bench, "__bt", Nil)
+        val benchShingles = TextOps2.shinglesOf(bench, "__bt", ng, Nil, "__g")
           .select(col("__g")).distinct()
-        val contaminated = shingles(df, toks, Seq(col(id).as("__cid")))
+        val contaminated = TextOps2.shinglesOf(df, toks, ng, Seq(col(id).as("__cid")), "__g")
           .join(broadcast(benchShingles), "__g")
           .select(col("__cid")).distinct()
         t.name match {
@@ -1630,10 +1600,10 @@ object PipelineRunner {
           case None =>
             df.join(contaminated, col(id) === col("__cid"), "left_anti")
         }
-      case "pack" => // §2.J11 through the config surface: greedy sequence
-        // packing per shard — cumulative token count windows inside each
-        // shard, pack id = shard × 1e6 + (cumsum − count) div budget.
-        // No global sort at any scale: shards pack independently.
+      case "pack" => // §2.J11 through the config surface (TextOps2.packOf):
+        // greedy sequence packing per shard, pack id = shard × 1e6 +
+        // (cumsum − count) div budget. No global sort at any scale: shards
+        // pack independently.
         require(t.cols.length == 2, "pack needs `cols: [shardCol, orderCol]`")
         val (shard, order) = (t.cols(0), t.cols(1))
         val cnt = t.expr.getOrElse(throw new IllegalArgumentException(
@@ -1642,13 +1612,7 @@ object PipelineRunner {
         require(budget > 0, s"pack budget `k` must be positive, got $budget")
         val out = t.name.getOrElse("pack_id")
         requireFreshColumn(df, out, "pack")
-        import org.apache.spark.sql.expressions.Window
-        val w = Window.partitionBy(col(shard)).orderBy(col(order))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val n = expr(cnt).cast("long")
-        df.withColumn(out,
-          (col(shard).cast("long") * 1000000L +
-            ((sum(n).over(w) - n) / budget).cast("long")).cast("long"))
+        TextOps2.packOf(df, shard, order, expr(cnt).cast("long"), budget, out)
       case "bpe_train" => // learn a BPE merge table from the corpus
         // (graft.ext.Bpe — Sennrich et al. 2016). REPLACES the frame with
         // the merges table (a, b, rank) — sink it, then feed it to

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -69,14 +70,8 @@ object Events extends QueryPack {
       |    AS DECIMAL(18,2)) AS DOUBLE) AS sum_value
       |FROM s GROUP BY user_id, session_seq
       |ORDER BY user_id, session_seq""".stripMargin) { (spark, dir) =>
-    val e = Tables.events(spark, dir)
-    val w = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val flagged = e.withColumn("is_start",
-      when(col("ts") - lag(col("ts"), 1).over(w) > GapNs
-        || lag(col("ts"), 1).over(w).isNull, 1).otherwise(0))
-    val sess = flagged.withColumn("session_seq",
-      sum(col("is_start")).over(w.rowsBetween(Window.unboundedPreceding,
-        Window.currentRow)))
+    val sess = sessionsOf(Tables.events(spark, dir), Seq("user_id"),
+      Seq(col("ts"), col("event_id")), lit(GapNs), "is_start", "session_seq")
     sess.groupBy(col("user_id"), col("session_seq"))
       .agg(
         min(col("event_ts")).as("session_start"),
@@ -85,6 +80,27 @@ object Events extends QueryPack {
         count(lit(1)).as("n_events"),
         money(sum(dec2(col("value")))).as("sum_value"))
       .orderBy(col("user_id"), col("session_seq"))
+  }
+
+  /** Gap-based sessionization over any frame — the engine behind ev1 and
+    * the YAML `sessionize` op. Rows are ordered by `order` inside each
+    * `on` key; a session starts at a key's first row or after a gap
+    * (`order.head` minus its predecessor) strictly greater than `gap`.
+    * Adds the start flag as column `flag` (1 on a session's first row,
+    * else 0) and the key's running session number, from 1, as `out`. The
+    * flag stays in the result, as in ev1's rollup input: a drop here
+    * renumbers the expression ids of ev1's pinned plan (PLANS_r22.md), so
+    * a caller that does not want the flag drops it. Both windows ride one
+    * partitioning and sort: one shuffle on `on`, which a downstream
+    * aggregate on (on..., out) reuses. */
+  def sessionsOf(df: DataFrame, on: Seq[String], order: Seq[Column],
+      gap: Column, flag: String, out: String): DataFrame = {
+    val w = Window.partitionBy(on.map(col): _*).orderBy(order: _*)
+    val t = order.head
+    df.withColumn(flag,
+        when(t - lag(t, 1).over(w) > gap || lag(t, 1).over(w).isNull, 1).otherwise(0))
+      .withColumn(out, sum(col(flag)).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 
   /** ev2 — ordered funnel view → click → purchase: stage N counts only

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -207,26 +207,35 @@ object Relational extends QueryPack {
     * partition window — fine for surrogate keys on dimension tables
     * (bounded), wrong for facts; fact-side keys should derive from
     * natural keys (hash) instead, see i9_hash_misc. The builder enforces
-    * that contract with the same bounded-input guard the YAML
-    * `surrogate_key` op requires (`max_rows` in PipelineRunner): refuse
-    * fact-sized inputs up front, so nobody copies this window shape into
-    * an unbounded pipeline. The probe is limit(n+1).count() — bounded
-    * work even when the input is huge, never a full count. */
+    * that contract through [[surrogateKeyOf]], the code the YAML
+    * `surrogate_key` op runs too: refuse fact-sized inputs up front, so
+    * nobody copies this window shape into an unbounded pipeline. */
   val b9: QueryDef = m(
     "b9_surrogate_key",
     """SELECT ROW_NUMBER() OVER (ORDER BY c_custkey) AS sk, c_custkey, c_name
       |FROM customer ORDER BY c_custkey""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val dim = Tables.customer(spark, dir)
-    val maxRows = 10000000L // declared dimension bound, as in the YAML op
-    require(dim.limit((maxRows + 1).toInt).count() <= maxRows,
-      s"b9_surrogate_key: input exceeds the declared dimension bound " +
-        s"($maxRows rows) — a global row_number window is single-partition; " +
-        "derive fact keys from natural keys (hash) instead")
-    dim
-      .withColumn("sk", row_number().over(Window.orderBy(col("c_custkey"))).cast(LongType))
+    // declared dimension bound: 10M rows
+    surrogateKeyOf(Tables.customer(spark, dir), Seq(col("c_custkey")), 10000000L,
+      "sk", "b9_surrogate_key")
       .select(col("sk"), col("c_custkey"), col("c_name"))
       .orderBy(col("c_custkey"))
+  }
+
+  /** Dense surrogate ids 1..n from the total order `order`, as BIGINT
+    * column `out` — the engine behind b9 and the YAML `surrogate_key` op.
+    * A global row_number is a single-partition window, safe only on a
+    * bounded (dimension) input, so the input must hold at most `maxRows`
+    * rows: the probe is limit(maxRows+1).count() — early exit, never a
+    * full count — and runs once, on the driver, when the frame is built.
+    * `context` names the caller in the error. */
+  def surrogateKeyOf(df: DataFrame, order: Seq[Column], maxRows: Long,
+      out: String, context: String): DataFrame = {
+    require(df.limit((maxRows + 1).toInt).count() <= maxRows,
+      s"$context: input exceeds declared max_rows=$maxRows — a global " +
+        "row_number window is single-partition, for bounded dimension " +
+        "tables; hash natural keys for facts")
+    df.withColumn(out, row_number().over(
+      org.apache.spark.sql.expressions.Window.orderBy(order: _*)).cast(LongType))
   }
 
   override def defs: Seq[QueryDef] = Seq(

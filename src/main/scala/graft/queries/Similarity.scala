@@ -933,152 +933,18 @@ object Similarity extends QueryPack {
     *
     * After the collapse, candidates come from banded LSH
     * (groupBy-shuffle, no cross join anywhere), the verify step touches
-    * ONLY candidate pairs (two joins back to the token sets), and label
-    * propagation runs O(diameter) shuffles. Capping note: over-cap
+    * ONLY candidate pairs (two joins back to the dictionary-encoded token
+    * sets), and [[connectedComponents]] labels the verified edges (in
+    * driver memory for a small graph, O(diameter) shuffles otherwise).
+    * This is the one clustering core: a connectivity-pruned verify loop
+    * measured slower on k12b's corpus and was removed (see the
+    * BASELINE.md round-14 note). Capping note: over-cap
     * buckets emit star pairs whose DIRECT Jaccard can sit below the
     * threshold even when both docs belong to one cluster — the standard
     * LSH-dedup recall budget; exactness-asserting callers (k12b) keep
     * the cap above the post-collapse bucket sizes, which the collapse
     * makes easy. */
-  /** Verify-FRUGAL clustering core: exact-Jaccard verification cost made
-    * output-sensitive instead of candidate-sensitive. OPT-IN
-    * (`lshClusters(..., frugal = true)`), NOT the default — see the
-    * measured verdict below.
-    *
-    * The loop exploits one graph fact: an edge whose endpoints are
-    * ALREADY in the same component cannot change the components. Each
-    * round (1) exact-verifies a bounded deterministic batch — per left
-    * endpoint, the pending partner first in xxhash64 order (hash order,
-    * not id order: a node's smallest-ID partners are disproportionately
-    * LSH false positives, and id-order batching measurably burned whole
-    * rounds on them; in hash order a node inside a true near-dup
-    * community hits a true partner with probability ≈ its true-pair
-    * fraction, so communities merge in the first round or two);
-    * (2) merges the verified edges into the running components (labels
-    * re-enter as star edges `vec_id→lbl`, so the merge is a plain CC
-    * over star ∪ new-edges, diameter ≈ 2); (3) PRUNES, without touching
-    * any token array, every pending pair that became intra-component. A
-    * community of m docs costs ~m verifications instead of C(m,2). Pairs
-    * that fail verification leave only by being batched, so once pending
-    * falls under `fullVerifyFloor` (or at the round cap) the remainder
-    * is verified in ONE exact pass — the result is THE components of the
-    * full verified edge set, value-identical to the non-frugal path
-    * (asserted in SimilarityOpsSpec at sf0.001).
-    *
-    * MEASURED VERDICT (round 14, sf0.1, idle box): the frugal route is
-    * NOT faster on this corpus — 664k surviving candidate pairs
-    * exact-verify in ~8 s (the token arrays are ~10²; the whole verify
-    * join is ~10 s of k12b's 36 s), while each frugal round paid ~1 s of
-    * CC/checkpoint fixed cost, and ~2/3 of candidates are LSH false
-    * positives that no amount of connectivity pruning can skip. The ~1 s
-    * predates in-memory CC: a frugal round's graph (star ∪ one verified
-    * batch) is far under the cap, so its CC is now ~3 jobs, not a
-    * checkpointed shuffle per propagation step. The round's batch, verify
-    * and prune checkpoints remain, and the verdict has not been
-    * re-measured since; until it is, it stands as measured. k12b
-    * (verify-everything) therefore stays the default and the benched
-    * path. The frugal loop is kept as the documented scale lever for the
-    * regime that inverts the trade: per-pair verification cost growing
-    * with document width (real crawl docs are 10³–10⁴ tokens — 50–100×
-    * this corpus per intersect) against a near-dup mass dominated by
-    * TRUE communities, where spanning-verification's asymptotic win
-    * dwarfs the per-round overhead.
-    *
-    * Storage contract matches connectedComponents: at any instant at
-    * most the pending pair set (two longs per row), one labels set, and
-    * the in-flight batch are materialized; each round releases its
-    * predecessors. */
-  private def frugalComponents(repDocs: DataFrame, pairs: DataFrame,
-      threshold: Double, maxOuterRounds: Int = 40): DataFrame = {
-    val nodes = repDocs.select("doc_id")
-    def verifyExact(batch: DataFrame): DataFrame =
-      batch
-        .join(repDocs.toDF("id_a", "ts_a"), "id_a")
-        .join(repDocs.toDF("id_b", "ts_b"), "id_b")
-        .withColumn("__i", size(array_intersect(col("ts_a"), col("ts_b"))))
-        .where(round(col("__i").cast(DoubleType)
-          / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
-        .select(col("id_a"), col("id_b"))
-    // STATS REBASE — load-bearing, measured this round: Spark 4's
-    // Dataset.checkpoint REWRITES the new LogicalRDD's stats from the
-    // original plan (LogicalRDD.rewriteStatsAndConstraints), and join
-    // estimation MULTIPLIES child sizeInBytes. In an iterative loop whose
-    // round N plan embeds round N−1's checkpoints several times, the
-    // rewritten sizeInBytes therefore COMPOUNDS — its digit count roughly
-    // doubles per round, and by round ~25 the checkpoint call itself sat
-    // in BigInteger ToomCook multiplication of million-digit numbers
-    // (jstack-verified hang). Re-wrapping each round's materialized
-    // blocks in a fresh RDD-backed frame resets the leaf stats to the
-    // session default, so per-round estimates stay bounded while the
-    // DATA path is untouched (the rebased frame reads the checkpoint's
-    // storage blocks). The inner CC loop doesn't need this: its digit
-    // growth is additive per round, not multiplicative.
-    def rebased(df: DataFrame): DataFrame =
-      df.sparkSession.createDataFrame(df.rdd, df.schema)
-    var pendingCp = Checkpoints.eager(pairs.select("id_a", "id_b"))
-    var pending = rebased(pendingCp)
-    var labelsCp = Checkpoints.eager(
-      nodes.toDF("vec_id").select(col("vec_id"), col("vec_id").as("lbl")))
-    var labels = rebased(labelsCp)
-    var rnd = 0
-    var nPending = pendingCp.count()
-    val nNodes = labelsCp.count()
-    // once pending is within a small multiple of the node count, batching
-    // buys nothing — verify the remainder in one exact pass (measured:
-    // ~10⁵ pairs/s through the exact intersect on 10²-token arrays, so
-    // this floor costs ~1 round's fixed overhead)
-    val fullVerifyFloor = math.max(50000L, 4L * nNodes)
-    while (nPending > 0 && rnd < maxOuterRounds) {
-      rnd += 1
-      Attribution.timed("frugal_round") {
-        // bounded batch: one pair per active left endpoint, partner picked
-        // by xxhash64 order (deterministic; see doc — id order is
-        // adversarial because low-id partners skew false-positive). The
-        // LAST round and the small-remainder case take everything still
-        // pending: the exactness fallback that bounds the loop.
-        val takeAll = rnd == maxOuterRounds || nPending <= fullVerifyFloor
-        val batchCp = Checkpoints.eager(
-          if (takeAll) pending
-          else pending
-            .groupBy(col("id_a"))
-            .agg(min(struct(xxhash64(col("id_a"), col("id_b"), lit(rnd)).as("h"),
-              col("id_b").as("b"))).as("m"))
-            .select(col("id_a"), col("m.b").as("id_b")))
-        val batch = rebased(batchCp)
-        val newEdges = verifyExact(batch)
-        // current components re-enter as star edges; CC over star ∪ new
-        // verified edges = components of everything verified so far
-        val star = labels.where(col("vec_id") =!= col("lbl"))
-          .select(col("vec_id").as("src"), col("lbl").as("dst"))
-        val newLabelsCp = connectedComponents(nodes, star.union(newEdges))
-        Checkpoints.release(labelsCp)
-        labelsCp = newLabelsCp
-        labels = rebased(labelsCp)
-        // prune: the processed batch leaves unconditionally; everything
-        // now intra-component leaves WITHOUT its token arrays ever being
-        // joined — pending rows are two longs throughout
-        val la = labels.select(col("vec_id").as("id_a"), col("lbl").as("__la"))
-        val lb = labels.select(col("vec_id").as("id_b"), col("lbl").as("__lb"))
-        val remaining =
-          if (takeAll) pending.limit(0) // everything was verified this round
-          else pending
-            .join(batch, Seq("id_a", "id_b"), "left_anti")
-            .join(la, "id_a").join(lb, "id_b")
-            .where(col("__la") =!= col("__lb"))
-            .select("id_a", "id_b")
-        val nextPendingCp = Checkpoints.eager(remaining)
-        Checkpoints.release(pendingCp, batchCp)
-        pendingCp = nextPendingCp
-        pending = rebased(pendingCp)
-        nPending = pendingCp.count()
-      }
-    }
-    Checkpoints.release(pendingCp)
-    labelsCp
-  }
-
-  def lshClusters(docs: DataFrame, threshold: Double, bucketCap: Int,
-      frugal: Boolean = false): DataFrame = {
+  def lshClusters(docs: DataFrame, threshold: Double, bucketCap: Int): DataFrame = {
     // 0: exact-set collapse. The fingerprint md5-hashes the JSON of the
     // SORTED distinct token array — to_json (unlike a joined string)
     // keeps null / [] / [""] distinct and escapes any separator-like
@@ -1152,70 +1018,65 @@ object Similarity extends QueryPack {
     // never pays it. See fbwCandidates for the measured plan.
     val candidates = Attribution.timed("candidates")(
       fbwCandidates(repDocs, bucketCap, tau, nHashes = 24))
-    val labels = if (frugal) {
-      frugalComponents(repDocs, candidates, threshold)
-    } else {
-      // DICTIONARY-ENCODED verify (round 22): tokens are dense-int-coded
-      // corpus-wide before the verify join — the vocabulary (distinct
-      // tokens, sorted) gets ids 0..V−1 via a distributed sort +
-      // zipWithIndex, each rep's token set re-collects as a sorted
-      // ARRAY<INT>, and Jaccard runs over the int arrays. EXACT by
-      // construction: the token→id map is a bijection on the corpus
-      // vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are
-      // preserved (arrays stay distinct); null token sets stay null and
-      // empty stay empty, so the threshold filter sees the same values
-      // row for row (spec-asserted: edge set byte-identical at sf0.001
-      // AND over the real sf0.1 candidate set in the OPTIMIZATION_r22.md
-      // (change 1) A/B — 698,435 edges, except() both ways = 0).
-      //
-      // Why (guide §2.3 narrower types, §5 allocation): the verify
-      // join's mid-exchange carries one token array per candidate pair —
-      // the widest shuffle in the dedup path at any scale. Int codes cut
-      // those bytes ~4x vs the UTF8 tokens, and the per-pair merge walk
-      // compares primitives instead of UTF8String byte spans. At sf0.1
-      // the best-case times tie (OPTIMIZATION_r22.md change 1, 8 reps in
-      // one JVM: strings best 1.70 s, dict verify best 1.30 + 0.5
-      // encode), but the HIGH modes separate decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
-      // while the int verify never left 1.3–1.9 s — the stage's
-      // documented GC-bimodality (round 16: 8 s ↔ 42 s) is proportional
-      // to allocated bytes, which the encoding shrinks 4x. The encode
-      // itself is two small shuffles of the token explosion (~0.5 s
-      // warm), amortized against the corpus-sized verify at 100 TB.
-      val encDocs = Attribution.timed("verify_encode")(
-        Checkpoints.eager(dictEncodePlan(repDocs)))
-      // SHUFFLE-HASH, not sort-merge: SMJ must SORT the pair stream —
-      // 5.5M rows at sf0.1, and after the first join each row carries a
-      // token ARRAY, so the second sort runs over wide rows and spills;
-      // measured round 15, this was the bimodal stage (18 s vs 150-180 s
-      // back-to-back on identical data — the spill path is hostage to
-      // disk/alloc weather). A hash join builds on the rep side — per
-      // partition a bounded slice of the (collapsed) rep table — and
-      // STREAMS the pair side with no sort and no wide-row spill. Still
-      // fully distributed (both sides shuffle on the key): at 100 TB
-      // reps is corpus-sized, so broadcast is not an option, but the
-      // per-partition build slice stays bounded exactly like any
-      // shuffled hash join. Never falls back to SMJ on build overflow
-      // (Spark 3.1+ honors the hint); spill of the BUILD side would
-      // mean rep skew, which the banding bucketCap already bounds.
-      // |A∩B| via the zero-allocation two-pointer expression, NOT
-      // size(array_intersect(..)): the arrays are sorted+distinct by
-      // construction, and ArrayIntersect's per-row hash set + result
-      // array made this stage GC-BIMODAL (round 16: verify_force 8 s ↔
-      // 42 s on identical data, flat probes, tmpfs shuffle unchanged —
-      // allocator weather, not IO). The merge walk allocates nothing.
-      val verified = candidates
-        .join(encDocs.toDF("id_a", "ts_a").hint("shuffle_hash"), "id_a")
-        .join(encDocs.toDF("id_b", "ts_b").hint("shuffle_hash"), "id_b")
-        .withColumn("__i", expr("graft_sorted_intersect_size(ts_a, ts_b)"))
-        .where(round(col("__i").cast(DoubleType)
-          / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
-        .select(col("id_a"), col("id_b"))
-      val lbls = connectedComponents(repDocs.select("doc_id"), verified)
-      // CC's eager edge materialization forced the verify join — the
-      // encoded side is dead now
-      Checkpoints.release(encDocs)
-      lbls
-    }
+    // DICTIONARY-ENCODED verify (round 22): tokens are dense-int-coded
+    // corpus-wide before the verify join — the vocabulary (distinct
+    // tokens, sorted) gets ids 0..V−1 via a distributed sort +
+    // zipWithIndex, each rep's token set re-collects as a sorted
+    // ARRAY<INT>, and Jaccard runs over the int arrays. EXACT by
+    // construction: the token→id map is a bijection on the corpus
+    // vocabulary, so |enc(A) ∩ enc(B)| = |A ∩ B| and sizes are
+    // preserved (arrays stay distinct); null token sets stay null and
+    // empty stay empty, so the threshold filter sees the same values
+    // row for row (spec-asserted: edge set byte-identical at sf0.001
+    // AND over the real sf0.1 candidate set in the OPTIMIZATION_r22.md
+    // (change 1) A/B — 698,435 edges, except() both ways = 0).
+    //
+    // Why (guide §2.3 narrower types, §5 allocation): the verify
+    // join's mid-exchange carries one token array per candidate pair —
+    // the widest shuffle in the dedup path at any scale. Int codes cut
+    // those bytes ~4x vs the UTF8 tokens, and the per-pair merge walk
+    // compares primitives instead of UTF8String byte spans. At sf0.1
+    // the best-case times tie (OPTIMIZATION_r22.md change 1, 8 reps in
+    // one JVM: strings best 1.70 s, dict verify best 1.30 + 0.5
+    // encode), but the HIGH modes separate decisively: strings spiked to 5.2 s and 10.2 s inside one JVM
+    // while the int verify never left 1.3–1.9 s — the stage's
+    // documented GC-bimodality (round 16: 8 s ↔ 42 s) is proportional
+    // to allocated bytes, which the encoding shrinks 4x. The encode
+    // itself is two small shuffles of the token explosion (~0.5 s
+    // warm), amortized against the corpus-sized verify at 100 TB.
+    val encDocs = Attribution.timed("verify_encode")(
+      Checkpoints.eager(dictEncodePlan(repDocs)))
+    // SHUFFLE-HASH, not sort-merge: SMJ must SORT the pair stream —
+    // 5.5M rows at sf0.1, and after the first join each row carries a
+    // token ARRAY, so the second sort runs over wide rows and spills;
+    // measured round 15, this was the bimodal stage (18 s vs 150-180 s
+    // back-to-back on identical data — the spill path is hostage to
+    // disk/alloc weather). A hash join builds on the rep side — per
+    // partition a bounded slice of the (collapsed) rep table — and
+    // STREAMS the pair side with no sort and no wide-row spill. Still
+    // fully distributed (both sides shuffle on the key): at 100 TB
+    // reps is corpus-sized, so broadcast is not an option, but the
+    // per-partition build slice stays bounded exactly like any
+    // shuffled hash join. Never falls back to SMJ on build overflow
+    // (Spark 3.1+ honors the hint); spill of the BUILD side would
+    // mean rep skew, which the banding bucketCap already bounds.
+    // |A∩B| via the zero-allocation two-pointer expression, NOT
+    // size(array_intersect(..)): the arrays are sorted+distinct by
+    // construction, and ArrayIntersect's per-row hash set + result
+    // array made this stage GC-BIMODAL (round 16: verify_force 8 s ↔
+    // 42 s on identical data, flat probes, tmpfs shuffle unchanged —
+    // allocator weather, not IO). The merge walk allocates nothing.
+    val verified = candidates
+      .join(encDocs.toDF("id_a", "ts_a").hint("shuffle_hash"), "id_a")
+      .join(encDocs.toDF("id_b", "ts_b").hint("shuffle_hash"), "id_b")
+      .withColumn("__i", expr("graft_sorted_intersect_size(ts_a, ts_b)"))
+      .where(round(col("__i").cast(DoubleType)
+        / (size(col("ts_a")) + size(col("ts_b")) - col("__i")), 6) >= threshold)
+      .select(col("id_a"), col("id_b"))
+    val labels = connectedComponents(repDocs.select("doc_id"), verified)
+    // CC's eager edge materialization forced the verify join — the
+    // encoded side is dead now
+    Checkpoints.release(encDocs)
     // connectedComponents eagerly materialized its symmetrized edge set
     // (which also forced the verify join), so the candidate-pair
     // checkpoint (lshCandidatesOf's return) is now dead

@@ -1,5 +1,7 @@
 package graft.queries
 
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -222,17 +224,26 @@ object TextOps2 extends QueryPack {
       |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum_tokens
       |  FROM documents)
       |ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("shard")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    Tables.documents(spark, dir)
+    val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), (col("doc_id") % 8).as("shard"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      .withColumn("cum_tokens", sum(col("n_tokens")).over(w))
-      .select(col("doc_id"), col("shard"), col("n_tokens"),
-        (col("shard") * 1000000 +
-          expr("(cum_tokens - n_tokens) div 4096")).cast("long").as("pack_id"))
+    packOf(docs, "shard", "doc_id", col("n_tokens"), 4096, "pack_id")
       .orderBy(col("doc_id"))
+  }
+
+  /** Per-shard greedy sequence packing over any frame — the engine behind
+    * j11 and the YAML `pack` op. `n` is the per-row token count, an
+    * integral column; a row's bin is its start offset (running sum − n,
+    * ordered by `order` inside `shard`) integer-divided by `budget`, and
+    * `out` = shard × 1e6 + bin. The division is `div`, exact at any
+    * count: a double `/` rounds the offset once a shard passes 2^53
+    * tokens. */
+  def packOf(df: DataFrame, shard: String, order: String, n: Column,
+      budget: Int, out: String): DataFrame = {
+    val w = Window.partitionBy(col(shard)).orderBy(col(order))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    df.withColumn(out, (col(shard).cast(LongType) * 1000000L +
+      call_function("div", sum(n).over(w) - n, lit(budget))).cast(LongType))
   }
 
   /** §2.J12 — benchmark CONTAMINATION check (the eval-decontamination
@@ -258,11 +269,8 @@ object TextOps2 extends QueryPack {
       |FROM sh s JOIN bench b ON s.g = b.g
       |WHERE s.doc_id >= 20
       |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin) { (spark, dir) =>
-    val d = TextOps.tokens(Tables.documents(spark, dir))
-    val sh = d.where(size(col("toks")) >= 5).select(col("doc_id"),
-      explode(expr(
-        "transform(sequence(1, size(toks) - 4), i -> concat_ws(' ', slice(toks, i, 5)))"))
-        .as("g"))
+    val sh = shinglesOf(TextOps.tokens(Tables.documents(spark, dir)), "toks", 5,
+      Seq(col("doc_id")), "g")
     val bench = sh.where(col("doc_id") < 20).select(col("g")).distinct()
     sh.where(col("doc_id") >= 20)
       .join(broadcast(bench), "g")
@@ -270,6 +278,17 @@ object TextOps2 extends QueryPack {
       .agg(countDistinct(col("g")).as("n_hits"))
       .orderBy(col("doc_id"))
   }
+
+  /** Word `n`-gram shingles of the token array `tokCol` — the explode
+    * behind j12 and both sides of the YAML `decontaminate` op. Rows with
+    * fewer than `n` tokens emit none; each shingle row carries `keep` plus
+    * the space-joined shingle as `out`. Row-local, so it streams. */
+  def shinglesOf(frame: DataFrame, tokCol: String, n: Int, keep: Seq[Column],
+      out: String): DataFrame =
+    frame.where(size(col(tokCol)) >= n)
+      .select(keep :+ explode(expr(
+        s"transform(sequence(1, size(`$tokCol`) - ${n - 1}), " +
+          s"i -> concat_ws(' ', slice(`$tokCol`, i, $n)))")).as(out): _*)
 
   /** §2.J13 — repetition-based quality scoring (the Gopher-rules family):
     * duplicate-word fraction and duplicate-bigram fraction per document,
@@ -294,14 +313,23 @@ object TextOps2 extends QueryPack {
       .where(size(col("toks")) >= 2)
       .withColumn("g2", expr(
         "transform(sequence(1, size(toks) - 1), i -> concat_ws(' ', slice(toks, i, 2)))"))
-    val dupWord = lit(1) - size(array_distinct(col("toks"))).cast(DoubleType) / size(col("toks"))
+    val dupWord = dupFrac(col("toks"))
     d.select(col("doc_id"),
         round(dupWord, 6).as("dup_word_frac"),
-        round(lit(1) - size(array_distinct(col("g2"))).cast(DoubleType) / size(col("g2")), 6)
-          .as("dup_bigram_frac"),
+        round(dupFrac(col("g2")), 6).as("dup_bigram_frac"),
         (dupWord <= 0.3).as("keep"))
       .orderBy(col("doc_id"))
   }
+
+  /** Duplicate fraction of an array, 1 − distinct/size — j13's repetition
+    * score and the YAML `quality_filter` op's. The size guard sits INSIDE
+    * the expression: under ANSI mode (the Spark 4 default) a bare
+    * x / size(arr) throws DIVIDE_BY_ZERO on an empty array, so empty and
+    * null arrays score null instead, without relying on And
+    * short-circuit order in a caller's predicate. */
+  def dupFrac(arr: Column): Column =
+    when(size(arr) > 0,
+      lit(1.0) - size(array_distinct(arr)).cast(DoubleType) / size(arr))
 
   /** §2.J14 — PII redaction (the scrub step before any text lands in a
     * training corpus): email and phone patterns replaced by typed
@@ -324,12 +352,19 @@ object TextOps2 extends QueryPack {
       substring(col("text"), 1, 60),
       lit(" call +1 555-0100 ext "), col("doc_id").cast("string"))
     Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        regexp_replace(
-          regexp_replace(raw, "[a-z0-9.+-]+@[a-z0-9.-]+", "[EMAIL]"),
-          "\\+?[0-9][0-9 -]{7,}[0-9]", "[PHONE]").as("clean"))
+      .select(col("doc_id"), redactOf(raw, Seq(
+        "EMAIL" -> "[a-z0-9.+-]+@[a-z0-9.-]+",
+        "PHONE" -> "\\+?[0-9][0-9 -]{7,}[0-9]")).as("clean"))
       .orderBy(col("doc_id"))
   }
+
+  /** PII scrub as a `regexp_replace` fold — j14's and the YAML `redact`
+    * op's: each (label, regex) rule, in order, replaces its matches in `c`
+    * with `[label]`. Map-only, streams fine. */
+  def redactOf(c: Column, rules: Seq[(String, String)]): Column =
+    rules.foldLeft(c) { case (acc, (label, re)) =>
+      regexp_replace(acc, re, s"[$label]")
+    }
 
   /** J-tier extension — unigram language-model log-probability per doc,
     * the CCNet/KenLM-style perplexity proxy for corpus quality filtering

@@ -127,11 +127,11 @@ object StreamOps {
     val base = s"/tmp/graft_stream/$name"
     rmrf(base)
     val out = s"$base/out"
-    val streamParts = sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8")
     val ss = spark.newSession()
     // runtime confs are not inherited by newSession — pin the ones the
     // stream plan depends on explicitly
-    ss.conf.set("spark.sql.shuffle.partitions", streamParts)
+    ss.conf.set("spark.sql.shuffle.partitions",
+      graft.core.Session.envStreamPartitions.toString)
     ss.conf.set("spark.sql.session.timeZone",
       spark.conf.get("spark.sql.session.timeZone"))
     ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

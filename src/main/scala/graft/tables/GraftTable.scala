@@ -1948,13 +1948,14 @@ object GraftTable {
     // localizes every key frame: the SQL-MERGE dup check and the
     // deleteKeys overlap check come free from the collected counts (each
     // was its own scan+collect job), and the downstream joins broadcast
-    // LOCAL relations built on the driver with NO Spark job — the old
-    // lazy frames re-ran a build job (re-scanning the change set) per
-    // action: probe, data stage, CDC stage. Large mode keeps the old
-    // distributed frames: hauling >64k keys through driver collects and
-    // single-threaded local-scan broadcast builds measured SLOWER than
-    // letting the executors rebuild them per action (ep27, 150k keys:
-    // +0.5 s), so past the cap only the census itself is collected (it
+    // LOCAL relations built on the driver: no scan of the change set,
+    // though under AQE each broadcast still runs its own small build job
+    // over the local rows — the old lazy frames re-ran a build job that
+    // re-scanned the change set per action: probe, data stage, CDC stage.
+    // Large mode keeps the old distributed frames: hauling >64k keys
+    // through driver collects and single-threaded local-scan broadcast
+    // builds measured SLOWER than letting the executors rebuild them per
+    // action (ep27, 150k keys: +0.5 s), so past the cap only the census itself is collected (it
     // doubles as the dup check, which always needed this scan) and
     // everything else stays on the executor path. (A limit(cap+1)
     // census was tried first — Spark's CollectLimit scale-up re-runs

@@ -8,8 +8,8 @@ import graft.tables.GraftTable
 
 /** Pins the stage names each instrumented call records in
   * `core.Attribution` — the keys `perfbench/measure.py` and the bench's
-  * gate line read (`verify_*`, `cc_round`/`frugal_round` with their `_n`
-  * counts, `edges_sym`, `collapse_keys`, `expand`, `merge_*`). A renamed,
+  * gate line read (`verify_*`, `cc_round` with its `_n` count,
+  * `edges_sym`, `collapse_keys`, `expand`, `merge_*`). A renamed,
   * dropped or double-recorded stage fails here. */
 class AttributionSpec extends SparkSpecBase {
   import spark.implicits._
@@ -31,24 +31,16 @@ class AttributionSpec extends SparkSpecBase {
     .toDF("doc_id", "text")
     .select(col("doc_id"), array_distinct(split(col("text"), " ")).as("ts"))
 
-  private def clusters(frugal: Boolean): Seq[String] = recorded {
-    val out = Similarity.lshClusters(docs, threshold = 0.8, bucketCap = 4096,
-      frugal = frugal)
+  private def clusters(): Seq[String] = recorded {
+    val out = Similarity.lshClusters(docs, threshold = 0.8, bucketCap = 4096)
     out.collect().length shouldBe 6
     Checkpoints.release(out)
   }
 
   test("lshClusters records the clustering stage set") {
-    clusters(frugal = false) shouldBe Seq(
+    clusters() shouldBe Seq(
       "collapse_keys", "cand_bands", "cand_pairs", "candidates",
       "verify_encode", "verify_force", "edges_sym", "cc_round", "cc_round_n",
-      "expand")
-  }
-
-  test("lshClusters(frugal = true) records the frugal stage set") {
-    clusters(frugal = true) shouldBe Seq(
-      "collapse_keys", "cand_bands", "cand_pairs", "candidates",
-      "verify_force", "edges_sym", "cc_round", "cc_round_n", "frugal_round",
       "expand")
   }
 

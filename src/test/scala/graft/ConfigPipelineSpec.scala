@@ -68,6 +68,12 @@ class ConfigPipelineSpec extends SparkSpecBase {
     val total = spark.read.parquet(s"$sf/documents.parquet").count()
     tagged.count() shouldBe total
     tagged.where(col("dup_frac") < 0.0 || col("dup_frac") > 1.0).count() shouldBe 0
+    // the tag is j13's dup_word_frac on every doc j13 scores (2+ tokens)
+    def byDoc(df: org.apache.spark.sql.DataFrame, c: String): Map[Long, Double] =
+      df.select(col("doc_id"), col(c)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    byDoc(tagged.where(org.apache.spark.sql.functions.size(col("toks")) >= 2),
+      "dup_frac") shouldBe byDoc(graft.queries.TextOps2.j13.build(spark, sf), "dup_word_frac")
     // filter variant drops exactly the rows over the bar
     val kept = PipelineRunner.run(spark,
       s"""name: qf_filter
@@ -89,6 +95,11 @@ class ConfigPipelineSpec extends SparkSpecBase {
          |     table: {format: parquet, path: "$sf/documents.parquet"}}
          |""".stripMargin).passed
     flagged.count() shouldBe (total - 20)
+    // given j12's fixed arguments (5-grams, doc_id < 20 as the benchmark)
+    // the flag marks exactly j12's contaminated docs
+    def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.select(col("doc_id")).collect().map(_.getLong(0)).toSet
+    ids(flagged.where(col("hit"))) shouldBe ids(graft.queries.TextOps2.j12.build(spark, sf))
     // drop variant removes exactly the flagged rows
     val cleaned = PipelineRunner.run(spark,
       s"""name: decon_drop
@@ -228,6 +239,21 @@ class ConfigPipelineSpec extends SparkSpecBase {
     rows(0).getAs[String]("clean") shouldBe "mail [EMAIL] or dial [PHONE] today"
     rows(1).getAs[String]("clean") shouldBe "no pii here"
     rows(0).getAs[String]("txt") should include("@corp.example.com") // original kept
+    // given j14's fixed input and rules (EMAIL, then PHONE), the op
+    // returns j14's rows
+    val viaOp = PipelineRunner.run(spark,
+      s"""name: redact_j14
+         |source: {format: parquet, path: "$sf/documents.parquet"}
+         |transforms:
+         |  - {op: derive, name: raw, expr: "concat(source, '@mail.example.com said: ',
+         |     substring(text, 1, 60), ' call +1 555-0100 ext ', CAST(doc_id AS STRING))"}
+         |  - {op: redact, cols: [raw], name: clean, values:
+         |     ["EMAIL:[a-z0-9.+-]+@[a-z0-9.-]+", "PHONE:\\\\+?[0-9][0-9 -]{7,}[0-9]"]}
+         |  - {op: select, cols: [doc_id, clean]}
+         |  - {op: sort, cols: [doc_id]}
+         |""".stripMargin).passed
+    viaOp.collect().map(_.toSeq) shouldBe
+      graft.queries.TextOps2.j14.build(spark, sf).collect().map(_.toSeq)
     // in-place variant overwrites the column
     val inPlace = PipelineRunner.run(spark,
       s"""name: redact_inplace
@@ -792,6 +818,17 @@ class ConfigPipelineSpec extends SparkSpecBase {
     val maxName = spark.read.parquet(s"$sf/nation.parquet")
       .agg(org.apache.spark.sql.functions.max("n_name")).head.getString(0)
     a.head.getAs[String]("n_name") shouldBe maxName
+    // given b9's fixed arguments (c_custkey order, a 10M-row bound) the op
+    // returns b9's rows
+    PipelineRunner.run(spark,
+      s"""name: sk_b9
+         |source: {format: parquet, path: "$sf/customer.parquet"}
+         |transforms:
+         |  - {op: surrogate_key, name: sk, orderBy: [c_custkey], max_rows: 10000000}
+         |  - {op: select, cols: [sk, c_custkey, c_name]}
+         |  - {op: sort, cols: [c_custkey]}
+         |""".stripMargin).passed.collect().map(_.toSeq) shouldBe
+      graft.queries.Relational.b9.build(spark, sf).collect().map(_.toSeq)
     // a global row_number has no streaming equivalent — clear error
     val e = intercept[IllegalArgumentException](PipelineRunner.run(spark,
       s"""name: sk_stream
@@ -1406,6 +1443,20 @@ class ConfigPipelineSpec extends SparkSpecBase {
          |""".stripMargin).passed
     viaConfig.collect().map(_.toSeq) shouldBe
       graft.queries.TextOps2.j11.build(spark, sf).collect().map(_.toSeq)
+    // bins stay exact past 2^53 cumulative tokens: a double division
+    // would round the second row's start offset 2^53+1 down to 2^53
+    import spark.implicits._
+    val big = java.nio.file.Files.createTempDirectory("graft_pack_big").toString
+    Seq((0L, 1L, (1L << 53) + 1), (0L, 2L, 1L)).toDF("shard", "ord", "cnt")
+      .write.mode("overwrite").parquet(big)
+    PipelineRunner.run(spark,
+      s"""name: pack_big
+         |source: {format: parquet, path: "$big"}
+         |transforms:
+         |  - {op: pack, cols: [shard, ord], expr: "cnt", k: 1}
+         |  - {op: sort, cols: [ord]}
+         |""".stripMargin).passed
+      .select("pack_id").as[Long].collect() shouldBe Array(0L, (1L << 53) + 1)
     // guard rails: unknown output collision + positive budget
     val e = intercept[IllegalArgumentException](PipelineRunner.run(spark,
       s"""name: pack_bad
@@ -2112,6 +2163,27 @@ class ConfigPipelineSpec extends SparkSpecBase {
     edge.where($"uid" === 1)
       .select(org.apache.spark.sql.functions.max($"session_seq"))
       .head.getLong(0) shouldBe 1L
+    // given ev1's fixed arguments (user key, (ts, event_id) order, a
+    // 30-minute gap in epoch nanos) every event lands in ev1's session:
+    // per-session counts and spans equal ev1's
+    val tsNs =
+      if (graft.core.Tables.eventsTsIsLong(spark, sf)) "ts"
+      else "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', ts) * 1000"
+    PipelineRunner.run(spark,
+      s"""name: sess_ev1
+         |source: {format: parquet, path: "$sf/events.parquet"}
+         |transforms:
+         |  - {op: derive, name: tsn, expr: "$tsNs"}
+         |  - {op: sessionize, on: [user_id], cols: [tsn, event_id],
+         |     threshold: 1800000000000}
+         |  - {op: aggregate, cols: [user_id, session_seq],
+         |     aggs: ["COUNT(*) AS n_events",
+         |            "(MAX(tsn) - MIN(tsn)) div 1000000 AS duration_ms"]}
+         |  - {op: sort, cols: [user_id, session_seq]}
+         |""".stripMargin).passed.collect().map(_.toSeq) shouldBe
+      graft.queries.Events.ev1.build(spark, sf)
+        .select("user_id", "session_seq", "n_events", "duration_ms")
+        .collect().map(_.toSeq)
     // guards: missing threshold, non-numeric time column, streaming mode
     intercept[IllegalArgumentException](PipelineRunner.run(spark,
       s"""name: sess_bad1

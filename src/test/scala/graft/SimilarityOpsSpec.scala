@@ -598,27 +598,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
     spark.sparkContext.getPersistentRDDs shouldBe empty
   }
 
-  test("K12 frugal: connectivity-pruned verification matches the full-verify path") {
-    import graft.core.Checkpoints
-    Checkpoints.releaseAll(spark)
-    val docs = Tables.documents(spark, sf)
-      .select(col("doc_id"),
-        array_distinct(split(lower(col("text")), " ")).as("ts"))
-    def labelsOf(frugal: Boolean): Map[Long, Long] = {
-      val out = Similarity.lshClusters(docs, threshold = 0.8, bucketCap = 4096,
-        frugal = frugal)
-      val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      Checkpoints.release(out)
-      m
-    }
-    // skipping intra-component verifications must not change a single
-    // label: the frugal result is components of the same verified edge
-    // set (an edge inside a component is redundant by definition)
-    labelsOf(frugal = true) shouldBe labelsOf(frugal = false)
-    // and the frugal loop honors the same retained-storage contract
-    spark.sparkContext.getPersistentRDDs shouldBe empty
-  }
-
   test("E11b: approx quartiles land within 1% of the exact ones") {
     import graft.queries.Aggregates
     def toMap(df: org.apache.spark.sql.DataFrame) = df.collect()
