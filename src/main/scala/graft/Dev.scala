@@ -17,7 +17,10 @@ import org.apache.spark.sql.execution.ExplainMode
   *       the optimization rounds commit under `plans/rNN/`)
   *   graft.Dev plans [sfDir] [outFile]
   *       the headline-query plan markdown (`PLANS_rNN.md`); `PlanSpec`
-  *       pins the load-bearing properties, this file shows the full plans
+  *       pins the load-bearing properties, this file shows the full plans,
+  *       the same bytes on every run: `planMasks` hides AQE's `plan_id=N`,
+  *       ep1's checks-`Observation` UUID, ep36's deletion-vector `[J@…`
+  *       identity and file prefix, and ep38's scan-builder object hash
   */
 object Dev {
   private val headline = Seq(
@@ -71,6 +74,16 @@ object Dev {
     "usage: graft.Dev show <query> [sfDir] | show --parquet <path> | " +
       "explain <q1,q2,...> [sfDir] [outDir suffix] | plans [sfDir] [outFile]"
 
+  private val planMasks = Seq(
+    "plan_id=\\d+" -> "plan_id=N",
+    "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}" -> "<uuid>",
+    "\\[J@[0-9a-f]+" -> "[J@<id>",
+    "\\b[0-9a-f]{12}(?=_part\\d+\\.parquet)" -> "<prefix>",
+    "(GraftScanBuilder\\S*)@[0-9a-f]+" -> "$1@<hash>")
+
+  private def masked(plan: String): String =
+    planMasks.foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
+
   private def explain(spark: SparkSession, name: String, sfDir: String): String =
     SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.explainString(ExplainMode.fromString("formatted"))
@@ -108,7 +121,7 @@ object Dev {
         sb.append("Generated by `graft.Dev plans`. Load-bearing plan properties are\n")
         sb.append("additionally pinned as tests in `PlanSpec`.\n")
         headline.foreach { name =>
-          sb.append(s"\n## $name\n\n```\n${explain(spark, name, sfDir)}```\n")
+          sb.append(s"\n## $name\n\n```\n${masked(explain(spark, name, sfDir))}```\n")
         }
         rest.lift(1) match {
           case Some(out) =>

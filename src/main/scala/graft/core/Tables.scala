@@ -43,11 +43,10 @@ object Tables {
     * The conf is set at session BUILD time by [[Session.local]], the one
     * builder every graft entry point uses (Bench, Verify, Dev and the test
     * session), so plan behavior never depends on whether events() ran
-    * first. The guarded set below is only a fallback for foreign sessions
-    * — a no-op (no conf mutation) under any graft-built session. */
+    * first. [[pinNanosAsLong]] below is only a fallback for foreign
+    * sessions. */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pinNanosAsLong(spark)
     val raw = table(spark, dir, "events")
     raw.schema("ts").dataType match {
       case LongType => // TIMESTAMP(NANOS) file, read nanos-as-BIGINT
@@ -65,10 +64,8 @@ object Tables {
             * lit(1000L))
       case TimestampType => // MICROS adjusted-to-UTC (an absolute instant:
         // unix_micros is zone-free here, but the NTZ render of event_ts is
-        // not — pin the zone like the nanosAsLong guard above; no-op under
-        // any graft-built session)
-        if (spark.conf.getOption("spark.sql.session.timeZone").forall(_ != "UTC"))
-          spark.conf.set("spark.sql.session.timeZone", "UTC")
+        // not — pin the zone like the nanosAsLong guard above)
+        pinUtc(spark)
         raw
           .withColumn("event_ts", col("ts").cast(TimestampNTZType))
           .withColumn("ts", unix_micros(col("ts")) * lit(1000L))
@@ -84,10 +81,18 @@ object Tables {
     * (loads as a timestamp type). Used by config builders that must emit
     * type-correct derive expressions (ep3/ep4). One footer read. */
   def eventsTsIsLong(spark: SparkSession, dir: String): Boolean = {
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    pinNanosAsLong(spark)
     table(spark, dir, "events").schema("ts").dataType == LongType
   }
+
+  /** Foreign-session guards of the events readers; no-ops in graft's sessions. */
+  private[graft] def pinNanosAsLong(spark: SparkSession): Unit =
+    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
+      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+
+  private[graft] def pinUtc(spark: SparkSession): Unit =
+    if (spark.conf.getOption("spark.sql.session.timeZone").forall(_ != "UTC"))
+      spark.conf.set("spark.sql.session.timeZone", "UTC")
 
   /** Naive-timestamp literal for filters against TIMESTAMP_NTZ columns. */
   def tsLit(s: String): org.apache.spark.sql.Column =

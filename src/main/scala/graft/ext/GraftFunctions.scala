@@ -1,20 +1,17 @@
 package graft.ext
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{GraftSqlBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.functions.udaf
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal, ScalaUDF}
+import org.apache.spark.sql.functions.{udaf, udf}
 
-/** Registration surface for the §2.M extension points.
-  *
-  * Two routes to the same functions:
-  *  - [[GraftSparkExtensions]] for `spark.sql.extensions=graft.ext.GraftSparkExtensions`
-  *    (the blessed SparkSessionExtensions route — catalog-level, survives
-  *    for the session lifetime);
-  *  - [[GraftFunctions.register]] for sessions already built without the
-  *    conf (the driver's Verify/Bench sessions) — registers the same
-  *    builders into the live FunctionRegistry. Idempotent.
+/** The §2.M functions: nine catalyst expressions, the `graft_geomean`
+  * typed UDAF and the `graft_norm_text` scalar UDF (M1, for config
+  * `derive` exprs). With the as-of join strategy and rules they form
+  * [[GraftSparkExtensions]], the one table graft installs into a session.
+  * Two installers: `core.Session.local` sets it as `spark.sql.extensions`
+  * at build time, and `core.Session.ensure` adds it to a session built
+  * elsewhere.
   */
 object GraftFunctions {
 
@@ -46,58 +43,36 @@ object GraftFunctions {
       "graft_bottomk(col, <int literal k>)")
   }
 
-  val catalystFunctions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))),
-    (FunctionIdentifier("graft_ngrams"),
-      new ExpressionInfo(classOf[NGramsGen].getName, "graft_ngrams"),
-      ngramsBuilder),
-    (FunctionIdentifier("graft_bottomk"),
-      new ExpressionInfo(classOf[BottomKSketch].getName, "graft_bottomk"),
-      bottomKBuilder),
-    (FunctionIdentifier("graft_minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash_sig"),
-      minhashBuilder),
-    (FunctionIdentifier("graft_srp_sig"),
-      new ExpressionInfo(classOf[SrpSig].getName, "graft_srp_sig"),
-      srpBuilder),
-    (FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHashSig].getName, "graft_simhash"),
-      (args: Seq[Expression]) => SimHashSig(args.head)),
-    (FunctionIdentifier("graft_rolling_hash"),
-      new ExpressionInfo(classOf[RollingHash].getName, "graft_rolling_hash"),
-      (args: Seq[Expression]) => RollingHash(args.head)),
-    (FunctionIdentifier("graft_bpeish_count"),
-      new ExpressionInfo(classOf[BpeishTokenCount].getName, "graft_bpeish_count"),
-      (args: Seq[Expression]) => BpeishTokenCount(args.head)),
-    (FunctionIdentifier("graft_sorted_intersect_size"),
-      new ExpressionInfo(classOf[SortedIntersectSize].getName, "graft_sorted_intersect_size"),
-      (args: Seq[Expression]) => SortedIntersectSize(args(0), args(1))))
+  // M2 and M1: the ScalaAggregator / ScalaUDF a by-name UDF registration builds
+  private val geoMean = udaf(GeoMean).withName("graft_geomean")
+  private val normText = udf((s: String) =>
+    if (s == null) null else s.replaceAll(" +", " ").trim.toLowerCase)
+    .withName("graft_norm_text")
 
-  /** Register every §2.M function into a live session. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    catalystFunctions.foreach { case (ident, info, builder) =>
-      reg.registerFunction(ident, info, builder)
-    }
-    // M2 typed UDAF + M1 config-referenced scalar UDF (for `derive` exprs).
-    spark.udf.register("graft_geomean", udaf(GeoMean))
-    spark.udf.register("graft_norm_text",
-      (s: String) => if (s == null) null
-      else s.replaceAll(" +", " ").trim.toLowerCase)
-  }
+  private def fn(name: String, cls: Class[_])(builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), builder)
+
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("graft_cosine", classOf[CosineSimilarity])(args => CosineSimilarity(args(0), args(1))),
+    fn("graft_ngrams", classOf[NGramsGen])(ngramsBuilder),
+    fn("graft_bottomk", classOf[BottomKSketch])(bottomKBuilder),
+    fn("graft_minhash_sig", classOf[MinHashSig])(minhashBuilder),
+    fn("graft_srp_sig", classOf[SrpSig])(srpBuilder),
+    fn("graft_simhash", classOf[SimHashSig])(args => SimHashSig(args.head)),
+    fn("graft_rolling_hash", classOf[RollingHash])(args => RollingHash(args.head)),
+    fn("graft_bpeish_count", classOf[BpeishTokenCount])(args => BpeishTokenCount(args.head)),
+    fn("graft_sorted_intersect_size", classOf[SortedIntersectSize])(
+      args => SortedIntersectSize(args(0), args(1))),
+    fn("graft_geomean", GeoMean.getClass)(GraftSqlBridge.udfCall(geoMean, _)),
+    fn("graft_norm_text", classOf[ScalaUDF])(GraftSqlBridge.udfCall(normText, _)))
 }
 
-/** `SparkSessionExtensions` injection point (§2.M3 contract route):
-  * catalog functions plus the whole-operator as-of join strategy
-  * (§2.M tier (c) — graft.plans.AsOfJoinStrategy). */
+/** [[GraftFunctions]] plus the whole-operator as-of join (§2.M tier (c)):
+  * its planner strategy and its optimizer rules. */
 class GraftSparkExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.catalystFunctions.foreach(ext.injectFunction)
+    GraftFunctions.functions.foreach(ext.injectFunction)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
-    // runs inside the operator-optimization fixed point: filters pushed
-    // through the as-of join keep sinking into the parquet scan
     ext.injectOptimizerRule(_ => graft.plans.AsOfJoinRules)
   }
 }

@@ -8,7 +8,6 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, StructType}
 
 import graft.config._
 import graft.core.Conform
-import graft.ext.GraftFunctions
 import graft.queries.{Events, Relational, TextOps2}
 import graft.streaming.StreamOps
 
@@ -60,7 +59,7 @@ object PipelineRunner {
 
   def run(spark: SparkSession, yaml: String): RunResult = {
     val spec = PipelineSpec.parse(yaml)
-    GraftFunctions.register(spark) // M1 UDFs usable in derive/filter exprs
+    graft.core.Session.ensure(spark) // M1 UDFs usable in derive/filter exprs
     if (spec.mode == "streaming") return runStreaming(spark, spec)
     if (spec.mode == "mv_refresh") {
       // declared incremental materialized view: advance it to the base's
@@ -88,9 +87,7 @@ object PipelineRunner {
         val base = graftRoot(spark, spec.source.path, spec.source.table)
         val cpBase = s"/tmp/graft_stream/mv_${spec.name}"
         graft.streaming.StreamOps.rmrf(cpBase)
-        val ss = spark.newSession()
-        ss.conf.set("spark.sql.shuffle.partitions",
-          graft.core.Session.envStreamPartitions.toString)
+        val ss = graft.core.Session.stream(spark)
         // case-insensitive on KEY and VALUE: the stream source honors
         // `withimages: True` via CaseInsensitiveStringMap.getBoolean
         // (Boolean.parseBoolean ignores case), so the dispatch must
@@ -451,7 +448,6 @@ object PipelineRunner {
     // doc).
     val perBatch: (DataFrame, Long) => (DataFrame, () => Unit) = (batch, id) => {
       val bs = batch.sparkSession // the micro-batch's own (stream) session
-      GraftFunctions.register(bs) // derive/filter exprs after the gate
       val deferred = scala.collection.mutable.Buffer.empty[() => Unit]
       val o = perBatchOps.foldLeft(batch)(
         (df, t) => applyTransform(bs, df, t, deferred))
@@ -1416,7 +1412,6 @@ object PipelineRunner {
         val (id, vec) = (t.cols(0), t.cols(1))
         val pred = t.where.getOrElse(throw new IllegalArgumentException(
           "ann_topk needs `where` (a predicate selecting the ONE query row)"))
-        graft.ext.GraftFunctions.register(spark)
         val q = df.where(expr(pred))
           .select(expr(s"CAST($vec AS ARRAY<DOUBLE>)").as("__q"))
         // a multi-row query side would silently cross-score every result —

@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Attribute, Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.DataType
 import graft.core.Conform
 
 /** §2.D7 as a whole-operator Catalyst extension (SURVEY §2.M tier (c)):
-  * a custom `LogicalPlan` + `SparkStrategy` + `SparkPlan` registered via
-  * `SparkSessionExtensions` (or `spark.experimental.extraStrategies`).
+  * a custom `LogicalPlan` + `SparkStrategy` + `SparkPlan`, installed with
+  * [[AsOfJoinRules]] by graft.ext.GraftSparkExtensions.
   *
   * Semantics (left as-of join): for every left row, attach the LAST right
   * row with equal keys and `rightTs <= leftTs` (inclusive — a right row at
@@ -78,19 +78,6 @@ object AsOfJoinStrategy extends SparkStrategy {
 /** User-facing API for the native as-of join. */
 object AsOf {
 
-  /** Idempotently add the planner strategy + optimizer rules to a live
-    * session (the blessed conf route is
-    * `spark.sql.extensions=graft.ext.GraftSparkExtensions`, which injects
-    * the same objects — and there the rules run inside the main operator-
-    * optimization fixed point, so pushed filters reach the scans). */
-  def ensureStrategy(spark: SparkSession): Unit = {
-    val exp = spark.experimental
-    if (!exp.extraStrategies.contains(AsOfJoinStrategy))
-      exp.extraStrategies = exp.extraStrategies :+ AsOfJoinStrategy
-    if (!exp.extraOptimizations.contains(AsOfJoinRules))
-      exp.extraOptimizations = exp.extraOptimizations :+ AsOfJoinRules
-  }
-
   /** Left as-of join `left ⟕asof right`. Column names must be disjoint
     * across the two sides (rename the right side first); right rows with a
     * null timestamp are dropped (they can never be "the latest at-or-
@@ -111,7 +98,7 @@ object AsOf {
       leftTs: String,
       rightTs: String): DataFrame = {
     val spark = left.sparkSession
-    ensureStrategy(spark)
+    graft.core.Session.ensure(spark)
     val overlap = left.columns.toSet.intersect(right.columns.toSet)
     require(overlap.isEmpty,
       s"as-of join output names must be disjoint; rename: ${overlap.mkString(",")}")

@@ -28,13 +28,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     Projects under both children so the exchanges move only what is
   *     used.
   *
-  * Registered via `SparkSessionExtensions.injectOptimizerRule` (runs
-  * inside the main operator-optimization fixed point, so pushed filters
-  * keep sinking all the way into the parquet scan) and, for sessions
-  * built without the conf, via `experimental.extraOptimizations` (a
-  * trailing fixed-point batch — conjuncts/projections still land below
-  * the join, cutting shuffle width/rows, even though the scan was already
-  * planned by then).
+  * Installed by graft.ext.GraftSparkExtensions: injected at build time in
+  * a `core.Session.local` session, where it runs inside the main operator-
+  * optimization fixed point, and added by `core.Session.ensure` elsewhere
+  * as a trailing `experimental.extraOptimizations` batch. On both routes
+  * d7b's pushed `event_id` filter reaches the parquet scan.
   */
 object AsOfJoinRules extends Rule[LogicalPlan] with PredicateHelper {
 

@@ -5,7 +5,6 @@ import org.apache.spark.sql.types._
 
 import graft.core.Tables
 import graft.core.Det._
-import graft.ext.GraftFunctions
 
 /** SURVEY.md §2.M — UDF / UDAF / custom-Expression / Generator surface,
   * each proven equivalent to a SQL-only oracle; plus §2.B7 (flatten with
@@ -20,7 +19,6 @@ object Extensions extends QueryPack {
     """SELECT doc_id,
       |  lower(trim(regexp_replace('  ' || text || '   X  ', ' +', ' ', 'g'))) AS normed
       |FROM documents ORDER BY doc_id""".stripMargin) { (spark, dir) =>
-    GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .withColumn("normed",
         expr("graft_norm_text(concat('  ', text, '   X  '))"))
@@ -34,7 +32,6 @@ object Extensions extends QueryPack {
     "m2_udaf_geomean",
     """SELECT l_returnflag, ROUND(exp(avg(ln(l_extendedprice))), 6) AS geo_price
       |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (spark, dir) =>
-    GraftFunctions.register(spark)
     Tables.lineitem(spark, dir)
       .groupBy(col("l_returnflag"))
       .agg(round(expr("graft_geomean(l_extendedprice)"), 6).as("geo_price"))
@@ -52,7 +49,6 @@ object Extensions extends QueryPack {
       |FROM embeddings v
       |CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
       |ORDER BY vec_id""".stripMargin) { (spark, dir) =>
-    GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, dir)
       .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
     val q = Tables.embeddings(spark, dir).where(col("vec_id") === 0)
@@ -72,7 +68,6 @@ object Extensions extends QueryPack {
       |          i -> array_to_string(list_slice(toks, i, i + 2), ' ')) AS tg
       |      FROM (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents))
       |ORDER BY doc_id, pos""".stripMargin) { (spark, dir) =>
-    GraftFunctions.register(spark)
     TextOps.tokens(Tables.documents(spark, dir))
       .selectExpr("doc_id", "graft_ngrams(toks, 3) AS (pos, ngram)")
       .select(col("doc_id"), col("pos").cast(LongType).as("pos"), col("ngram"))
@@ -97,7 +92,6 @@ object Extensions extends QueryPack {
     * X-tier (engine-internal hash); merge/determinism laws in
     * ExtensionsSpec. */
   val m5: QueryDef = x("m5_bottomk_sketch") { (spark, dir) =>
-    GraftFunctions.register(spark)
     Tables.orders(spark, dir)
       .groupBy(col("o_orderstatus"))
       .agg(expr("graft_bottomk(o_custkey, 16)").as("sk"),

@@ -152,9 +152,9 @@ object Joins extends QueryPack {
 
   /** §2.D7 again, as the native whole-operator route (§2.M tier (c)):
     * graft.plans.AsOfJoin — custom LogicalPlan + SparkStrategy +
-    * merge-pass SparkPlan, registered via SparkSessionExtensions /
-    * experimental.extraStrategies. Same oracle as d7 (DuckDB's native
-    * ASOF LEFT JOIN), so the two implementations cross-check each other.
+    * merge-pass SparkPlan, from graft.ext.GraftSparkExtensions. Same
+    * oracle as d7 (DuckDB's native ASOF LEFT JOIN), so the two
+    * implementations cross-check each other.
     * Scale contrast with d7's window form: each side shuffles only on
     * user_id and the merge streams with O(1) state per partition —
     * no union of both row shapes through one window sort. */

@@ -119,7 +119,6 @@ object Similarity extends QueryPack {
       |ORDER BY id_a, id_b""".stripMargin) { (spark, dir) =>
     // the codegen CosineSimilarity expression (§2.M3): one fused loop per
     // pair instead of three HOF folds — measured ~10× faster at sf0.1
-    graft.ext.GraftFunctions.register(spark)
     val v = emb(Tables.embeddings(spark, dir))
       .where(col("vec_id") < 300).select(col("vec_id"), col("e"))
     val a = v.toDF("id_a", "e_a")
@@ -203,7 +202,6 @@ object Similarity extends QueryPack {
     // change the candidate sets; output stability is covered by
     // re-verification against brute-force ground truth at three scale
     // factors (see k12b's doc), not by construction.
-    graft.ext.GraftFunctions.register(docs.sparkSession)
     // set size rides the banding as one extra int per row: the verify
     // stage's Jaccard size bound (J ≥ τ ⇒ |A|,|B| within a factor τ) can
     // then prune pairs from the two-long pair set BEFORE any token array
@@ -361,7 +359,6 @@ object Similarity extends QueryPack {
     * lshClusters. */
   private[graft] def fbwCandidates(docs: DataFrame, bucketCap: Int, tau: Long,
       nHashes: Int = 24, rowsPerBand: Int = 3): DataFrame = {
-    graft.ext.GraftFunctions.register(docs.sparkSession)
     val nBands = nHashes / rowsPerBand
     val sigs = docs.select(
       col("doc_id"), size(col("ts")).as("__sz"),
@@ -446,7 +443,6 @@ object Similarity extends QueryPack {
     * on any engine/accumulation-order (D-rule 7). */
   def ivfAssign(spark: org.apache.spark.sql.SparkSession, dir: String,
       nCentroids: Int): DataFrame = {
-    graft.ext.GraftFunctions.register(spark)
     val v = emb(Tables.embeddings(spark, dir)).select(col("vec_id"), col("e"))
     val cents = v.where(col("vec_id") < nCentroids)
       .agg(collect_list(struct(col("vec_id").as("cid"), col("e").as("c"))).as("cs"))
@@ -534,7 +530,6 @@ object Similarity extends QueryPack {
     * (vec_id, cell, lbl); survivor = (vec_id == lbl). */
   def semDedupLabels(vecs: DataFrame, nCentroids: Int, threshold: Double): DataFrame = {
     val spark = vecs.sparkSession
-    graft.ext.GraftFunctions.register(spark)
     // TakeOrdered n smallest ids → one broadcast codebook row, exactly
     // k10's shape (the codebook is tiny by construction; SemDeDup's dial
     // is nCentroids ∝ corpus size, each centroid row stays O(dim))
@@ -889,7 +884,6 @@ object Similarity extends QueryPack {
       |  v.vec_id = COALESCE(c.cluster_id, v.vec_id) AS is_survivor
       |FROM v LEFT JOIN comp c ON v.vec_id = c.vec_id
       |ORDER BY v.vec_id""".stripMargin) { (spark, dir) =>
-    graft.ext.GraftFunctions.register(spark)
     val v = emb(Tables.embeddings(spark, dir))
       .where(col("vec_id") < 300).select(col("vec_id"), col("e")).cache()
     val a = v.toDF("id_a", "e_a")

@@ -107,7 +107,6 @@ object TextOps2 extends QueryPack {
     * (token-less docs vanished there; they would sig to 0 here). */
   def simhashDocs(spark: org.apache.spark.sql.SparkSession, dir: String)
       : org.apache.spark.sql.DataFrame = {
-    graft.ext.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .where(col("doc_id") < 200)
       .withColumn("toks", expr("array_distinct(split(lower(text), ' '))"))
@@ -159,7 +158,6 @@ object TextOps2 extends QueryPack {
     * shuffle key and each probe touches 1/256th of the corpus (plus
     * hamming-1 neighbor buckets for recall). */
   val k9: QueryDef = x("k9_srp_ann") { (spark, dir) =>
-    graft.ext.GraftFunctions.register(spark)
     val v = Tables.embeddings(spark, dir)
       .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
       // fused codegen signature (ext/SrpSig): hyperplane j component i =
@@ -195,7 +193,6 @@ object TextOps2 extends QueryPack {
     // graft_rolling_hash (§2.M3 sibling): one fused codegen loop per row —
     // the HOF form (per-char array + interpreted lambda per element) was
     // this query's entire cost (ExtensionsSpec asserts bit-equality)
-    graft.ext.GraftFunctions.register(spark)
     Tables.documents(spark, dir)
       .select(
         col("doc_id"),

@@ -49,10 +49,7 @@ object StreamOps {
     * watermarks reject TIMESTAMP_NTZ event-time columns, so queries cast
     * their window bounds to NTZ at output instead). */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    // fallback for foreign sessions only — graft sessions set this at build
-    // time (see Tables.events); no-op there
-    if (spark.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").forall(_ != "true"))
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    graft.core.Tables.pinNanosAsLong(spark)
     val schema = eventsSchema(spark, dir)
     val raw = spark.readStream
       .schema(schema)
@@ -64,11 +61,9 @@ object StreamOps {
       case TimestampNTZType | TimestampType => // TIMESTAMP(MICROS) file.
         // The NTZ→TIMESTAMP cast (event_ts must be zoned — watermarks
         // reject NTZ) and the nanos derivation both consult the session
-        // zone for naive values: pin UTC like the nanosAsLong guard above
-        // (no-op under any graft-built session), so a foreign non-UTC
-        // session cannot silently shift event times
-        if (spark.conf.getOption("spark.sql.session.timeZone").forall(_ != "UTC"))
-          spark.conf.set("spark.sql.session.timeZone", "UTC")
+        // zone for naive values: pin UTC like the nanosAsLong guard above,
+        // so a foreign non-UTC session cannot silently shift event times
+        graft.core.Tables.pinUtc(spark)
         raw
           .withColumn("event_ts", col("ts").cast(TimestampType))
           .withColumn("ts", unix_micros(col("ts").cast(TimestampType)) * lit(1000L))
@@ -90,14 +85,14 @@ object StreamOps {
     * micro-batch's emitted rows under out/batch_<id>, and return the union
     * as a batch read-back (§2.A10 streaming sink).
     *
-    * `mkStream` builds the stream against a CLONED session
-    * (spark.newSession(): same SparkContext, isolated SQLConf) so the
-    * stream-specific shuffle-partition override never leaks into the shared
-    * batch conf — a batch plan built concurrently keeps the session's 32
-    * partitions. State-store partition count is fixed at checkpoint
-    * creation; the per-partition fixed cost (provider init, snapshot, WAL)
-    * dominates at test scale, so streams default to 8 partitions here; at
-    * real scale set SPARK_GRAFT_STREAM_PARTITIONS to shard state wide.
+    * `mkStream` builds the stream against `core.Session.stream(spark)`,
+    * whose isolated SQLConf keeps the stream's shuffle-partition override
+    * out of the shared batch conf — a batch plan built concurrently keeps
+    * the session's 32 partitions. State-store partition count is fixed at
+    * checkpoint creation; the per-partition fixed cost (provider init,
+    * snapshot, WAL) dominates at test scale, so streams default to 8
+    * partitions here; at real scale set SPARK_GRAFT_STREAM_PARTITIONS to
+    * shard state wide.
     *
     * Per-batch dirs (not a single overwrite) because append-mode
     * stateful queries emit in a LATER batch than the data arrives in
@@ -127,15 +122,7 @@ object StreamOps {
     val base = s"/tmp/graft_stream/$name"
     rmrf(base)
     val out = s"$base/out"
-    val ss = spark.newSession()
-    // runtime confs are not inherited by newSession — pin the ones the
-    // stream plan depends on explicitly
-    ss.conf.set("spark.sql.shuffle.partitions",
-      graft.core.Session.envStreamPartitions.toString)
-    ss.conf.set("spark.sql.session.timeZone",
-      spark.conf.get("spark.sql.session.timeZone"))
-    ss.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val q = mkStream(ss).writeStream
+    val q = mkStream(graft.core.Session.stream(spark)).writeStream
       .outputMode(mode)
       .option("checkpointLocation", s"$base/cp")
       .trigger(Trigger.AvailableNow())

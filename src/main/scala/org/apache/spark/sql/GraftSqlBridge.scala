@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.expressions.{SparkUserDefinedFunction,
+  UserDefinedAggregator, UserDefinedFunction}
 import org.apache.spark.sql.types.DataType
 
 /** Single-purpose bridge into the `private[sql]` classic Dataset
@@ -47,5 +50,29 @@ object GraftSqlBridge {
     val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
     kv.foreach { case (k, v) => clone.conf.set(k, v) }
     classic.Dataset.ofRows(clone, df.queryExecution.logical)
+  }
+
+  /** A Scala UDF or typed-Aggregator UDAF call as `UDFRegistration`
+    * builds it (`toScalaUDF`, `ScalaAggregator` are `private[sql]`). */
+  def udfCall(f: UserDefinedFunction, args: Seq[Expression]): Expression = f match {
+    case a: UserDefinedAggregator[_, _, _] => execution.aggregate.ScalaAggregator(a, args)
+    case u: SparkUserDefinedFunction => classic.UserDefinedFunctionUtils.toScalaUDF(u, args)
+  }
+
+  /** Install what `install` injects into a live session (`extensions` and
+    * its builders are `private[sql]`): functions into the registry,
+    * strategies and rules into `spark.experimental`, each once. A no-op
+    * when the session's own extensions inject those rules already. */
+  def ensureExtension(spark: SparkSession, install: SparkSessionExtensions => Unit): Unit = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val table = new SparkSessionExtensions
+    install(table)
+    val rules = table.buildOptimizerRules(s)
+    if (!rules.forall(s.extensions.buildOptimizerRules(s).contains)) {
+      table.registerFunctions(s.sessionState.functionRegistry)
+      val exp = s.experimental
+      exp.extraStrategies = (exp.extraStrategies ++ table.buildPlannerStrategies(s)).distinct
+      exp.extraOptimizations = (exp.extraOptimizations ++ rules).distinct
+    }
   }
 }

@@ -127,13 +127,11 @@ class AsOfJoinSpec extends SparkSpecBase {
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
     try {
-      // same SparkContext, fresh session state with the blessed conf
-      // route — here AsOfJoinRules runs INSIDE the operator-optimization
-      // fixed point, so the pushed conjunct keeps sinking into the scan
-      val s2 = SparkSession.builder()
-        .config("spark.sql.extensions", "graft.ext.GraftSparkExtensions")
-        .getOrCreate()
-      graft.ext.GraftFunctions.register(s2) // UDF/UDAF half (non-catalyst)
+      // same SparkContext, fresh session state built the graft way, with
+      // the extension conf — here AsOfJoinRules runs INSIDE the operator-
+      // optimization fixed point, so the pushed conjunct keeps sinking
+      // into the scan
+      val s2 = graft.core.Session.local(4)
       val p = Joins.d7b.build(s2, sf).where(col("event_id") > 100)
         .queryExecution.explainString(
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
@@ -168,7 +166,6 @@ class AsOfJoinSpec extends SparkSpecBase {
     val right = side(Seq(
       ("a", null.asInstanceOf[java.lang.Long], "r_null"), // ts null: never latest
       ("a", 4L, "r_a4")), "r_")
-    graft.plans.AsOf.ensureStrategy(spark)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def a(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,

@@ -3,14 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
-import graft.ext.GraftFunctions
 
 /** §2.M extension-point laws beyond the oracle checks. */
 class ExtensionsSpec extends SparkSpecBase {
   import spark.implicits._
 
   test("M4: graft_ngrams emits size-n+1 rows with positions, [] for short docs") {
-    GraftFunctions.register(spark)
     val d = Seq(
       (1L, Seq("a", "b", "c", "d")),
       (2L, Seq("a", "b")),       // shorter than n=3 → no rows
@@ -22,7 +20,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("M4: graft_ngrams(n=1) is positional explode") {
-    GraftFunctions.register(spark)
     val out = Seq((1L, Seq("x", "y"))).toDF("id", "toks")
       .selectExpr("id", "graft_ngrams(toks, 1) AS (pos, ngram)")
       .as[(Long, Int, String)].collect().sortBy(_._2)
@@ -30,7 +27,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("M2: graft_geomean matches exp(mean(ln)) and is merge-invariant") {
-    GraftFunctions.register(spark)
     forSamples(Gen.listOfN(25, Gen.chooseNum(0.1, 1000.0)), 8) { xs =>
       // partition counts change merge order — result must be stable at 9dp
       val one = xs.toDF("x").repartition(1).agg(expr("graft_geomean(x)")).head().getDouble(0)
@@ -42,7 +38,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("M1: graft_norm_text collapses runs of spaces, trims, lowercases") {
-    GraftFunctions.register(spark)
     val out = Seq("  A  Bc   D ", "", "x").toDF("s")
       .selectExpr("graft_norm_text(s) AS n").as[String].collect()
     out shouldBe Array("a bc d", "", "x")
@@ -60,7 +55,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("M5: bottom-k sketch is deterministic across partitionings and bounded") {
-    GraftFunctions.register(spark)
     forSamples(Gen.listOfN(60, Gen.chooseNum(0L, 40L)), 6) { xs =>
       def sketch(parts: Int): Seq[Long] =
         xs.toDF("x").repartition(parts)
@@ -82,7 +76,6 @@ class ExtensionsSpec extends SparkSpecBase {
   }
 
   test("graft_sorted_intersect_size == size(array_intersect) on sorted distinct arrays") {
-    GraftFunctions.register(spark)
     // randomized: vocab small enough to force real overlaps; both the
     // codegen path (DataFrame) and the interpreted path (eval) checked
     val vocab = ('a' to 'z').map(_.toString)

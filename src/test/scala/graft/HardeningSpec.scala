@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.ext.{CosineSimilarity, GraftFunctions}
+import graft.ext.CosineSimilarity
 
 /** Round-4 hardening regressions (VERDICT r3 "What's wrong" #1-#3):
   * zero-norm cosine, short-doc shingles, shared-conf scoping. */
@@ -25,7 +25,6 @@ class HardeningSpec extends SparkSpecBase {
   }
 
   test("M3: cosine of a zero-norm vector is null under whole-stage codegen") {
-    GraftFunctions.register(spark)
     val df = Seq(
       (1L, Array(0.0, 0.0, 0.0), Array(1.0, 2.0, 3.0)),
       (2L, Array(1.0, 0.0, 0.0), Array(1.0, 0.0, 0.0)))
@@ -57,7 +56,6 @@ class HardeningSpec extends SparkSpecBase {
   }
 
   test("J10: graft_rolling_hash matches the HOF rolling hash bit-for-bit") {
-    GraftFunctions.register(spark)
     val samples = Seq(
       "", "a", "hello world", "The quick brown fox", "  spaced  out  ",
       "punct!?;:#", "ünïcødé ßtring", "emoji 😀 mix",
@@ -82,7 +80,6 @@ class HardeningSpec extends SparkSpecBase {
   }
 
   test("J10: graft_bpeish_count matches the regexp match count exactly") {
-    GraftFunctions.register(spark)
     val samples = Seq(
       "", "a", "aa", "b", "ab", "ba", "hello world", "  double  spaces ",
       "AEIOU upper are not vowels", "punct!?;: #tags", "ünïcødé ßtring",

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 
 import graft.core.Tables
-import graft.ext.GraftFunctions
 import graft.queries.Similarity
 
 /** §2.K laws: cosine bounds, expression≡HOF agreement, K6 LSH recall
@@ -18,7 +17,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
     .suchThat(v => v.exists(_ != 0.0))
 
   private def cosineDF(a: List[Double], b: List[Double]) = {
-    GraftFunctions.register(spark)
     Seq((a, b)).toDF("a", "b")
       .select(
         expr("graft_cosine(a, b)").as("expr_cos"),
@@ -40,7 +38,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
   }
 
   test("M3: graft_cosine survives codegen and interpreted paths equally") {
-    GraftFunctions.register(spark)
     val d = Tables.embeddings(spark, sf)
       .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
     val on = d.select(expr("graft_cosine(e, e)").as("c")).agg(sum("c")).head().getDouble(0)
@@ -75,7 +72,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
 
   test("K6: graft_minhash_sig ≡ the HOF xxhash64 composition bit-for-bit") {
     import spark.implicits._
-    GraftFunctions.register(spark)
     // corpus docs plus the edge cases: empty array (all-null lanes), a
     // null token (hashes to the bare seed), duplicated tokens (min is
     // idempotent), unicode
@@ -176,7 +172,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
 
   test("K12b: int/long sorted-intersect lanes ≡ string lane; dictionary " +
       "encode preserves sizes and intersections (incl. null/empty sets)") {
-    GraftFunctions.register(spark)
     // random sorted-distinct token sets, plus the degenerate shapes the
     // verify path must carry through unchanged: null set, empty set
     val tokGen = Gen.listOf(Gen.oneOf(
@@ -216,7 +211,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
 
   test("K12b: dictEncodePlan is exact on null ELEMENTS — null intersects " +
       "null (string-lane parity) and sizes are preserved row for row") {
-    GraftFunctions.register(spark)
     // a/b share "a" AND a null element: the string lane counts 2 (null
     // matches null once — SortedIntersectSize's documented semantics);
     // an encode that dropped nulls would count 1 and silently change
@@ -250,7 +244,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
   }
 
   test("K8: fused graft_simhash ≡ the explode + 64-sum aggregate bit-for-bit") {
-    GraftFunctions.register(spark)
     import org.apache.spark.sql.functions.{explode, sum}
     val toks = Tables.documents(spark, sf)
       .selectExpr("doc_id", "array_distinct(split(lower(text), ' ')) AS toks")
@@ -307,7 +300,6 @@ class SimilarityOpsSpec extends SparkSpecBase {
   }
 
   test("K9: fused SRP signature ≡ HOF hash derivation bit-for-bit, both eval paths") {
-    GraftFunctions.register(spark)
     val d = Tables.embeddings(spark, sf)
       .withColumn("e", col("embedding").cast(ArrayType(DoubleType)))
       .select(col("vec_id"),
