@@ -66,9 +66,10 @@ object GraftTable {
 
   private val json = new ObjectMapper()
 
-  /** Rows a driver-built relation may hold and still be broadcast: merge's
-    * small-key mode, and the labels an in-memory connected-components run
-    * returns. Past it the relation joins the way the planner picks. */
+  /** Rows a driver-held key set may have: merge's small-key mode, which
+    * matches its keys by one in-plan set, and the labels an in-memory
+    * connected-components run returns and broadcasts. Past it the keys
+    * stay distributed. */
   private[graft] val LocalKeyCap = 64 * 1024
 
   private def logDir(root: String): Path = Paths.get(root, "_graft_log")
@@ -1447,10 +1448,14 @@ object GraftTable {
       // would fail the stream mid-batch and record no stats). Session conf
       // is the only knob parquet exposes, so the write runs under a session
       // CLONE with it pinned — the caller's conf is untouched and
-      // concurrent writers cannot race a shared set/restore.
+      // concurrent writers cannot race a shared set/restore. The pin acts
+      // on TIMESTAMP (local-zone) columns only, and a write with nothing
+      // to pin runs on `df` as it is (withConf skips the clone).
+      val tsPin = Option.when(org.apache.spark.sql.GraftSqlBridge.existsType(
+        df.schema)(_ == org.apache.spark.sql.types.TimestampType))(
+        "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
       val w = write(org.apache.spark.sql.GraftSqlBridge.withConf(df,
-        ("spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS") +:
-          conf: _*), staging.toString)
+        tsPin.toSeq ++ conf: _*), staging.toString)
       Files.createDirectories(Paths.get(root, into))
       val parts = {
         val s = Files.walk(staging)
@@ -1464,11 +1469,14 @@ object GraftTable {
       }
       // record counts (and data's min/max) come from the FOOTER — pure
       // metadata IO, never a re-scan of what was just written
+      // read options built on the op's one Hadoop conf: the one-argument
+      // `open` builds a fresh Configuration (classpath XML) per footer
       val hconf = df.sparkSession.sessionState.newHadoopConf()
       parts.zipWithIndex.flatMap { case ((dir, p), i) =>
+        val hp = new org.apache.hadoop.fs.Path(p.toUri)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(new org.apache.hadoop.fs.Path(p.toUri), hconf))
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, hconf),
+          org.apache.parquet.HadoopReadOptions.builder(hconf, hp).build())
         val part = try Part(into, stamp, i, dir, p, r.getFooter)
           finally r.close()
         // an empty part adds no rows, only metadata
@@ -1886,13 +1894,59 @@ object GraftTable {
       StructType(c.target.fields ++ c.extra), c.extra, mapping)
   }
 
+  /** A merge key set, matched against a frame's `on` columns under join
+    * equality: null matches nothing, -0.0 = 0.0, NaN = NaN, binary and
+    * structs by value. `in` keeps a frame's rows whose key is in the set
+    * (a left semi join), `notIn` the others (a left anti join, so a
+    * null-keyed row stays). */
+  private sealed trait MergeKeys {
+    def in(df: DataFrame): DataFrame
+    def notIn(df: DataFrame): DataFrame
+  }
+
+  /** At most [[LocalKeyCap]] keys the driver holds, matched by ONE `InSet`
+    * node in the plan: no relation to scan, build or broadcast. A key
+    * with a null part can match nothing, so it stays out of the set. */
+  private final class HeldKeys(on: Seq[String], schema: StructType,
+      all: Seq[Row]) extends MergeKeys {
+    val rows: Seq[Row] = all.filterNot(_.anyNull)
+    val member: Column = org.apache.spark.sql.GraftSqlBridge.inSet(
+      on.map(col), schema, rows)
+    def in(df: DataFrame): DataFrame = df.where(member)
+    def notIn(df: DataFrame): DataFrame = df.where(coalesce(!member, lit(true)))
+    def ++(o: HeldKeys): HeldKeys = new HeldKeys(on, schema, rows ++ o.rows)
+  }
+
+  /** A distributed key frame, broadcast-joined. */
+  private final class FrameKeys(on: Seq[String], val keys: DataFrame)
+    extends MergeKeys {
+    def in(df: DataFrame): DataFrame = df.join(broadcast(keys), on, "left_semi")
+    def notIn(df: DataFrame): DataFrame = df.join(broadcast(keys), on, "left_anti")
+  }
+
+  private case object NaNKey
+  /** A collected key row under SQL grouping equality, as Scala equality:
+    * nulls group together, -0.0 folds onto 0.0, NaN equals NaN, binary
+    * compares by value (`Row` equality compares arrays by reference). */
+  private def keyOf(r: Row): Seq[Any] = r.toSeq.map {
+    case d: java.lang.Double if d.isNaN => NaNKey
+    case f: java.lang.Float if f.isNaN => NaNKey
+    case d: java.lang.Double if d == 0.0 => 0.0d: java.lang.Double
+    case f: java.lang.Float if f == 0.0f => 0.0f: java.lang.Float
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  }
+
   /** Upsert/delete that rewrites ONLY the files containing matched keys.
     *
-    * Protocol: resolve the snapshot, find touched files via a
-    * broadcast semi-join of the base (tagged with `input_file_name()`)
-    * against the update keys — the collect is bounded by FILE count,
-    * never row count — then rewrite those files' unmatched rows + the
-    * update rows as new files, and commit remove(touched) + add(new).
+    * Protocol: resolve the snapshot; take a bounded census of the change
+    * set's keys (at most [[LocalKeyCap]] + 1 rows reach the driver); find
+    * the touched files with one probe of the base (tagged with
+    * `input_file_name()`) against the keys — an in-plan key set when the
+    * census held them all, a broadcast semi-join of the distributed keys
+    * otherwise; the collect is bounded by FILE count, never row count —
+    * then rewrite those files' unmatched rows + the update rows as new
+    * files, and commit remove(touched) + add(new).
     * Untouched files are never read past the semi-join probe and never
     * rewritten; at 100 TB that is the entire point of a lakehouse MERGE.
     *
@@ -1941,117 +1995,103 @@ object GraftTable {
         StructType.fromDDL(snap.schemaDdl),
         state.colMap.toMap,
         Seq.empty[StructField])
-    // ---- capped key census ---------------------------------------------
-    // ONE job either returns the COMPLETE key set (small mode — the
-    // MV-maintenance / streaming-CDF shape: a handful to a few thousand
-    // groups) or proves it is large (the bulk-CDC shape). Small mode
-    // localizes every key frame: the SQL-MERGE dup check and the
-    // deleteKeys overlap check come free from the collected counts (each
-    // was its own scan+collect job), and the downstream joins broadcast
-    // LOCAL relations built on the driver: no scan of the change set,
-    // though under AQE each broadcast still runs its own small build job
-    // over the local rows — the old lazy frames re-ran a build job that
-    // re-scanned the change set per action: probe, data stage, CDC stage.
-    // Large mode keeps the old distributed frames: hauling >64k keys
-    // through driver collects and single-threaded local-scan broadcast
-    // builds measured SLOWER than letting the executors rebuild them per
-    // action (ep27, 150k keys: +0.5 s), so past the cap only the census itself is collected (it
-    // doubles as the dup check, which always needed this scan) and
-    // everything else stays on the executor path. (A limit(cap+1)
-    // census was tried first — Spark's CollectLimit scale-up re-runs
-    // the aggregate stage up to 4x, costing more than the full collect
-    // of a few MB of key counts.)
+    // ---- bounded key census ----------------------------------------------
+    // One capped row scan collects at most LocalKeyCap + 1 key rows: every
+    // key in small mode (the MV-maintenance / streaming-CDF shape: a
+    // handful to a few thousand keys), proof of a large set past it (the
+    // bulk-CDC shape). A row scan, not an aggregate: CollectLimit stops
+    // once it holds the cap, and it is one job when the first partition
+    // holds the cap or every row (a one-file change set); each further
+    // partition step is one more job. Small mode HOLDS
+    // its keys: the SQL-MERGE duplicate check and the deleteKeys overlap
+    // check are driver set tests, and every membership test downstream
+    // (probe, rewrite, matched split) is one InSet node in its plan, so
+    // no job scans, builds or broadcasts the keys again. Large mode keeps
+    // distributed key frames, broadcast-joined, and checks duplicates
+    // with an aggregate that returns at most one row; no key set reaches
+    // the driver.
     val keyCols = on.map(col)
-    val kcDf = ups.groupBy(keyCols: _*).agg(count(lit(1)).as("__cnt"))
-    val kcRows = Attribution.timed("merge_census")(kcDf.collect())
-    val smallKeys = kcRows.length <= LocalKeyCap
+    // keys compare at the table's key types: an upsert was conformed to
+    // the table above, a delete set is conformed here (a key that cannot
+    // round-trip into the key type equals no row and is dropped)
+    val keySchema = org.apache.spark.sql.GraftSqlBridge.asNullable(
+      StructType(on.map(k => schema.find(f =>
+        spark.sessionState.conf.resolver(f.name, k)).getOrElse(
+        throw new IllegalArgumentException(
+          s"graft_table $root: merge key '$k' is not a table column")))))
+    val keyFrame = if (how == "upsert") ups.select(keyCols: _*)
+      else Conform.keys(ups, keySchema, s"graft_table $root: merge delete keys")
+    val census = Attribution.timed("merge_census")(
+      keyFrame.limit(LocalKeyCap + 1).collect())
+    val smallKeys = census.length <= LocalKeyCap
     if (how == "upsert") {
       // SQL MERGE law: one target row must match at most one source row
-      val dup = kcRows.find(_.getLong(on.size) > 1)
+      val dup = if (smallKeys) {
+        val seen = scala.collection.mutable.HashSet.empty[Seq[Any]]
+        census.find(r => !seen.add(keyOf(r)))
+      } else ups.groupBy(keyCols: _*).count().where(col("count") > 1)
+        .limit(1).collect().headOption
       require(dup.isEmpty, s"graft_table merge: change set has duplicate " +
         s"keys on (${on.mkString(",")}), e.g. ${dup.fold("")(_.toString)}")
     }
-    // nullable schema: LocalRelation nullability never changes join
-    // semantics, and collected delete keys may carry nulls the upsert
-    // side's schema did not declare
-    val keySchema = org.apache.spark.sql.GraftSqlBridge.asNullable(
-      StructType(kcDf.schema.fields.dropRight(1)))
-    def localKeys(rows: Seq[Row]): DataFrame =
-      spark.createDataFrame(rows.asJava, keySchema)
-    val keyRows =
-      if (smallKeys) kcRows.toSeq.map(r => Row.fromSeq(r.toSeq.dropRight(1)))
-      else Nil
-    val keys = if (smallKeys) localKeys(keyRows)
-      else ups.select(keyCols: _*).distinct()
-    // delete keys as the upsert key types (a LocalRelation claiming int
-    // cannot hold collected longs); a wider delete key that cannot
-    // round-trip into the key type equals no table row and is dropped,
-    // never narrowed onto some other row's key
-    val delConformed = deleteKeys.map(dk => Conform.keys(dk, keySchema,
-      s"graft_table $root: merge deleteKeys").distinct())
-    val delRows = if (smallKeys) delConformed.map(_.collect().toSeq) else None
-    val delKeys = delRows.map(localKeys).orElse(delConformed)
-    delRows match {
-      case Some(dr) =>
-        // SQL-equality set probe, matching what the old left_semi join
-        // reported: NULL never matches (a null-keyed delete cannot
-        // collide with a null-keyed upsert under join semantics) and
-        // -0.0 folds onto 0.0 (SQL normalizes float zeros; Row.equals
-        // does not).
-        def norm(r: Row): Option[Seq[Any]] = {
-          val vs = r.toSeq
-          if (vs.contains(null)) None
-          else Some(vs.map {
-            case d: java.lang.Double if d == 0.0 => 0.0d: java.lang.Double
-            case f: java.lang.Float if f == 0.0f => 0.0f: java.lang.Float
-            case b: Array[Byte] => b.toSeq // value equality for binary keys
-            case v => v
-          })
-        }
-        val upSet = keyRows.flatMap(norm).toSet
-        val overlap = dr.flatMap(norm).find(upSet)
-        require(overlap.isEmpty, "graft_table merge: a key appears in " +
-          s"BOTH the upsert set and deleteKeys (e.g. ${overlap
-            .fold("")(vs => Row.fromSeq(vs).toString)}) — the outcome " +
-          "would be order-dependent")
-      case None => delKeys.foreach { dk =>
-        val overlap = dk.join(keys, on, "left_semi").limit(1).collect()
-        require(overlap.isEmpty, "graft_table merge: a key appears in " +
-          s"BOTH the upsert set and deleteKeys (e.g. ${overlap.headOption
-            .fold("")(_.toString)}) — the outcome would be order-dependent")
+    // past the duplicate check an upsert's keys are distinct already, and
+    // a semi/anti build side needs no distinct: no shuffle for either
+    val keys: MergeKeys = if (smallKeys) new HeldKeys(on, keySchema, census)
+      else new FrameKeys(on, if (how == "upsert") keyFrame else keyFrame.distinct())
+    // delete keys as the key types (Conform.keys, as above), with their
+    // own capped collect: held only beside held upsert keys and when they
+    // fit under the cap themselves, distributed otherwise
+    val delKeys = deleteKeys.map { dk =>
+      val conformed = Conform.keys(dk, keySchema,
+        s"graft_table $root: merge deleteKeys")
+      Option.when(smallKeys)(conformed.limit(LocalKeyCap + 1).collect())
+        .filter(_.length <= LocalKeyCap)
+        .fold[MergeKeys](new FrameKeys(on, conformed.distinct()))(
+          new HeldKeys(on, keySchema, _))
+    }
+    delKeys.foreach { dk =>
+      // under join equality, as the joins below match: a null-keyed
+      // delete never collides with a null-keyed upsert
+      val overlap = (keys, dk) match {
+        case (u: HeldKeys, d: HeldKeys) =>
+          val up = u.rows.map(keyOf).toSet
+          d.rows.find(r => up(keyOf(r)))
+        case (u, d: FrameKeys) => u.in(d.keys).limit(1).collect().headOption
+        case _ => None // held delete keys sit beside held upsert keys only
       }
+      require(overlap.isEmpty, "graft_table merge: a key appears in " +
+        s"BOTH the upsert set and deleteKeys (e.g. ${overlap
+          .fold("")(_.toString)}) — the outcome would be order-dependent")
+    }
+    // every key the merge names: ONE set where both sides are alike, else
+    // (held upsert keys beside distributed delete keys) each side apart
+    val keySets: Seq[MergeKeys] = (keys, delKeys) match {
+      case (k, None) => Seq(k)
+      case (u: HeldKeys, Some(d: HeldKeys)) => Seq(u ++ d)
+      case (u: FrameKeys, Some(d: FrameKeys)) =>
+        Seq(new FrameKeys(on, u.keys.unionByName(d.keys)))
+      case (u, Some(d)) => Seq(u, d)
     }
     val base = livePosScan(spark, root, state, snap.files, schema)
-    // Small mode: ONE probe job returns both outputs — the touched FILE
-    // set (any key, upserts and atomic deletes alike — drives the
-    // rewrite set) and the matched UPSERT key set (feeds the post/insert
-    // split without its own scan+distinct round trip). Only the
-    // plain-upsert branch consumes matched keys — the delete and
-    // conditional branches, and large mode, collect just the file names,
-    // so an every-row-matches merge (the CDC last-writer-wins shape)
-    // never hauls its whole key space through the probe's
-    // distinct+collect. The using-join keeps the base-side key
-    // representation; those values only ever re-enter SQL joins, which
-    // compare under the same normalized equality, so the split is
-    // unchanged. Duplicate representations (e.g. 0.0 vs -0.0) are
-    // harmless in a semi/anti build side.
+    // ONE probe job returns the touched FILE set (any key, upserts and
+    // atomic deletes alike — drives the rewrite set) and, for a small
+    // plain upsert, the matched UPSERT keys (feed the post/insert split
+    // without their own scan). The delete and conditional branches, and
+    // large mode, collect just the file names, so an every-row-matches
+    // merge (the CDC last-writer-wins shape) never hauls its whole key
+    // space through the probe's collect. Each task returns its own
+    // distinct rows — no shuffle, so no second job — and a file's rows
+    // share a task unless the file is split. Matched keys keep the
+    // base-side representation; they only ever re-enter membership
+    // tests under the same equality, so the split is unchanged.
     val needMatched = how == "upsert" && condition.isEmpty && smallKeys
-    val probeSrc = keys.withColumn("__up", lit(true))
-    val probeAll = delKeys.fold(probeSrc)(dk =>
-      probeSrc.unionByName(dk.withColumn("__up", lit(false))))
-    val probed = Attribution.timed("merge_probe")(
-      if (needMatched)
-        base.join(broadcast(probeAll), on, "inner")
-          .select(col("__f") +: col("__up") +: keyCols: _*).distinct()
-          .collect()
-      else
-        base.join(broadcast(probeAll), on, "left_semi")
-          .select(col("__f")).distinct().collect())
+    val probe = keySets.map(_.in(base)).reduce(_ unionByName _)
+    val probed = Attribution.timed("merge_probe")((keys match {
+      case u: HeldKeys if needMatched =>
+        probe.select(col("__f") +: u.member.as("__up") +: keyCols: _*)
+      case _ => probe.select(col("__f"))
+    }).rdd.mapPartitions(_.toSet.iterator).collect())
     val touchedNames = probed.map(_.getString(0)).toSet
-    val matchedUpRows =
-      if (!needMatched) Nil
-      else probed.filter(_.getBoolean(1))
-        .map(r => Row.fromSeq(r.toSeq.drop(2))).distinct.toSeq
     // O(live files) filename→rel map (data file names are UUID-unique)
     val relOfName = snap.files.map(r =>
       Paths.get(r).getFileName.toString -> r).toMap
@@ -2063,8 +2103,7 @@ object GraftTable {
         spark.createDataFrame(java.util.Collections.emptyList[Row](),
           schema.add("__f", "string").add("__i", "bigint"))
       else base.where(col("__f").isin(touchedNames.toSeq: _*))
-    val allKeys = delKeys.fold(keys)(keys.unionByName(_))
-    val rewritten = touchedRows.join(broadcast(allKeys), on, "left_anti")
+    val rewritten = keySets.foldLeft(touchedRows)((d, k) => k.notIn(d))
       .select(dataCols: _*)
     def tag(df: DataFrame, t: String): DataFrame =
       df.withColumn("_change_type", lit(t))
@@ -2075,15 +2114,16 @@ object GraftTable {
     // touched subset only; cdc is computed only when changeDataFeed is on.
     val (cowData, morData, victims, cdcDf) = (how, condition) match {
       case ("delete", _) =>
-        val matchedPre = touchedRows.join(broadcast(keys), on, "left_semi")
+        val matchedPre = keys.in(touchedRows)
         (rewritten, None, matchedPre,
           Some(tag(matchedPre.select(dataCols: _*), "delete")))
       case ("upsert", None) =>
-        val matchedPre = touchedRows.join(broadcast(keys), on, "left_semi")
-        val matchedKeys = // small mode: free from the probe job
-          if (needMatched) localKeys(matchedUpRows)
-          else matchedPre.select(on.map(col): _*).distinct()
-        val post0 = ups.join(broadcast(matchedKeys), on, "left_semi")
+        val matchedPre = keys.in(touchedRows)
+        val matchedKeys: MergeKeys = // small mode: free from the probe job
+          if (needMatched) new HeldKeys(on, keySchema, probed
+            .filter(_.getBoolean(1)).map(r => Row.fromSeq(r.toSeq.drop(2))))
+          else new FrameKeys(on, matchedPre.select(keyCols: _*))
+        val post0 = matchedKeys.in(ups)
         // evolve + a source MISSING existing table columns: the conform
         // pass null-filled them, and replacing matched rows wholesale
         // would silently null real data (Delta's updateAll with schema
@@ -2110,12 +2150,11 @@ object GraftTable {
              else col(s"s.${f.name}")).as(f.name)
           }: _*)
         }
-        val inserts = ups.join(broadcast(matchedKeys), on, "left_anti")
+        val inserts = matchedKeys.notIn(ups)
         // atomic companion deletes (deleteKeys): their matched rows join
         // the victim set and tag `delete` in the feed — one commit, one
         // version, never an observable upsert-without-delete interim
-        val delMatched = delKeys.map(dk =>
-          touchedRows.join(broadcast(dk), on, "left_semi"))
+        val delMatched = delKeys.map(_.in(touchedRows))
         val victims = delMatched.fold(matchedPre)(matchedPre.unionByName(_))
         val upsertCdc = tag(matchedPre.select(dataCols: _*), "update_preimage")
           .unionByName(tag(post, "update_postimage"))

@@ -322,7 +322,8 @@ private[tables] class GraftFileReader(absPath: String, version: Long,
   // footer once: the file's own schema + record count (pure metadata IO)
   private val (fileSchema, recordCount) = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hPath, hconf)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in,
+      org.apache.parquet.HadoopReadOptions.builder(hconf, hPath).build())
     try (r.getFooter.getFileMetaData.getSchema, r.getRecordCount)
     finally r.close()
   }

@@ -32,6 +32,10 @@ object GraftSqlBridge {
     * hash/order differently across the two sides. */
   def sameType(a: DataType, b: DataType): Boolean = a.sameType(b)
 
+  /** Does `t`, or a type nested in it, satisfy `p`
+    * (`DataType.existsRecursively` is `private[spark]`)? */
+  def existsType(t: DataType)(p: DataType => Boolean): Boolean = t.existsRecursively(p)
+
   /** Recursive nullable clone (`StructType.asNullable` is
     * `private[spark]`) — a file-relation read schema must be nullable
     * like `DataFrameReader.schema` forces, or the vectorized parquet
@@ -45,11 +49,36 @@ object GraftSqlBridge {
     * copy — so a library write that needs a specific conf (graft_table
     * staging pins parquet timestamps to INT64-micros) neither mutates
     * the caller's session nor races concurrent writers the way a
-    * set/restore on the shared conf would. */
+    * set/restore on the shared conf would. When every override already
+    * holds in `df`'s session, `df` itself is returned: no clone, no
+    * re-plan. The clone plans from the ANALYZED plan, so a file source
+    * keeps the listing and schema `df` resolved (the raw logical plan
+    * of `spark.read.parquet(dir)` would list `dir` and infer its schema
+    * again, picking up files added since). */
   def withConf(df: DataFrame, kv: (String, String)*): DataFrame = {
-    val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
-    kv.foreach { case (k, v) => clone.conf.set(k, v) }
-    classic.Dataset.ofRows(clone, df.queryExecution.logical)
+    val pins = kv.filterNot { case (k, v) => df.sparkSession.conf.getOption(k).contains(v) }
+    if (pins.isEmpty) df
+    else {
+      val clone = df.sparkSession.asInstanceOf[classic.SparkSession].cloneSession()
+      pins.foreach { case (k, v) => clone.conf.set(k, v) }
+      classic.Dataset.ofRows(clone, df.queryExecution.analyzed)
+    }
+  }
+
+  /** `cols` IN `rows` as ONE `InSet` node over Catalyst values (a struct
+    * of the columns for a multi-column key; `schema` types `rows`), so a
+    * key set the driver holds stays in the plan instead of becoming a
+    * relation to scan or broadcast. `InSet` compares as join equality
+    * does: -0.0 = 0.0, NaN = NaN, binary and structs by value. A row
+    * with a null can match nothing under join equality; the caller
+    * keeps such rows out of `rows`. */
+  def inSet(cols: Seq[Column], schema: types.StructType, rows: Seq[Row]): Column = {
+    val one = cols.size == 1
+    val toCatalyst = catalyst.CatalystTypeConverters.createToCatalystConverter(
+      if (one) schema.head.dataType else schema)
+    column(catalyst.expressions.InSet(
+      expression(if (one) cols.head else functions.struct(cols: _*)),
+      rows.map(r => toCatalyst(if (one) r.get(0) else r)).toSet))
   }
 
   /** A Scala UDF or typed-Aggregator UDAF call as `UDFRegistration`

@@ -2789,4 +2789,212 @@ class GraftTableSpec extends SparkSpecBase {
       (2L, "c", 30.0),
       (3L, null, 40.0))  // insert: no target row to preserve
   }
+
+  // ---- small-key merge: driver-held keys stay in the plan ---------------
+
+  /** Poll `n` until it stops changing: listener delivery is async. */
+  private def settle(n: => Int): Unit = {
+    var last = -1
+    var spins = 0
+    while (n != last && spins < 20) { last = n; Thread.sleep(200); spins += 1 }
+  }
+
+  /** `f`'s result and the Spark jobs it ran, each as the names of the RDDs
+    * its stages read from (those without parents). Jobs are told apart by
+    * a job group, which staging threads and AQE's broadcast threads
+    * inherit. */
+  private def withJobs[A](f: => A): (A, Seq[Seq[String]]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Seq[String]]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(js.stageInfos.flatMap(_.rddInfos.filter(_.parentIds.isEmpty)
+            .map(_.name)).distinct)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      val out = try f finally spark.sparkContext.clearJobGroup()
+      settle(jobs.size)
+      (out, jobs.asScala.toSeq)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  /** `f`'s result and the rows each `collect` under it returned to the
+    * driver, read from the executed plan: a CollectLimit's limit, else
+    * the top operator's output-row count. */
+  private def collectedRows[A](f: => A): (A, Seq[Long]) = {
+    import org.apache.spark.sql.execution.{CollectLimitExec, QueryExecution,
+      SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      QueryStageExec}
+    def rows(p: SparkPlan): Long = p match {
+      case a: AdaptiveSparkPlanExec => rows(a.executedPlan)
+      case q: QueryStageExec => rows(q.plan)
+      case c: CollectLimitExec => c.limit.toLong
+      case w: WholeStageCodegenExec => rows(w.child)
+      case p => p.metrics.get("numOutputRows").fold(-1L)(_.value)
+    }
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (funcName == "collect") seen.add(rows(qe.executedPlan))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val out = f
+      settle(seen.size)
+      (out, seen.asScala.toSeq)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("a small-key upsert matches its keys in the plan: at most 5 jobs, " +
+    "none of them reading only driver-built rows (a key-relation build)") {
+    val root = freshRoot("merge_jobs")
+    GraftTable.write(spark, (1L to 100L).map(i => (i, s"t$i")).toDF("id", "v")
+      .repartition(2), root, "overwrite")
+    GraftTable.setProperty(root, "changeDataFeed", Some("true"))
+    val (_, jobs) = withJobs(GraftTable.merge(spark, root,
+      Seq((5L, "u5"), (500L, "u500")).toDF("id", "v"), Seq("id")))
+    withClue(jobs.mkString("\n")) {
+      jobs.size should be <= 5
+      jobs.filter(_.forall(_ == "ParallelCollectionRDD")) shouldBe empty
+    }
+    GraftTable.read(spark, root).where($"id" === 5L || $"id" === 500L)
+      .orderBy($"id").as[(Long, String)].collect() shouldBe
+      Array((5L, "u5"), (500L, "u500"))
+    GraftTable.read(spark, root).count() shouldBe 101L
+  }
+
+  test("small- and large-key merges agree on join equality: null keys, " +
+    "-0.0 = 0.0, NaN = NaN, binary by value, a two-column key, deleteKeys") {
+    val big = 70000L // past LocalKeyCap: large-key mode
+    // `dup` repeats an upsert key under SQL grouping, which the MERGE law rejects
+    final case class Case(name: String, on: Seq[String],
+        table: org.apache.spark.sql.DataFrame, ups: org.apache.spark.sql.DataFrame,
+        dels: Option[org.apache.spark.sql.DataFrame],
+        dup: Option[org.apache.spark.sql.DataFrame],
+        extra: Seq[org.apache.spark.sql.Column], want: Seq[(String, String)])
+    val cases = Seq(
+      Case("null keys", Seq("k"),
+        Seq((None, "t0"), (Some(1L), "t1"), (Some(2L), "t2")).toDF("k", "v"),
+        Seq((None, "u0"), (Some(1L), "u1"), (Some(3L), "u3")).toDF("k", "v"),
+        None, Some(Seq((None: Option[Long], "x")).toDF("k", "v")),
+        Seq(($"id" + 1000000L).as("k")),
+        Seq("null" -> "t0", "null" -> "u0", "1" -> "u1", "2" -> "t2", "3" -> "u3")),
+      Case("-0.0 = 0.0", Seq("k"),
+        Seq((0.0, "t0"), (1.5, "t1")).toDF("k", "v"),
+        Seq((-0.0, "u0"), (2.5, "u2")).toDF("k", "v"),
+        None, Some(Seq((0.0, "x")).toDF("k", "v")),
+        Seq(($"id".cast("double") + 1e6).as("k")),
+        Seq("0.0" -> "u0", "1.5" -> "t1", "2.5" -> "u2")),
+      Case("NaN = NaN", Seq("k"),
+        Seq((Double.NaN, "t0"), (1.0, "t1")).toDF("k", "v"),
+        Seq((Double.NaN, "u0"), (2.0, "u2")).toDF("k", "v"),
+        None, Some(Seq((Double.NaN, "x")).toDF("k", "v")),
+        Seq(($"id".cast("double") + 1e6).as("k")),
+        Seq("NaN" -> "u0", "1.0" -> "t1", "2.0" -> "u2")),
+      Case("binary", Seq("k"),
+        Seq((Array[Byte](1, 2), "t0"), (Array[Byte](3), "t1")).toDF("k", "v"),
+        Seq((Array[Byte](1, 2), "u0"), (Array[Byte](9), "u9")).toDF("k", "v"),
+        None, Some(Seq((Array[Byte](1, 2), "x")).toDF("k", "v")),
+        Seq(concat(lit("x"), $"id".cast("string")).cast("binary").as("k")),
+        Seq("[1,2]" -> "u0", "[3]" -> "t1", "[9]" -> "u9")),
+      Case("two-column key", Seq("a", "b"),
+        Seq((1L, "a", "t0"), (1L, "b", "t1"), (2L, "a", "t2"), (2L, null, "tn"))
+          .toDF("a", "b", "v"),
+        Seq((1L, "b", "u1"), (2L, "b", "u3"), (2L, null, "un")).toDF("a", "b", "v"),
+        None, Some(Seq((1L, "b", "x")).toDF("a", "b", "v")),
+        Seq(($"id" + 1000000L).as("a"), lit("x").as("b")),
+        Seq("1|a" -> "t0", "1|b" -> "u1", "2|a" -> "t2", "2|null" -> "tn",
+          "2|null" -> "un", "2|b" -> "u3")),
+      Case("upsert + deleteKeys", Seq("k"),
+        Seq((Some(1L), "t1"), (Some(2L), "t2"), (Some(3L), "t3"), (None, "tn"))
+          .toDF("k", "v"),
+        Seq((Some(1L), "u1"), (Some(4L), "u4"), (None, "un")).toDF("k", "v"),
+        // a null delete key deletes nothing and collides with no upsert key
+        Some(Seq(Some(2L), None).toDF("k")), None,
+        Seq(($"id" + 1000000L).as("k")),
+        Seq("1" -> "u1", "3" -> "t3", "4" -> "u4", "null" -> "tn", "null" -> "un")))
+    def show(v: Any): String = v match {
+      case null => "null"
+      case b: Array[Byte] => b.mkString("[", ",", "]")
+      case d: Double => if (d.isNaN) "NaN" else (d + 0.0).toString // -0.0 as 0.0
+      case x => x.toString
+    }
+    for (c <- cases; large <- Seq(false, true)) withClue(s"${c.name}, " +
+      s"${if (large) "large" else "small"} mode: ") {
+      val extra = Option.when(large)(spark.range(big)
+        .select(c.extra :+ lit("big").as("v"): _*))
+      def upsOf(df: org.apache.spark.sql.DataFrame) = extra.fold(df)(df.unionByName(_))
+      val root = freshRoot(s"merge_eq_${c.name.filter(_.isLetter)}_$large")
+      GraftTable.write(spark, c.table.coalesce(1), root, "overwrite")
+      c.dup.foreach(d => (the[IllegalArgumentException] thrownBy
+        GraftTable.merge(spark, root, upsOf(c.ups.unionByName(d)), c.on))
+        .getMessage should include("duplicate"))
+      GraftTable.merge(spark, root, upsOf(c.ups), c.on, deleteKeys = c.dels)
+      val out = GraftTable.read(spark, root)
+      out.where($"v" =!= "big").collect().map(r =>
+        (c.on.indices.map(i => show(r.get(i))).mkString("|"), r.getString(c.on.size)))
+        .sorted.toSeq shouldBe c.want.sorted
+      out.where($"v" === "big").count() shouldBe (if (large) big else 0L)
+    }
+  }
+
+  test("merge census is bounded: a >64k-key upsert with one duplicate " +
+    "fails with at most LocalKeyCap + 1 key rows collected") {
+    val root = freshRoot("merge_bigdup")
+    GraftTable.write(spark, Seq((1L, "a")).toDF("id", "v"), root, "overwrite")
+    val ups = spark.range(70000L).select($"id", lit("u").as("v"))
+      .unionByName(Seq((69999L, "dup")).toDF("id", "v"))
+    val (err, rows) = collectedRows(the[IllegalArgumentException] thrownBy
+      GraftTable.merge(spark, root, ups, Seq("id")))
+    err.getMessage should include("duplicate")
+    err.getMessage should include("69999")
+    rows should not be empty
+    rows.max should be <= (GraftTable.LocalKeyCap + 1).toLong
+    GraftTable.latestVersion(root) shouldBe Some(1L)
+  }
+
+  test("merge census is bounded: 10 upsert keys beside 70,000 delete keys " +
+    "keep the delete keys distributed") {
+    val root = freshRoot("merge_bigdel")
+    GraftTable.write(spark, (1L to 20L).map(i => (i, s"t$i")).toDF("id", "v"),
+      root, "overwrite")
+    val (_, rows) = collectedRows(GraftTable.merge(spark, root,
+      (1L to 10L).map(i => (i, s"u$i")).toDF("id", "v"), Seq("id"),
+      deleteKeys = Some(spark.range(11L, 70011L).toDF("id"))))
+    rows should not be empty
+    rows.max should be <= (GraftTable.LocalKeyCap + 1).toLong
+    GraftTable.read(spark, root).orderBy($"id").as[(Long, String)].collect() shouldBe
+      (1L to 10L).map(i => (i, s"u$i")).toArray
+    // a key in both sets is still rejected with the delete keys distributed
+    (the[IllegalArgumentException] thrownBy GraftTable.merge(spark, root,
+      Seq((5L, "x")).toDF("id", "v"), Seq("id"),
+      deleteKeys = Some(spark.range(0L, 70000L).toDF("id"))))
+      .getMessage should include("BOTH")
+  }
+
+  test("staging plans a raw file source from its analyzed plan: a file " +
+    "added after the read is not written, and no listing job re-runs") {
+    val root = freshRoot("rawsrc")
+    val src = freshRoot("rawsrc_in")
+    val more = freshRoot("rawsrc_more")
+    // a local-zone TIMESTAMP column, so staging still pins its parquet type
+    // on a session clone
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    Seq((1L, ts), (2L, ts)).toDF("id", "ts").coalesce(1).write.parquet(src)
+    val df = spark.read.parquet(src)
+    Seq((3L, ts)).toDF("id", "ts").coalesce(1).write.parquet(more)
+    val late = scala.util.Using.resource(Files.list(Paths.get(more)))(
+      _.iterator().asScala.find(_.toString.endsWith(".parquet")).get)
+    Files.move(late, Paths.get(src, "late.parquet"))
+    df.count() shouldBe 2L
+    val (_, jobs) = withJobs(GraftTable.write(spark, df, root, "overwrite"))
+    GraftTable.read(spark, root).count() shouldBe 2L
+    withClue(jobs.mkString("\n")) { jobs.size shouldBe 1 }
+  }
 }
