@@ -20,7 +20,9 @@ import org.apache.spark.sql.execution.ExplainMode
   *       pins the load-bearing properties, this file shows the full plans,
   *       the same bytes on every run: `planMasks` hides AQE's `plan_id=N`,
   *       ep1's checks-`Observation` UUID, ep36's deletion-vector `[J@…`
-  *       identity and file prefix, and ep38's scan-builder object hash
+  *       identity and file prefix, and ep38's scan-builder object hash;
+  *       each section's expression ids (`#N`) count from 0 in order of
+  *       first appearance, so ids spent before a query shift no section
   */
 object Dev {
   private val headline = Seq(
@@ -81,8 +83,12 @@ object Dev {
     "\\b[0-9a-f]{12}(?=_part\\d+\\.parquet)" -> "<prefix>",
     "(GraftScanBuilder\\S*)@[0-9a-f]+" -> "$1@<hash>")
 
-  private def masked(plan: String): String =
-    planMasks.foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) }
+  private def masked(plan: String): String = {
+    val ids = scala.collection.mutable.HashMap.empty[String, Int]
+    "#\\d+".r.replaceAllIn(
+      planMasks.foldLeft(plan) { case (p, (re, to)) => p.replaceAll(re, to) },
+      m => "#" + ids.getOrElseUpdate(m.matched, ids.size))
+  }
 
   private def explain(spark: SparkSession, name: String, sfDir: String): String =
     SparkEntry.queries(name)(spark, sfDir)

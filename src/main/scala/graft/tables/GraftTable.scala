@@ -1937,6 +1937,70 @@ object GraftTable {
     case v => v
   }
 
+  /** Data file name → root-relative path of `files` (data file names are
+    * UUID-unique within a table). */
+  private def relOfName(files: Seq[String]): Map[String, String] =
+    files.map(r => Paths.get(r).getFileName.toString -> r).toMap
+
+  /** `df` as change-feed rows of type `t`. */
+  private def tagged(df: DataFrame, t: String): DataFrame =
+    df.withColumn("_change_type", lit(t))
+
+  /** What a row-level op changes, as its matching semantics decide it;
+    * [[rewriteRows]] stages and commits it. `touched`: the sorted files
+    * holding a changed row; `dropped` ⊆ `touched`: files removed whole by
+    * metadata (deleteWhere's full-match files), the others change
+    * partially. The frames are by-name, built only when staged: `cow` the
+    * copy-on-write content replacing the partial files, `fresh` the rows a
+    * merge-on-read commit adds (the genuinely new ones), `victims` the
+    * `__f`/`__i` positions merge-on-read marks dead, `feed` the change
+    * rows (table columns + `_change_type`). */
+  private final class RowChange(val touched: Seq[String],
+      val dropped: Seq[String], cowRows: => Option[DataFrame],
+      freshRows: => Option[DataFrame], victimRows: => DataFrame,
+      feedRows: => DataFrame) {
+    def cow = cowRows; def fresh = freshRows
+    def victims = victimRows; def feed = feedRows
+  }
+
+  /** The one rewrite path of [[merge]], [[deleteWhere]] and
+    * [[updateWhere]]. Merge-on-read when `deletionVectors=true` and some
+    * file changes partially: partial files keep their bytes, `victims`
+    * extend their cumulative vectors, only `fresh` rows are staged.
+    * Copy-on-write otherwise: every touched file is removed, `cow` staged.
+    * `dropped` files are removed either way. The data, dv and feed
+    * stagings run concurrently ([[staged3]], `<span>_stage`) under the
+    * op's column `mapping`; [[transact]] commits `lead` (merge's evolve
+    * meta), the removes and the staged actions (`<span>_commit`),
+    * CHECK-enforced when `enforce`, replayed past disjoint commits with
+    * partition-scoped adds when `partScoped`. */
+  private def rewriteRows(spark: SparkSession, root: String, state: LogState,
+      span: String, ctx: String, change: RowChange, enforce: Boolean,
+      txn: Option[(String, Long)],
+      mapping: scala.collection.Map[String, String],
+      partScoped: Boolean = true, lead: Seq[ObjectNode] = Nil): Long = {
+    val partial = change.touched.diff(change.dropped)
+    val mor = dvEnabled(state) && partial.nonEmpty
+    val removes = (if (mor) change.dropped else change.touched).sorted
+      .map(removeAction)
+    transact(root, ctx, Some(state), Option.when(enforce)(spark), txn,
+      replay = Some(Replay(change.touched.toSet, adds =>
+        if (partScoped) dmlAddRule(state, change.touched, adds)
+        else AddsAlwaysConflict)),
+      commitStage = Some(s"${span}_commit")) { staged =>
+      Attribution.timed(s"${span}_stage")(staged3(
+        (if (mor) change.fresh else change.cow).toSeq.flatMap(d =>
+          stageDataFiles(staged, toPhysical(d, mapping), root, Some(state),
+            partitionBy = state.partitionBy)),
+        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
+          change.victims.select(col("__f"), col("__i")), partial),
+        if (!changeFeedEnabled(state)) Nil
+        else stageCdcFiles(staged, toPhysical(change.feed, mapping), root)))
+    } { case ((adds, dvActs, cdc), _) =>
+      Some(lead ++ removes ++ adds ++ dvActs ++ cdc)
+    }.get
+  }
+
   /** Upsert/delete that rewrites ONLY the files containing matched keys.
     *
     * Protocol: resolve the snapshot; take a bounded census of the change
@@ -1945,8 +2009,10 @@ object GraftTable {
     * `input_file_name()`) against the keys — an in-plan key set when the
     * census held them all, a broadcast semi-join of the distributed keys
     * otherwise; the collect is bounded by FILE count, never row count —
-    * then rewrite those files' unmatched rows + the update rows as new
-    * files, and commit remove(touched) + add(new).
+    * then describe a [[RowChange]] for the one rewrite path, [[rewriteRows]]:
+    * `cow` holds the touched files' kept rows + the rows the merge writes,
+    * `fresh` those written rows alone, `victims` the target rows it
+    * replaces or deletes, `feed` the deletes, pre/post-images and inserts.
     * Untouched files are never read past the semi-join probe and never
     * rewritten; at 100 TB that is the entire point of a lakehouse MERGE.
     *
@@ -2092,10 +2158,7 @@ object GraftTable {
       case _ => probe.select(col("__f"))
     }).rdd.mapPartitions(_.toSet.iterator).collect())
     val touchedNames = probed.map(_.getString(0)).toSet
-    // O(live files) filename→rel map (data file names are UUID-unique)
-    val relOfName = snap.files.map(r =>
-      Paths.get(r).getFileName.toString -> r).toMap
-    val touchedRel = touchedNames.toSeq.flatMap(relOfName.get)
+    val touchedRel = touchedNames.toSeq.flatMap(relOfName(snap.files).get)
       .distinct.sorted
     val dataCols = schema.fields.toSeq.map(f => col(f.name))
     val touchedRows = // live rows with __f/__i position attached
@@ -2105,18 +2168,13 @@ object GraftTable {
       else base.where(col("__f").isin(touchedNames.toSeq: _*))
     val rewritten = keySets.foldLeft(touchedRows)((d, k) => k.notIn(d))
       .select(dataCols: _*)
-    def tag(df: DataFrame, t: String): DataFrame =
-      df.withColumn("_change_type", lit(t))
-    // Per branch: (rows a copy-on-write rewrite's new files hold, rows a
-    // merge-on-read commit ADDS — the genuinely new ones only, victims —
-    // the target rows this merge kills, with their __f/__i positions,
-    // change rows for the feed). Every branch's joins run over the
-    // touched subset only; cdc is computed only when changeDataFeed is on.
-    val (cowData, morData, victims, cdcDf) = (how, condition) match {
+    // Each branch describes its RowChange; every branch's joins run over
+    // the touched subset only.
+    val change = (how, condition) match {
       case ("delete", _) =>
         val matchedPre = keys.in(touchedRows)
-        (rewritten, None, matchedPre,
-          Some(tag(matchedPre.select(dataCols: _*), "delete")))
+        new RowChange(touchedRel, Nil, Some(rewritten), None, matchedPre,
+          tagged(matchedPre.select(dataCols: _*), "delete"))
       case ("upsert", None) =>
         val matchedPre = keys.in(touchedRows)
         val matchedKeys: MergeKeys = // small mode: free from the probe job
@@ -2155,16 +2213,16 @@ object GraftTable {
         // the victim set and tag `delete` in the feed — one commit, one
         // version, never an observable upsert-without-delete interim
         val delMatched = delKeys.map(_.in(touchedRows))
-        val victims = delMatched.fold(matchedPre)(matchedPre.unionByName(_))
-        val upsertCdc = tag(matchedPre.select(dataCols: _*), "update_preimage")
-          .unionByName(tag(post, "update_postimage"))
-          .unionByName(tag(inserts, "insert"))
         // post ∪ inserts ≡ ups except on the evolve-preserve path, where
         // post carries the target-preserved matched rows
         val upsEff = if (post eq post0) ups else post.unionByName(inserts)
-        (rewritten.unionByName(upsEff), Some(upsEff), victims,
-          Some(delMatched.fold(upsertCdc)(dm =>
-            upsertCdc.unionByName(tag(dm.select(dataCols: _*), "delete")))))
+        def upsertCdc = tagged(matchedPre.select(dataCols: _*), "update_preimage")
+          .unionByName(tagged(post, "update_postimage"))
+          .unionByName(tagged(inserts, "insert"))
+        new RowChange(touchedRel, Nil, Some(rewritten.unionByName(upsEff)),
+          Some(upsEff), delMatched.fold(matchedPre)(matchedPre.unionByName(_)),
+          delMatched.fold(upsertCdc)(dm =>
+            upsertCdc.unionByName(tagged(dm.select(dataCols: _*), "delete"))))
       case ("upsert", Some(cond)) =>
         // WHEN MATCHED AND cond THEN UPDATE, WHEN NOT MATCHED THEN INSERT
         // (the last-writer-wins / newer-timestamp CDC clause): matched
@@ -2183,22 +2241,17 @@ object GraftTable {
           .select(tCols: _*)
         val inserts = s.join(t.select(on.map(k => col(s"t.$k").as(k)): _*),
           on, "left_anti").select(schema.fields.toSeq.map(f => col(f.name)): _*)
-        (rewritten.unionByName(srcWins).unionByName(tgtWins)
-          .unionByName(inserts),
+        new RowChange(touchedRel, Nil, Some(rewritten.unionByName(srcWins)
+            .unionByName(tgtWins).unionByName(inserts)),
           Some(srcWins.unionByName(inserts)),
           pairs.where(expr(cond))
             .select(col("t.__f").as("__f"), col("t.__i").as("__i")),
-          Some(tag(pairs.where(expr(cond)).select(tCols: _*),
-            "update_preimage")
-            .unionByName(tag(srcWins, "update_postimage"))
-            .unionByName(tag(inserts, "insert"))))
+          tagged(pairs.where(expr(cond)).select(tCols: _*), "update_preimage")
+            .unionByName(tagged(srcWins, "update_postimage"))
+            .unionByName(tagged(inserts, "insert")))
       case other => throw new IllegalStateException(
         s"unreachable merge shape $other — `how` was validated above")
     }
-    // merge-on-read: victims' positions extend the touched files'
-    // vectors, only new rows are staged, no file is removed or rewritten
-    val mor = dvEnabled(state) && touchedRel.nonEmpty
-    val removes = if (mor) Nil else touchedRel.map(removeAction)
     // the widening meta (evolve with genuinely-new columns) rides the
     // SAME commit — schema + data change atomically, like writeEvolve
     val meta = if (evolvedCols.isEmpty) Nil
@@ -2216,26 +2269,8 @@ object GraftTable {
     // merge's read scope here is the whole key space).
     val keyedParts = keysPartitionLocal || state.partitionBy.forall(p =>
       on.exists(spark.sessionState.conf.resolver(_, p)))
-    transact(root, s"merge ($how)", Some(state), Some(spark), txn,
-      replay = Some(Replay(touchedRel.toSet, adds =>
-        if (keyedParts) dmlAddRule(state, touchedRel, adds)
-        else AddsAlwaysConflict)),
-      commitStage = Some("merge_commit")) { staged =>
-      // merge-on-read: victims' positions extend the touched files'
-      // vectors, only new rows are staged, no file is removed or rewritten
-      Attribution.timed("merge_stage")(staged3(
-        if (mor) morData.map(d => stageDataFiles(staged, toPhysical(d, mapNew),
-          root, Some(state), partitionBy = state.partitionBy)).getOrElse(Nil)
-        else stageDataFiles(staged, toPhysical(cowData, mapNew), root,
-          Some(state), partitionBy = state.partitionBy),
-        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
-          victims.select(col("__f"), col("__i")), touchedRel),
-        if (!changeFeedEnabled(state)) Nil
-        else cdcDf.toSeq.flatMap(d =>
-          stageCdcFiles(staged, toPhysical(d, mapNew), root))))
-    } { case ((adds, dvActs, cdc), _) =>
-      Some(meta ++ removes ++ adds ++ dvActs ++ cdc)
-    }.get
+    rewriteRows(spark, root, state, "merge", s"merge ($how)", change,
+      enforce = true, txn, mapNew, partScoped = keyedParts, lead = meta)
   }
 
   /** Conservative log-stats pruning for pushed/parsed predicate
@@ -2439,7 +2474,9 @@ object GraftTable {
     * (`ts < cutoff` on a time-clustered layout) probes only the boundary
     * files from the LOG alone; (2) the scan over survivors is
     * column-pruned and predicate-pushed, so parquet row-group stats
-    * prune IO inside each file and only matching rows surface.
+    * prune IO inside each file and only matching rows surface. One job:
+    * each task counts its matching rows per file and the driver sums the
+    * per-task counts (a file split across tasks shows up in several).
     * Returns relative touched files → matched row count. */
   private def probeMatches(spark: SparkSession, root: String,
       snap: Snapshot, pred: org.apache.spark.sql.Column,
@@ -2450,155 +2487,110 @@ object GraftTable {
     // LIVE rows only: a row an existing deletion vector already marks
     // dead can neither re-match nor re-delete
     val base = livePosScan(spark, root, state, candidates, schema)
-    val perName = base.where(pred).groupBy(col("__f")).count()
-      .collect().map(r => (r.getString(0), r.getLong(1))).toMap
-    // O(files) filename→rel map (data file names are UUID-unique)
-    val relOfName = candidates.map(r =>
-      Paths.get(r).getFileName.toString -> r).toMap
-    perName.flatMap { case (name, n) => relOfName.get(name).map(_ -> n) }
+    val perTask = base.where(pred).select(col("__f")).rdd.mapPartitions { rows =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      rows.foreach(r => n.updateWith(r.getString(0))(c => Some(c.getOrElse(0L) + 1L)))
+      n.iterator
+    }.collect()
+    val rel = relOfName(candidates)
+    perTask.groupMapReduce(_._1)(_._2)(_ + _)
+      .flatMap { case (name, n) => rel.get(name).map(_ -> n) }
   }
 
-  /** DELETE WHERE — predicate delete as copy-on-write, the GDPR/TTL
-    * workhorse. Three file classes from one pushdown probe scan:
-    * untouched files (no matching row) survive AS-IS — no rewrite, no
-    * new version reference churn; files where EVERY row matches are
-    * dropped by a pure metadata remove (a TTL delete aligned with an
-    * ingest-date layout reclaims whole files without reading a byte of
-    * them past the probe's pruned scan); only PARTIAL files are
-    * rewritten, keeping rows where the predicate is false or null (SQL
-    * DELETE removes rows where it is TRUE only). At 100 TB with a
-    * date-clustered layout the rewrite set is the one boundary file per
-    * partition edge, not the table. Commit races resolve like merge's. */
-  def deleteWhere(spark: SparkSession, root: String, predicate: String,
-      txn: Option[(String, Long)] = None): Long = {
-    require(predicate.trim.nonEmpty, "deleteWhere: empty predicate — an " +
-      "unconditional delete is `write(emptyDf, mode=overwrite)`, say it")
-    val (snap, state) = current(root)
-    if (snap.files.isEmpty) return snap.version
-    val pred = expr(predicate)
-    fireRaceHook()
-    val matched = probeMatches(spark, root, snap, pred, state, predicate)
-    if (matched.isEmpty) return snap.version // no-op: no row matches
-    // live rows per file = logged footer count minus its vector's dead rows
-    def liveCount(f: String): Long = state.fileCounts.getOrElse(f, -1L) -
-      state.dvs.get(f).map(_._2).getOrElse(0L)
-    val (fullMatch, partial) =
-      matched.keys.toSeq.partition(f => matched(f) == liveCount(f))
-    val schema = StructType.fromDDL(snap.schemaDdl)
-    val dataCols = schema.fields.toSeq.map(f => col(f.name))
-    def live(files: Seq[String]) = livePosScan(spark, root, state, files, schema)
-    // merge-on-read (deletionVectors=true): partial files keep their
-    // bytes — the matched rows' positions extend each file's cumulative
-    // vector instead of forcing a rewrite. Full-match files stay pure
-    // metadata removes either way (cheaper than any vector).
-    val mor = dvEnabled(state) && partial.nonEmpty
-    val removes = (if (mor) fullMatch else fullMatch ++ partial).sorted
-    val touched = (fullMatch ++ partial).distinct
-    // deleteWhere only drops rows: its rewrites carry no new row to check.
-    // The three stagings are independent (snapshot-pinned reads, own
-    // staging dirs) — run them concurrently, commit after all (staged3)
-    transact(root, "deleteWhere", Some(state), enforceWith = None, txn = txn,
-      replay = Some(Replay(touched.toSet, dmlAddRule(state, touched, _)))) {
-      staged => staged3(
-        if (partial.isEmpty || mor) Nil
-        else stageDataFiles(staged, toPhysical(
-          live(partial).where(!coalesce(pred, lit(false))).select(dataCols: _*),
-          state.colMap), root, Some(state), partitionBy = state.partitionBy),
-        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
-          live(partial).where(pred).select(col("__f"), col("__i")), partial),
-        // change feed enabled: the deleted rows (pre-images) ride the same
-        // commit as `cdf/` sidecars — one extra pushdown-pruned scan of the
-        // touched subset only
-        if (!changeFeedEnabled(state)) Nil else stageCdcFiles(staged,
-          toPhysical(live(fullMatch ++ partial).where(pred)
-            .select(dataCols: _*).withColumn("_change_type", lit("delete")),
-            state.colMap), root))
-    } { case ((adds, dvActs, cdc), _) =>
-      Some(removes.map(removeAction) ++ adds ++ dvActs ++ cdc)
-    }.get
+  /** What [[rewriteWhere]] resolved and probed for the op's change:
+    * matched row count per touched file and the live positioned scan of a
+    * file subset. */
+  private final case class Probed(state: LogState, schema: StructType,
+      pred: Column, assign: Map[String, Column], matched: Map[String, Long],
+      live: Seq[String] => DataFrame) {
+    val touched: Seq[String] = matched.keys.toSeq.sorted
+    def dataCols: Seq[Column] = schema.fields.toSeq.map(f => col(f.name))
   }
 
-  /** UPDATE WHERE — predicate update as copy-on-write. Same probe and
-    * file triage as [[deleteWhere]]: only files containing a matching
-    * row are rewritten, applying each assignment `col := exprStr` to
-    * matching rows (predicate TRUE; null keeps the old value, per SQL
-    * UPDATE) and passing every other row and column through bit-exact.
-    * Assignments are resolved against the TABLE schema with the
-    * session's resolver and store-assigned to the declared column type
-    * ([[Conform.assign]]) — an update can never drift a column's type or
-    * wrap a value that does not fit, and assigning a column the table
-    * does not have fails loud, before any job runs. */
-  def updateWhere(spark: SparkSession, root: String, predicate: String,
-      set: Map[String, String], txn: Option[(String, Long)] = None): Long = {
-    require(predicate.trim.nonEmpty,
-      "updateWhere: empty predicate — to rewrite every row use overwrite")
-    require(set.nonEmpty, "updateWhere: empty SET clause")
+  /** The shared head of [[deleteWhere]] and [[updateWhere]]: the predicate
+    * and `set`'s assignments resolve against the table schema before any
+    * early return (a typo'd column fails loud on an empty table too); an
+    * empty table or no match is a no-op; else the op's `change` goes down
+    * the one rewrite path, [[rewriteRows]]. */
+  private def rewriteWhere(spark: SparkSession, root: String, op: String,
+      span: String, predicate: String, emptyHint: String,
+      set: Map[String, String], txn: Option[(String, Long)],
+      enforce: Boolean)(change: Probed => RowChange): Long = {
+    require(predicate.trim.nonEmpty, s"$op: empty predicate — $emptyHint")
     val (snap, state) = current(root)
     val schema = StructType.fromDDL(snap.schemaDdl)
-    val resolver = spark.sessionState.conf.resolver
     val typed = spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    val pred = expr(predicate)
+    typed.where(pred) // analysis only: an unknown column throws here
+    val resolver = spark.sessionState.conf.resolver
     val assign = set.map { case (name, e) =>
       val f = schema.fields.find(t => resolver(t.name, name)).getOrElse(
         throw new IllegalArgumentException(
-          s"updateWhere: SET column '$name' is not in the table schema " +
+          s"$op: SET column '$name' is not in the table schema " +
             s"(${schema.fieldNames.mkString(", ")})"))
       f.name -> Conform.assign(expr(e), f.name, typed.select(expr(e)).schema.head.dataType,
-        f.dataType, "updateWhere")
+        f.dataType, op)
     }
     if (snap.files.isEmpty) return snap.version
-    val pred = expr(predicate)
     fireRaceHook()
-    val matched = probeMatches(spark, root, snap, pred, state, predicate)
-    if (matched.isEmpty) return snap.version
-    val touched = matched.keys.toSeq.sorted
-    val live = livePosScan(spark, root, state, touched, schema)
-    def applyAssign(df: DataFrame): DataFrame =
-      df.select(schema.fields.toSeq.map { f =>
-        assign.get(f.name) match {
-          case Some(v) => v.as(f.name)
-          case None => col(f.name)
-        }
-      }: _*)
-    val mor = dvEnabled(state)
-    // change feed: matched rows before (pre) and after (post) the
-    // assignments, same commit, touched subset only
-    def cdcStage(staged: Staged): Seq[ObjectNode] =
-      if (!changeFeedEnabled(state)) Nil else {
-        val hit = live.where(pred)
-          .select(schema.fields.toSeq.map(f => col(f.name)): _*)
-        val pre = hit.withColumn("_change_type", lit("update_preimage"))
-        val post = applyAssign(hit)
-          .withColumn("_change_type", lit("update_postimage"))
-        stageCdcFiles(staged, toPhysical(pre.unionByName(post), state.colMap),
-          root)
-      }
-    // merge-on-read: the matched rows' positions extend each touched
-    // file's vector and ONLY the post-image rows are written — a 1-row
-    // update writes one 1-row file, never a boundary-file rewrite.
-    // Copy-on-write: rewrite the touched files' live rows, assignments
-    // applied to matching rows only. Data/dv/cdc stagings are
-    // independent (snapshot-pinned reads, own staging dirs) — run
-    // concurrently, commit after all (staged3).
-    val hit = live.where(pred)
-    def rewritten = live.select(schema.fields.toSeq.map { f =>
-      assign.get(f.name) match {
-        case Some(v) => when(pred, v).otherwise(col(f.name)).as(f.name)
-        case None => col(f.name)
-      }
-    }: _*)
-    val removes = if (mor) Nil else touched.map(removeAction)
-    transact(root, "updateWhere", Some(state), Some(spark), txn,
-      replay = Some(Replay(touched.toSet, dmlAddRule(state, touched, _)))) {
-      staged => staged3(
-        stageDataFiles(staged, toPhysical(
-          if (mor) applyAssign(hit) else rewritten, state.colMap),
-          root, Some(state), partitionBy = state.partitionBy),
-        if (!mor) Nil else stageDvFiles(staged, spark, root, state,
-          hit.select(col("__f"), col("__i")), touched),
-        cdcStage(staged))
-    } { case ((adds, dvActs, cdc), _) =>
-      Some(removes ++ adds ++ dvActs ++ cdc)
-    }.get
+    val matched = Attribution.timed(s"${span}_probe")(
+      probeMatches(spark, root, snap, pred, state, predicate))
+    if (matched.isEmpty) return snap.version // no-op: no row matches
+    rewriteRows(spark, root, state, span, op, change(Probed(state, schema,
+      pred, assign, matched, livePosScan(spark, root, state, _, schema))),
+      enforce, txn, state.colMap)
+  }
+
+  /** DELETE WHERE — predicate delete, the GDPR/TTL workhorse. Three
+    * file classes from one pushdown probe scan: untouched files (no
+    * matching row) survive AS-IS; files where EVERY row matches are
+    * `dropped` by a pure metadata remove (a TTL delete aligned with an
+    * ingest-date layout reclaims whole files without reading a byte of
+    * them past the probe's pruned scan); only PARTIAL files change: `cow`
+    * keeps their rows where the predicate is false or null (SQL DELETE
+    * removes rows where it is TRUE only), `victims` are the matching rows,
+    * no row is `fresh`, the `feed` holds the deleted rows. At 100 TB with
+    * a date-clustered layout the rewrite set is the one boundary file per
+    * partition edge, not the table. Commit races resolve like merge's. */
+  def deleteWhere(spark: SparkSession, root: String, predicate: String,
+      txn: Option[(String, Long)] = None): Long =
+    rewriteWhere(spark, root, "deleteWhere", "delete_where", predicate,
+      "an unconditional delete is `write(emptyDf, mode=overwrite)`, say it",
+      Map.empty, txn, enforce = false) { p =>
+      // live rows per file = logged footer count minus its vector's dead rows
+      def liveCount(f: String): Long = p.state.fileCounts.getOrElse(f, -1L) -
+        p.state.dvs.get(f).map(_._2).getOrElse(0L)
+      val (full, partial) = p.touched.partition(f => p.matched(f) == liveCount(f))
+      // deleteWhere only drops rows: its rewrites carry no new row to check
+      new RowChange(p.touched, full, Option.when(partial.nonEmpty)(
+          p.live(partial).where(!coalesce(p.pred, lit(false))).select(p.dataCols: _*)),
+        None, p.live(partial).where(p.pred),
+        tagged(p.live(p.touched).where(p.pred).select(p.dataCols: _*), "delete"))
+    }
+
+  /** UPDATE WHERE — predicate update, same probe and file triage as
+    * [[deleteWhere]]: each assignment `col := exprStr` applies to matching
+    * rows (predicate TRUE; null keeps the old value, per SQL UPDATE),
+    * every other row and column passes through bit-exact. `cow` is the
+    * touched files' rows so assigned, `victims` the matching rows, `fresh`
+    * their post-images, `feed` pre- and post-images. Assignments resolve
+    * against the TABLE schema and store-assign to the declared column
+    * type ([[Conform.assign]]): no type drift, no wrapped value, and an
+    * unknown column fails loud before any job runs. */
+  def updateWhere(spark: SparkSession, root: String, predicate: String,
+      set: Map[String, String], txn: Option[(String, Long)] = None): Long = {
+    require(set.nonEmpty, "updateWhere: empty SET clause")
+    rewriteWhere(spark, root, "updateWhere", "update_where", predicate,
+      "to rewrite every row use overwrite", set, txn, enforce = true) { p =>
+      val live = p.live(p.touched)
+      val hit = live.where(p.pred)
+      def assigned(df: DataFrame): DataFrame = df.select(p.schema.fields.toSeq
+        .map(f => p.assign.get(f.name).fold(col(f.name))(v =>
+          when(p.pred, v).otherwise(col(f.name)).as(f.name))): _*)
+      new RowChange(p.touched, Nil, Some(assigned(live)), Some(assigned(hit)),
+        hit, tagged(hit.select(p.dataCols: _*), "update_preimage")
+          .unionByName(tagged(assigned(hit), "update_postimage")))
+    }
   }
 
   /** RESTORE — roll the table back to `toVersion` as a NEW commit, pure
@@ -3007,19 +2999,16 @@ object GraftTable {
     * The write repartitions by file and partitions the staging dir by
     * file, so every file's vector lands as exactly one parquet part —
     * parallel across files, never a single-task funnel. Per-file
-    * cardinalities come from a file-count-bounded aggregate (row indexes
-    * themselves never touch the driver). */
+    * cardinalities are the parts' footer row counts (row indexes never
+    * touch the driver, and no job counts them). */
   private def stageDvFiles(staged: Staged, spark: SparkSession, root: String,
       state: LogState, deleted: DataFrame,
       affectedRel: Seq[String]): Seq[ObjectNode] = {
-    val relOfName = affectedRel.map(r =>
-      Paths.get(r).getFileName.toString -> r).toMap
+    val rel = relOfName(affectedRel)
     val carried = dvRows(spark, root, state,
       affectedRel.filter(state.dvs.contains))
     val all = carried.fold(deleted)(deleted.unionByName(_))
       .select(col("__f"), col("__i")).distinct()
-    val counts = all.groupBy(col("__f")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val seen = scala.collection.mutable.HashSet.empty[String]
     // Pinned session clone: a dv action REPLACES the file's cumulative
     // vector on replay, so each data file's vector MUST land as exactly
@@ -3041,8 +3030,8 @@ object GraftTable {
             s"into multiple parts (${part.dir}) — one dv action per data " +
             "file is a replay invariant")
         val dataName = unescapePathName(part.dir.stripPrefix("__f="))
-        val rel = part.rel("dv")
-        (rel, dvAction(relOfName(dataName), Some(rel), counts(dataName)))
+        val dv = part.rel("dv")
+        (dv, dvAction(rel(dataName), Some(dv), part.rows))
     }
   }
 

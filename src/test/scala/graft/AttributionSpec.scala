@@ -55,4 +55,16 @@ class AttributionSpec extends SparkSpecBase {
     } shouldBe Seq("merge_census", "merge_probe", "merge_stage", "merge_commit")
     graft.streaming.StreamOps.rmrf(root)
   }
+
+  test("deleteWhere and updateWhere record probe, stage and commit") {
+    val root = "/tmp/graft_io/attribution_dml"
+    graft.streaming.StreamOps.rmrf(root)
+    GraftTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root,
+      "overwrite")
+    recorded(GraftTable.deleteWhere(spark, root, "id = 1")) shouldBe
+      Seq("delete_where_probe", "delete_where_stage", "delete_where_commit")
+    recorded(GraftTable.updateWhere(spark, root, "id = 2", Map("v" -> "'B'"))) shouldBe
+      Seq("update_where_probe", "update_where_stage", "update_where_commit")
+    graft.streaming.StreamOps.rmrf(root)
+  }
 }

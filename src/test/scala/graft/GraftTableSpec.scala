@@ -213,6 +213,21 @@ class GraftTableSpec extends SparkSpecBase {
       .select("x").as[Double].head() shouldBe 99.0
   }
 
+  test("deleteWhere and updateWhere resolve the predicate before any early " +
+    "return: an unknown column fails on an empty table too") {
+    val root = freshRoot("dml_empty")
+    GraftTable.create(root,
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, v STRING"))
+    // a valid predicate on the 0-file table stays a no-op
+    GraftTable.deleteWhere(spark, root, "id = 1") shouldBe 1L
+    GraftTable.updateWhere(spark, root, "id = 1", Map("v" -> "'x'")) shouldBe 1L
+    an[org.apache.spark.sql.AnalysisException] should be thrownBy
+      GraftTable.deleteWhere(spark, root, "nope = 1")
+    an[org.apache.spark.sql.AnalysisException] should be thrownBy
+      GraftTable.updateWhere(spark, root, "nope = 1", Map("v" -> "'x'"))
+    GraftTable.latestVersion(root) shouldBe Some(1L)
+  }
+
   test("restore: pure log metadata — no data file staged, schema returns, " +
     "vacuumed target fails loud") {
     val root = freshRoot("restore")
@@ -1347,14 +1362,27 @@ class GraftTableSpec extends SparkSpecBase {
   test("deletion vectors: DML is merge-on-read — no boundary rewrite, " +
     "readers anti-filter, OPTIMIZE materializes, restore reconciles") {
     val root = freshRoot("dv"); val cow = freshRoot("dv_cow")
+    val mor = freshRoot("dv_mor")
     val df0 = (1L to 100L).map(i => (i, i * 10.0)).toDF("k", "v")
-    def sameOps(r: String): Unit = {
+    // every row-level op, on a twin with the change feed on and deletion
+    // vectors `dv`; v7 is the state after the first four ops
+    def sameOps(r: String, dv: Boolean): Unit = {
       GraftTable.write(spark, df0.repartition(4), r, "overwrite")      // v1
+      GraftTable.setProperty(r, "changeDataFeed", Some("true"))        // v2
+      GraftTable.setProperty(r, "deletionVectors", Some(dv.toString))  // v3
       GraftTable.deleteWhere(spark, r, "k % 10 = 3")
       GraftTable.deleteWhere(spark, r, "k % 10 = 7")
       GraftTable.updateWhere(spark, r, "k = 4", Map("v" -> "999.0"))
       GraftTable.merge(spark, r,
-        Seq((5L, -5.0), (1000L, 1.0)).toDF("k", "v"), Seq("k"))
+        Seq((5L, -5.0), (1000L, 1.0)).toDF("k", "v"), Seq("k"))        // v7
+      GraftTable.merge(spark, r, Seq(6L, 16L).toDF("k"), Seq("k"),
+        how = "delete")
+      GraftTable.merge(spark, r,
+        Seq((8L, 1.0), (9L, 1000.0), (2000L, 2.0)).toDF("k", "v"), Seq("k"),
+        condition = Some("s.v > t.v"))
+      GraftTable.merge(spark, r,
+        Seq((11L, -11.0), (3000L, 3.0)).toDF("k", "v"), Seq("k"),
+        deleteKeys = Some(Seq(12L, 22L, 4000L).toDF("k")))
     }
     GraftTable.write(spark, df0.repartition(4), root, "overwrite")     // v1
     GraftTable.setProperty(root, "deletionVectors", Some("true"))      // v2
@@ -1386,9 +1414,23 @@ class GraftTableSpec extends SparkSpecBase {
     GraftTable.history(spark, root).where($"version" === 6).head
       .getAs[Int]("n_removed_files") shouldBe 0
     // bit-identical to the copy-on-write twin of the same op sequence
-    sameOps(cow)
+    sameOps(cow, dv = false)
     GraftTable.read(spark, root).as[(Long, Double)].collect().sorted shouldBe
+      GraftTable.read(spark, cow, asOf = Some(7)).as[(Long, Double)]
+        .collect().sorted
+    // and through the merges too: a merge-on-read twin (no commit past v3
+    // removes a file) ends with the same rows and the same change feed
+    sameOps(mor, dv = true)
+    GraftTable.history(spark, mor).where($"version" > 3)
+      .select($"n_removed_files").as[Int].collect().toSet shouldBe Set(0)
+    GraftTable.read(spark, mor).as[(Long, Double)].collect().sorted shouldBe
       GraftTable.read(spark, cow).as[(Long, Double)].collect().sorted
+    def feed(r: String) = GraftTable.changesWithImages(spark, r, 3)
+      .select($"k", $"v", $"_change_type", $"_commit_version")
+      .as[(Long, Double, String, Long)].collect().sorted
+    feed(mor) shouldBe feed(cow)
+    feed(cow).map(_._3).toSet shouldBe Set("delete", "update_preimage",
+      "update_postimage", "insert")
     // checkpoint carries the vector map; snapshot resolution via it works
     GraftTable.checkpoint(root)
     GraftTable.read(spark, root).count() shouldBe 81
