@@ -2,7 +2,7 @@ package graft.tables
 
 import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
@@ -231,93 +231,130 @@ object GraftTable {
       }
   }
 
+  /** Versions of the checkpoints in the log, in listing order. */
+  private def checkpointVersions(root: String): Seq[Long] =
+    if (!isTable(root)) Nil
+    else {
+      val s = Files.list(logDir(root))
+      try s.iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(_.endsWith(".checkpoint.json"))
+        .flatMap(n => scala.util.Try(
+          n.stripSuffix(".checkpoint.json").toLong).toOption).toSeq
+      finally s.close()
+    }
+
   /** Latest checkpoint at or below `v`, if any. */
-  private def checkpointAtOrBefore(root: String, v: Long): Option[Long] = {
-    if (!isTable(root)) return None
-    val s = Files.list(logDir(root))
-    try s.iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(_.endsWith(".checkpoint.json"))
-      .flatMap(n => scala.util.Try(
-        n.stripSuffix(".checkpoint.json").toLong).toOption)
-      .filter(_ <= v)
-      .maxOption
-    finally s.close()
+  private def checkpointAtOrBefore(root: String, v: Long): Option[Long] =
+    checkpointVersions(root).filter(_ <= v).maxOption
+
+  /** The state the checkpoint at version `c` sealed. One declaring a
+    * reader floor above [[SupportedCkptReader]] fails loud: replay and
+    * vacuum alike would misread it. */
+  private def loadCheckpoint(root: String, c: Long): LogState = {
+    val st = new LogState
+    val n = json.readTree(Files.readString(ckptFile(root, c)))
+    val need = if (n.has("minReader")) n.get("minReader").asInt() else 1
+    if (need > SupportedCkptReader) throw new IllegalStateException(
+      s"graft_table $root: checkpoint at version $c requires reader " +
+        s"version $need but this engine supports $SupportedCkptReader — " +
+        "it carries state (e.g. deletion vectors / column mapping) this " +
+        "binary would silently misread; upgrade the reader")
+    def each(key: String)(f: (String, JsonNode) => Unit): Unit =
+      if (n.has(key))
+        n.get(key).properties().asScala.foreach(e => f(e.getKey, e.getValue))
+    st.minReader = need
+    st.schemaDdl = n.get("schemaDdl").asText()
+    n.get("files").elements().asScala.foreach(f => st.files += f.asText())
+    each("fileStats")((p, s) => st.fileStats(p) = s)
+    each("fileCounts")((p, c) => st.fileCounts(p) = c.asLong())
+    each("fileSizes")((p, b) => st.fileSizes(p) = b.asLong())
+    if (n.has("partitionBy"))
+      st.partitionBy = n.get("partitionBy").elements().asScala
+        .map(_.asText()).toSeq
+    each("filePartVals")((p, pv) => st.filePartVals(p) = pv.properties()
+      .asScala.map(e => e.getKey -> e.getValue.asText()).toMap)
+    each("txns")((app, b) => st.txns(app) = b.asLong())
+    each("constraints")((c, e) => st.constraints(c) = e.asText())
+    each("properties")((k, v) => st.properties(k) = v.asText())
+    each("dvs")((p, d) =>
+      st.dvs(p) = (d.get("dvPath").asText(), d.get("numDeleted").asLong()))
+    each("columnMapping")((l, p) => st.colMap(l) = p.asText())
+    st
   }
 
   /** State at `v`: nearest checkpoint ≤ v as the base, then replay only
     * the remaining log suffix. A missing log file in the suffix means the
     * history was truncated past any covering checkpoint — fail loud. */
   private def replayState(root: String, v: Long): LogState = {
-    val st = new LogState
     val base = checkpointAtOrBefore(root, v)
-    base.foreach { c =>
-      val n = json.readTree(Files.readString(ckptFile(root, c)))
-      val need = if (n.has("minReader")) n.get("minReader").asInt() else 1
-      if (need > SupportedCkptReader) throw new IllegalStateException(
-        s"graft_table $root: checkpoint at version $c requires reader " +
-          s"version $need but this engine supports $SupportedCkptReader — " +
-          "it carries state (e.g. deletion vectors / column mapping) this " +
-          "binary would silently misread; upgrade the reader")
-      st.minReader = need
-      st.schemaDdl = n.get("schemaDdl").asText()
-      n.get("files").elements().asScala.foreach(f => st.files += f.asText())
-      if (n.has("fileStats")) {
-        val fs = n.get("fileStats")
-        fs.fieldNames().asScala.foreach(p => st.fileStats(p) = fs.get(p))
-      }
-      if (n.has("fileCounts")) {
-        val fc = n.get("fileCounts")
-        fc.fieldNames().asScala.foreach(p => st.fileCounts(p) = fc.get(p).asLong())
-      }
-      if (n.has("fileSizes")) {
-        val fz = n.get("fileSizes")
-        fz.fieldNames().asScala.foreach(p => st.fileSizes(p) = fz.get(p).asLong())
-      }
-      if (n.has("partitionBy"))
-        st.partitionBy = n.get("partitionBy").elements().asScala
-          .map(_.asText()).toSeq
-      if (n.has("filePartVals")) {
-        val fp = n.get("filePartVals")
-        fp.fieldNames().asScala.foreach { p =>
-          val pv = fp.get(p)
-          st.filePartVals(p) = pv.fieldNames().asScala
-            .map(c => c -> pv.get(c).asText()).toMap
-        }
-      }
-      val t = n.get("txns")
-      t.fieldNames().asScala.foreach(app => st.txns(app) = t.get(app).asLong())
-      if (n.has("constraints")) {
-        val cs = n.get("constraints")
-        cs.fieldNames().asScala.foreach(c => st.constraints(c) = cs.get(c).asText())
-      }
-      if (n.has("properties")) {
-        val ps = n.get("properties")
-        ps.fieldNames().asScala.foreach(k => st.properties(k) = ps.get(k).asText())
-      }
-      if (n.has("dvs")) {
-        val ds = n.get("dvs")
-        ds.fieldNames().asScala.foreach { p =>
-          val d = ds.get(p)
-          st.dvs(p) = (d.get("dvPath").asText(), d.get("numDeleted").asLong())
-        }
-      }
-      if (n.has("columnMapping")) {
-        val cm = n.get("columnMapping")
-        cm.fieldNames().asScala.foreach(l => st.colMap(l) = cm.get(l).asText())
-      }
-    }
+    val st = base.fold(new LogState)(loadCheckpoint(root, _))
     ((base.getOrElse(0L) + 1) to v).foreach { ver =>
-      val f = verFile(root, ver)
-      if (!Files.exists(f)) throw new IllegalArgumentException(
+      readVersion(root, ver).getOrElse(throw new IllegalArgumentException(
         s"graft_table $root: version $ver is unreadable — its log was " +
           s"truncated and no checkpoint ≤ $v covers it (earliest " +
-          "resolvable state is the oldest retained checkpoint)")
-      Files.readAllLines(f).asScala.filter(_.nonEmpty)
-        .foreach(line => st.applyLine(json.readTree(line)))
+          "resolvable state is the oldest retained checkpoint)"))
+        .actions.foreach(st.applyLine)
     }
     st.version = v
     st
+  }
+
+  /** One log version, parsed once: its actions in log order (what replay
+    * and the conflict check walk) and their classification (what the
+    * change feeds, the MV ladder, the stream source, history and vacuum
+    * read). [[readVersion]] gives None for a truncated version, and each
+    * caller keeps its policy for one:
+    *  - `appendOnlySince` and `cdcCoveredSince` answer false (the MV
+    *    falls back to a full recompute);
+    *  - `versionDeltas`, `changes`, `changesWithImages`,
+    *    `commitTimestamp` and `replayState` throw (the delta is
+    *    unknowable);
+    *  - `history` and `vacuum` skip the version;
+    *  - `conflictWith` reports it as a conflict. */
+  private final case class VersionRecord(
+      version: Long,
+      actions: Seq[JsonNode],
+      dataAdds: Seq[String],   // adds that change data
+      layoutAdds: Seq[String], // `dataChange: false` adds (OPTIMIZE)
+      rowsAdded: Long,         // numRecords over every add
+      removes: Seq[String],
+      dvFiles: Seq[String],    // data files whose vector it set or cleared
+      dvPaths: Seq[String],    // the vector sidecars it references
+      cdc: Seq[String],
+      txn: Option[String],     // `appId#batchId`
+      meta: Boolean,
+      property: Boolean,
+      constraint: Boolean,     // added or dropped one
+      timestamp: Long) {       // the commit line's, else the log's mtime
+    /** Rows that existed before this version changed: it vectored a file,
+      * or removed one without being OPTIMIZE's layout-only swap. */
+    def changedExisting: Boolean = dvFiles.nonEmpty ||
+      (removes.nonEmpty && !(layoutAdds.nonEmpty && dataAdds.isEmpty))
+  }
+
+  private def readVersion(root: String, v: Long): Option[VersionRecord] = {
+    val f = verFile(root, v)
+    val lines = try Files.readAllLines(f).asScala
+      catch { case _: java.nio.file.NoSuchFileException => return None }
+    val actions = lines.filter(_.nonEmpty).map(json.readTree).toSeq
+    def of(kind: String) = actions.filter(_.has(kind)).map(_.get(kind))
+    def path(a: JsonNode) = a.get("path").asText()
+    val (data, layout) = of("add").partition(a =>
+      !a.has("dataChange") || a.get("dataChange").asBoolean(true))
+    Some(VersionRecord(v, actions, data.map(path), layout.map(path),
+      of("add").map(_.get("numRecords").asLong()).sum,
+      of("remove").map(path), of("dv").map(path),
+      of("dv").filterNot(_.get("dvPath").isNull).map(_.get("dvPath").asText()),
+      of("cdc").map(path),
+      of("txn").lastOption.map(t =>
+        t.get("appId").asText() + "#" + t.get("batchId").asLong()),
+      meta = actions.exists(_.has("meta")),
+      property = actions.exists(_.has("property")),
+      constraint = actions.exists(n =>
+        n.has("constraint") || n.has("dropConstraint")),
+      timestamp = of("commit").headOption.fold(
+        Files.getLastModifiedTime(f).toMillis)(_.get("ts").asLong())))
   }
 
   /** Write a checkpoint at the current latest version. Idempotent and
@@ -447,13 +484,9 @@ object GraftTable {
     * commit-ts line when present, the log file's mtime for logs written
     * before timestamps were recorded. O(1) metadata. */
   def commitTimestamp(root: String, v: Long): Long = {
-    val f = verFile(root, v)
-    require(Files.exists(f),
-      s"graft_table $root: version $v's log was truncated")
-    Files.readAllLines(f).asScala.filter(_.nonEmpty)
-      .map(json.readTree).collectFirst {
-        case n if n.has("commit") => n.get("commit").get("ts").asLong()
-      }.getOrElse(Files.getLastModifiedTime(f).toMillis)
+    val r = readVersion(root, v)
+    require(r.isDefined, s"graft_table $root: version $v's log was truncated")
+    r.get.timestamp
   }
 
   /** Timestamp time travel: the NEWEST version committed at or before
@@ -463,12 +496,12 @@ object GraftTable {
     * after truncation, not silently the earliest snapshot). */
   def versionAtTimestamp(root: String, tsMillis: Long): Long = {
     versionAtTimestampOpt(root, tsMillis).getOrElse {
-      val latest = latestVersion(root).get
-      val retained = (1L to latest).filter(v => Files.exists(verFile(root, v)))
+      val first = (1L to latestVersion(root).get).iterator
+        .flatMap(readVersion(root, _)).nextOption()
       throw new IllegalArgumentException(
         s"graft_table $root: no commit at or before ts=$tsMillis — earliest " +
-          s"retained commit is version ${retained.headOption.getOrElse(-1L)} " +
-          s"at ts=${retained.headOption.map(commitTimestamp(root, _)).getOrElse(-1L)}")
+          s"retained commit is version ${first.fold(-1L)(_.version)} " +
+          s"at ts=${first.fold(-1L)(_.timestamp)}")
     }
   }
 
@@ -479,9 +512,8 @@ object GraftTable {
     * versionAtTimestamp would swallow that too and silently deliver
     * everything on a typo'd path. */
   def versionAtTimestampOpt(root: String, tsMillis: Long): Option[Long] = {
-    val latest = headVersion(root)
-    (1L to latest).filter(v => Files.exists(verFile(root, v)))
-      .filter(v => commitTimestamp(root, v) <= tsMillis).maxOption
+    (1L to headVersion(root)).flatMap(readVersion(root, _))
+      .filter(_.timestamp <= tsMillis).map(_.version).maxOption
   }
 
   /** Snapshot-isolated read of `asOf` (default latest). The schema comes
@@ -650,42 +682,21 @@ object GraftTable {
     * Skips `dataChange: false` adds (OPTIMIZE's layout-only rewrites), so
     * compacting a table between two feed reads cannot re-deliver the
     * whole table. Contract: an APPEND-ONLY change feed — removes are not
-    * retracted (merge/delete/overwrite between reads need a full CDF with
-    * pre/post images, which this format does not record); consumers of
-    * mutable tables should read snapshots instead. Composes with the ep9
-    * incremental-watermark machinery: persist the last-read version,
-    * pass it back as `changesFrom` on the next run. */
+    * retracted. For merge/delete/overwrite between reads use
+    * [[changesWithImages]], which replays DML as pre/post images when the
+    * table's `changeDataFeed` property was on at the time; or read
+    * snapshots. Composes with the ep9 incremental-watermark machinery:
+    * persist the last-read version, pass it back as `changesFrom` on the
+    * next run. */
   def changes(spark: SparkSession, root: String, fromExclusive: Long,
-      toInclusive: Option[Long] = None): DataFrame = {
-    val latest = headVersion(root)
-    val to = toInclusive.getOrElse(latest)
-    require(fromExclusive >= 0 && to <= latest && fromExclusive <= to,
-      s"graft_table $root: changes range ($fromExclusive, $to] out of [0, $latest]")
-    val stTo = replayState(root, to)
-    val schema = StructType.fromDDL(stTo.schemaDdl)
-    // physical column names are stable across renames/drops, so every
-    // version's files read coherently under `to`'s physical schema
-    val versioned = ((fromExclusive + 1) to to).flatMap { ver =>
-      require(Files.exists(verFile(root, ver)),
-        s"graft_table $root: change feed needs version $ver's log, which " +
-          "was truncated — catch up from a snapshot instead (read the " +
-          "current version and reset the feed cursor)")
-      val adds = Files.readAllLines(verFile(root, ver)).asScala
-        .filter(_.nonEmpty).map(json.readTree)
-        .filter(n => n.has("add") &&
-          !(n.get("add").has("dataChange") &&
-            !n.get("add").get("dataChange").asBoolean(true)))
-        .map(n => n.get("add").get("path").asText())
-      if (adds.isEmpty) None
-      else Some(toLogical(spark.read.schema(physicalSchema(stTo, schema))
-        .parquet(adds.map(f => Paths.get(root).resolve(f).toString).toSeq: _*),
-        stTo, schema)
-        .withColumn("_commit_version", lit(ver)))
+      toInclusive: Option[Long] = None): DataFrame =
+    feedRead(spark, root, fromExclusive, toInclusive,
+      " (read the current version and reset the feed cursor)",
+      new StructType().add("_commit_version", "bigint")) { (st, r) =>
+      if (r.dataAdds.isEmpty) None
+      else Some(feedFrame(spark, root, st, r.dataAdds, sidecar = false)(
+        "_commit_version" -> lit(r.version)))
     }
-    versioned.reduceOption(_.unionByName(_)).getOrElse(
-      spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        schema.add("_commit_version", "bigint")))
-  }
 
   /** FULL change data feed for (fromExclusive, toInclusive]: every
     * change row classified `_change_type ∈ {insert, update_preimage,
@@ -701,66 +712,67 @@ object GraftTable {
     * cannot invent retractions, resync from a snapshot. O(versions) log
     * metadata to plan; data IO proportional to the change volume only. */
   def changesWithImages(spark: SparkSession, root: String,
-      fromExclusive: Long, toInclusive: Option[Long] = None): DataFrame = {
+      fromExclusive: Long, toInclusive: Option[Long] = None): DataFrame =
+    feedRead(spark, root, fromExclusive, toInclusive, "",
+      new StructType().add("_change_type", "string")
+        .add("_commit_version", "bigint").add("_commit_timestamp", "timestamp")) {
+      (st, r) =>
+        val stamps = Seq("_commit_version" -> lit(r.version),
+          "_commit_timestamp" -> lit(new java.sql.Timestamp(r.timestamp)))
+        if (r.cdc.nonEmpty)
+          Some(feedFrame(spark, root, st, r.cdc, sidecar = true)(stamps: _*))
+        else {
+          if (r.changedExisting) throw new IllegalStateException(
+            s"graft_table $root: version ${r.version} changed existing rows and " +
+              "recorded no change data — it predates `changeDataFeed=true`, " +
+              "or was an overwrite/restore/drop_partition (those never " +
+              "record images). Resync from a snapshot read")
+          if (r.dataAdds.isEmpty) None
+          else Some(feedFrame(spark, root, st, r.dataAdds, sidecar = false)(
+            ("_change_type" -> lit("insert")) +: stamps: _*))
+        }
+    }
+
+  /** The read both change feeds share: the versions in (fromExclusive,
+    * toInclusive] in order, each record turned into at most one frame by
+    * `frame` under `to`'s state, unioned by name. An empty feed is `to`'s
+    * schema plus `stamps`. A truncated version fails loud, its message
+    * ending in `hint`. */
+  private def feedRead(spark: SparkSession, root: String, fromExclusive: Long,
+      toInclusive: Option[Long], hint: String, stamps: StructType)(
+      frame: (LogState, VersionRecord) => Option[DataFrame]): DataFrame = {
     val latest = headVersion(root)
     val to = toInclusive.getOrElse(latest)
     require(fromExclusive >= 0 && to <= latest && fromExclusive <= to,
       s"graft_table $root: changes range ($fromExclusive, $to] out of [0, $latest]")
     val stTo = replayState(root, to)
-    val schema = StructType.fromDDL(stTo.schemaDdl)
-    val physSchema = physicalSchema(stTo, schema)
-    val withTypePhys = physSchema.add("_change_type", "string")
-    val withType = schema.add("_change_type", "string")
-    def abs(f: String) = Paths.get(root).resolve(f).toString
     val frames = ((fromExclusive + 1) to to).flatMap { ver =>
-      require(Files.exists(verFile(root, ver)),
+      val r = readVersion(root, ver)
+      require(r.isDefined,
         s"graft_table $root: change feed needs version $ver's log, which " +
-          "was truncated — catch up from a snapshot instead")
-      var removes = 0; var layoutAdds = 0; var dvs = 0
-      val adds = Seq.newBuilder[String]; val cdc = Seq.newBuilder[String]
-      Files.readAllLines(verFile(root, ver)).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = json.readTree(line)
-          if (n.has("remove")) removes += 1
-          else if (n.has("dv")) dvs += 1
-          else if (n.has("cdc")) cdc += n.get("cdc").get("path").asText()
-          else if (n.has("add")) {
-            val a = n.get("add")
-            if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
-              adds += a.get("path").asText()
-            else layoutAdds += 1
-          }
-        }
-      val cdcPaths = cdc.result(); val addPaths = adds.result()
-      // the Delta CDF contract stamps the commit wall-clock alongside
-      // _change_type/_commit_version — already logged as the version's
-      // first `commit` line (mtime fallback for pre-timestamp logs)
-      val commitTs = new java.sql.Timestamp(commitTimestamp(root, ver))
-      if (cdcPaths.nonEmpty)
-        Some(toLogical(spark.read.schema(withTypePhys)
-            .parquet(cdcPaths.map(abs): _*), stTo, schema)
-          .withColumn("_commit_version", lit(ver))
-          .withColumn("_commit_timestamp", lit(commitTs)))
-      else {
-        val changedExisting = dvs > 0 ||
-          (removes > 0 && !(layoutAdds > 0 && addPaths.isEmpty))
-        if (changedExisting) throw new IllegalStateException(
-          s"graft_table $root: version $ver changed existing rows and " +
-            "recorded no change data — it predates `changeDataFeed=true`, " +
-            "or was an overwrite/restore/drop_partition (those never " +
-            "record images). Resync from a snapshot read")
-        if (addPaths.isEmpty) None
-        else Some(toLogical(spark.read.schema(physSchema)
-            .parquet(addPaths.map(abs): _*), stTo, schema)
-          .withColumn("_change_type", lit("insert"))
-          .withColumn("_commit_version", lit(ver))
-          .withColumn("_commit_timestamp", lit(commitTs)))
-      }
+          s"was truncated — catch up from a snapshot instead$hint")
+      frame(stTo, r.get)
     }
     frames.reduceOption(_.unionByName(_)).getOrElse(
       spark.createDataFrame(java.util.Collections.emptyList[Row](),
-        withType.add("_commit_version", "bigint")
-          .add("_commit_timestamp", "timestamp")))
+        StructType(StructType.fromDDL(stTo.schemaDdl).fields ++ stamps.fields)))
+  }
+
+  /** One version's rows in a change feed: `paths` read under `st`'s
+    * physical schema — physical names are stable across renames and
+    * drops, so every version's files read coherently — plus the
+    * `_change_type` column cdc `sidecar`s carry, renamed to logical, then
+    * `stamps` appended in order. */
+  private def feedFrame(spark: SparkSession, root: String, st: LogState,
+      paths: Seq[String], sidecar: Boolean)(stamps: (String, Column)*): DataFrame = {
+    val schema = StructType.fromDDL(st.schemaDdl)
+    val phys = physicalSchema(st, schema)
+    val read = spark.read
+      .schema(if (sidecar) phys.add("_change_type", "string") else phys)
+      .parquet(paths.map(f => Paths.get(root).resolve(f).toString): _*)
+    stamps.foldLeft(toLogical(read, st, schema)) { case (df, (n, c)) =>
+      df.withColumn(n, c)
+    }
   }
 
   /** True iff [[changesWithImages]] can replay (fromExclusive,
@@ -768,25 +780,8 @@ object GraftTable {
     * carries cdc sidecars. O(versions) log metadata. */
   def cdcCoveredSince(root: String, fromExclusive: Long,
       toInclusive: Long): Boolean =
-    ((fromExclusive + 1) to toInclusive).forall { ver =>
-      if (!Files.exists(verFile(root, ver))) return false
-      var removes = 0; var dataAdds = 0; var layoutAdds = 0; var cdc = 0
-      var dvs = 0
-      Files.readAllLines(verFile(root, ver)).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = json.readTree(line)
-          if (n.has("remove")) removes += 1
-          else if (n.has("dv")) dvs += 1
-          else if (n.has("cdc")) cdc += 1
-          else if (n.has("add")) {
-            if (!n.get("add").has("dataChange") ||
-              n.get("add").get("dataChange").asBoolean(true)) dataAdds += 1
-            else layoutAdds += 1
-          }
-        }
-      cdc > 0 || ((removes == 0 || (layoutAdds > 0 && dataAdds == 0)) &&
-        dvs == 0)
-    }
+    ((fromExclusive + 1) to toInclusive).forall(readVersion(root, _)
+      .exists(r => r.cdc.nonEmpty || !r.changedExisting))
 
   /** Streaming-source metadata for (fromExclusive, toInclusive]: per
     * version, its data-changing added files, its cdc sidecar files
@@ -799,105 +794,48 @@ object GraftTable {
   private[graft] def versionDeltas(root: String, fromExclusive: Long,
       toInclusive: Long): Seq[(Long, Seq[String], Seq[String], Boolean)] =
     ((fromExclusive + 1) to toInclusive).map { ver =>
-      val f = verFile(root, ver)
-      require(Files.exists(f),
+      val r = readVersion(root, ver)
+      require(r.isDefined,
         s"graft_table $root: version $ver's log was truncated — the " +
           "change stream cannot replay it; restart from a snapshot read")
-      var removes = 0; var layoutAdds = 0; var dvs = 0
-      val dataAdds = Seq.newBuilder[String]
-      val cdc = Seq.newBuilder[String]
-      Files.readAllLines(f).asScala.filter(_.nonEmpty).foreach { line =>
-        val n = json.readTree(line)
-        if (n.has("remove")) removes += 1
-        else if (n.has("dv")) dvs += 1 // merge-on-read DML = a change
-        else if (n.has("cdc")) cdc += n.get("cdc").get("path").asText()
-        else if (n.has("add")) {
-          val a = n.get("add")
-          if (!a.has("dataChange") || a.get("dataChange").asBoolean(true))
-            dataAdds += a.get("path").asText()
-          else layoutAdds += 1
-        }
-      }
-      val adds = dataAdds.result()
-      val changedExisting = dvs > 0 ||
-        (removes > 0 && !(layoutAdds > 0 && adds.isEmpty)) // pure OPTIMIZE ok
-      (ver, adds, cdc.result(), changedExisting)
+      (ver, r.get.dataAdds, r.get.cdc, r.get.changedExisting)
     }
 
   /** True iff every version in (fromExclusive, toInclusive] only ADDED
     * rows — i.e. the change feed over that range is complete. OPTIMIZE
     * (removes + all-layout-only adds) qualifies: `changes` skips its
     * rewrites. merge/delete/overwrite do not: they removed or replaced
-    * rows the feed cannot retract. O(versions) log metadata, no data IO. */
+    * rows the feed cannot retract. A truncated version can't be proven
+    * append-only, so it answers false and feed consumers (the MV) fall
+    * back to a full recompute. O(versions) log metadata, no data IO. */
   def appendOnlySince(root: String, fromExclusive: Long,
       toInclusive: Long): Boolean =
-    ((fromExclusive + 1) to toInclusive).forall { ver =>
-      // a truncated version can't be proven append-only — report false so
-      // feed consumers (the MV) fall back to a full recompute
-      if (!Files.exists(verFile(root, ver))) return false
-      var removes = 0; var dataAdds = 0; var layoutAdds = 0; var dvs = 0
-      Files.readAllLines(verFile(root, ver)).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = json.readTree(line)
-          if (n.has("remove")) removes += 1
-          else if (n.has("dv")) dvs += 1
-          else if (n.has("add")) {
-            if (!n.get("add").has("dataChange") ||
-              n.get("add").get("dataChange").asBoolean(true)) dataAdds += 1
-            else layoutAdds += 1
-          }
-        }
-      // pure append, or OPTIMIZE's layout-only swap; a version that
-      // removed files WITHOUT re-adding them as layout (merge, delete,
-      // overwrite) — or extended a deletion vector — destroyed rows the
-      // feed cannot retract
-      dvs == 0 && (removes == 0 || (layoutAdds > 0 && dataAdds == 0))
-    }
+    ((fromExclusive + 1) to toInclusive).forall(readVersion(root, _)
+      .exists(!_.changedExisting))
 
   /** DESCRIBE HISTORY: one row per version — operation kind (inferred
     * from the action mix, the log stores no operation names), add/remove
     * file counts, rows added, schema-change and txn markers. Pure log
     * metadata: O(versions), never touches data files. */
   def history(spark: SparkSession, root: String): DataFrame = {
-    val latest = headVersion(root)
-    val rows = (1L to latest)
-      .filter(ver => Files.exists(verFile(root, ver))) // truncated = no rows
-      .map { ver =>
-      var (adds, removes, rowsAdded) = (0, 0, 0L)
-      var meta = false; var dataChange = false; var txn: Option[String] = None
-      var alterCons = false; var dvs = 0; var props = false
-      Files.readAllLines(verFile(root, ver)).asScala
-        .filter(_.nonEmpty).foreach { line =>
-          val n = json.readTree(line)
-          if (n.has("meta")) meta = true
-          else if (n.has("property")) props = true
-          else if (n.has("constraint") || n.has("dropConstraint"))
-            alterCons = true
-          else if (n.has("add")) {
-            adds += 1
-            rowsAdded += n.get("add").get("numRecords").asLong()
-            if (!n.get("add").has("dataChange") ||
-              n.get("add").get("dataChange").asBoolean(true)) dataChange = true
-          }
-          else if (n.has("remove")) removes += 1
-          else if (n.has("dv")) dvs += 1
-          else if (n.has("txn")) txn = Some(
-            n.get("txn").get("appId").asText() + "#" +
-              n.get("txn").get("batchId").asLong())
-        }
-      val op = // evidence-driven: v1 is always the CREATE, whatever wrote
-        // it (write, appendBatch — its txn still shows in the txn column)
-        if (ver == 1L) "CREATE"
-        else if (alterCons) "ALTER CONSTRAINT"
-        else if (adds > 0 && removes > 0 && !dataChange) "OPTIMIZE"
-        else if (meta && removes > 0) "OVERWRITE"
-        else if (removes > 0 || dvs > 0) "MERGE" // incl. merge-on-read DML
-        else if (meta && adds == 0) "ALTER SCHEMA" // rename/drop column
-        else if (props && adds == 0) "SET PROPERTY"
-        else if (txn.isDefined) "STREAMING APPEND"
-        else "APPEND"
-      (ver, op, adds, removes, rowsAdded, meta, txn.orNull)
-    }
+    val rows = (1L to headVersion(root))
+      .flatMap(readVersion(root, _)) // truncated = no rows
+      .map { r =>
+        val adds = r.dataAdds.size + r.layoutAdds.size
+        val removes = r.removes.size
+        val op = // evidence-driven: v1 is always the CREATE, whatever wrote
+          // it (write, appendBatch — its txn still shows in the txn column)
+          if (r.version == 1L) "CREATE"
+          else if (r.constraint) "ALTER CONSTRAINT"
+          else if (adds > 0 && removes > 0 && r.dataAdds.isEmpty) "OPTIMIZE"
+          else if (r.meta && removes > 0) "OVERWRITE"
+          else if (removes > 0 || r.dvFiles.nonEmpty) "MERGE" // incl. merge-on-read DML
+          else if (r.meta && adds == 0) "ALTER SCHEMA" // rename/drop column
+          else if (r.property && adds == 0) "SET PROPERTY"
+          else if (r.txn.isDefined) "STREAMING APPEND"
+          else "APPEND"
+        (r.version, op, adds, removes, r.rowsAdded, r.meta, r.txn.orNull)
+      }
     import spark.implicits._
     rows.toDF("version", "operation", "n_added_files", "n_removed_files",
       "rows_added", "schema_changed", "txn")
@@ -1217,11 +1155,9 @@ object GraftTable {
     * past it. Pure log metadata: one pass over the version's lines. */
   private def conflictWith(root: String, ver: Long, depFiles: Set[String],
       addRule: AddRule, partitionBy: Seq[String]): Option[String] = {
-    val f = verFile(root, ver)
-    if (!Files.exists(f))
-      return Some(s"version $ver's log was truncated mid-flight")
-    Files.readAllLines(f).asScala.filter(_.nonEmpty).foreach { line =>
-      val n = json.readTree(line)
+    val r = readVersion(root, ver).getOrElse(
+      return Some(s"version $ver's log was truncated mid-flight"))
+    r.actions.foreach { n =>
       if (n.has("meta") || n.has("constraint") || n.has("dropConstraint") ||
         n.has("property") || n.has("protocol"))
         return Some(s"version $ver changed the table definition")
@@ -3307,34 +3243,18 @@ object GraftTable {
       Files.getLastModifiedTime(p).toMillis < cutoff
     val latest = latestVersion(root).getOrElse(return Nil)
     val referenced = scala.collection.mutable.HashSet.empty[String]
-    (1L to latest).foreach { ver =>
-      val f = verFile(root, ver)
-      // truncated versions are gone from the log — exactly the point:
-      // files only THEY referenced become unreferenced and reclaimable
-      // (their sealed live set survives via the checkpoint scan below)
-      if (Files.exists(f))
-        Files.readAllLines(f).asScala
-          .filter(_.nonEmpty).foreach { line =>
-            val n = json.readTree(line)
-            if (n.has("add")) referenced += n.get("add").get("path").asText()
-            else if (n.has("cdc")) // change-data sidecars live until their
-              referenced += n.get("cdc").get("path").asText() // log does
-            else if (n.has("dv") && !n.get("dv").get("dvPath").isNull)
-              referenced += n.get("dv").get("dvPath").asText()
-          }
+    // truncated versions are gone from the log — exactly the point:
+    // files only THEY referenced become unreferenced and reclaimable
+    // (their sealed live set survives via the checkpoint scan below).
+    // Change-data sidecars live until their log does.
+    (1L to latest).flatMap(readVersion(root, _)).foreach { r =>
+      referenced ++= r.dataAdds ++ r.layoutAdds ++ r.cdc ++ r.dvPaths
     }
-    // every checkpoint's live set stays readable (incl. the truncation seal)
-    val ls = Files.list(logDir(root))
-    try ls.iterator().asScala
-      .filter(_.getFileName.toString.endsWith(".checkpoint.json"))
-      .foreach { p =>
-        val n = json.readTree(Files.readString(p))
-        n.get("files").elements().asScala.foreach(f => referenced += f.asText())
-        if (n.has("dvs"))
-          n.get("dvs").properties().asScala.foreach(e =>
-            referenced += e.getValue.get("dvPath").asText())
-      }
-    finally ls.close()
+    // every checkpoint's live set stays readable (incl. the truncation
+    // seal); one this engine cannot read fails loud before any delete
+    checkpointVersions(root).map(loadCheckpoint(root, _)).foreach { st =>
+      referenced ++= st.files ++ st.dvs.values.map(_._1)
+    }
     val removed = scala.collection.mutable.ArrayBuffer.empty[String]
     if (Files.isDirectory(dataDir(root))) {
       // recursive: partitioned layouts nest files under data/<col>=<val>/

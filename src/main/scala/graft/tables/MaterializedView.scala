@@ -243,6 +243,8 @@ object MaterializedView {
     if (last.exists(_ >= baseV)) return None // current (or a crash replay)
 
     val from = last.getOrElse(0L)
+    // both image rungs ask it; read the range for it at most once
+    lazy val covered = GraftTable.cdcCoveredSince(base, from, baseV)
     if (last.isDefined && GraftTable.appendOnlySince(base, from, baseV)) {
       // INCREMENTAL: aggregate only the delta, merge into the MV
       val delta = GraftTable.changes(spark, base, from, Some(baseV))
@@ -263,8 +265,7 @@ object MaterializedView {
       try Some(GraftTable.merge(spark, mv, combined, keys,
         txn = Some(appId -> baseV)))
       finally combined.unpersist()
-    } else if (last.isDefined && retractionCapable(aggs) &&
-        GraftTable.cdcCoveredSince(base, from, baseV)) {
+    } else if (last.isDefined && retractionCapable(aggs) && covered) {
       // RETRACTION-INCREMENTAL: the base rewrote rows, but the change
       // feed carries full pre/post images AND every aggregate is
       // retraction-capable (sum/count with a count(*) row count and a
@@ -281,8 +282,7 @@ object MaterializedView {
       val delta = GraftTable.changesWithImages(spark, base, from, Some(baseV))
         .withColumn("__w", signOf)
       Some(mergeSignedDelta(mv, keys, aggs, delta, appId -> baseV))
-    } else if (last.isDefined &&
-        GraftTable.cdcCoveredSince(base, from, baseV)) {
+    } else if (last.isDefined && covered) {
       // TOUCHED-GROUP RECOMPUTE (min/max & sketches under retraction):
       // the algebra cannot un-see a retracted extreme, but the change
       // feed names every group the range touched (pre AND post images),

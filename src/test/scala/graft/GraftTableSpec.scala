@@ -2179,6 +2179,11 @@ class GraftTableSpec extends SparkSpecBase {
     (the[IllegalStateException] thrownBy
       GraftTable.read(spark, root).collect())
       .getMessage should include("requires reader version 99")
+    // vacuum reads the same checkpoint: it refuses too, deleting nothing
+    val before = filesUnder(root)
+    (the[IllegalStateException] thrownBy GraftTable.vacuum(root, 0L))
+      .getMessage should include("requires reader version 99")
+    filesUnder(root) shouldBe before
     // same gate at the LOG level: a protocol action declaring a newer
     // floor refuses replay loud
     val root2 = freshRoot("ckpt_reader2")
