@@ -3,7 +3,8 @@
 
     python3 tools/src_delta.py <base>
 
-Compares the working tree with <base> (a commit, branch or tag):
+Compares the working tree, untracked files included, with <base> (a
+commit, branch or tag):
   - `git diff --numstat <base> -- src/main`: lines added, removed, net;
   - the same files with Scala line comments, (nested) block comments and
     blank lines stripped: code lines at <base>, now, and net.
@@ -71,8 +72,14 @@ def main():
     base = sys.argv[1]
     os.chdir(git("rev-parse", "--show-toplevel").strip())
     added = removed = before = after = 0
-    for row in git("diff", "--numstat", "--no-renames", base, "--", "src/main").splitlines():
-        a, d, path = row.split("\t", 2)
+    rows = [r.split("\t", 2) for r in git(
+        "diff", "--numstat", "--no-renames", base, "--", "src/main").splitlines()]
+    # files not yet added count as wholly new
+    for path in git("ls-files", "--others", "--exclude-standard", "--",
+                    "src/main").splitlines():
+        with open(path, encoding="utf-8") as f:
+            rows.append((len(f.readlines()), 0, path))
+    for a, d, path in rows:
         a, d = int(a), int(d)
         try:
             old = code_lines(git("show", f"{base}:{path}"))
